@@ -19,19 +19,24 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Inferred schema per table path, cached for the process: the test
-    * tables are immutable inputs, so the footer-read schema inference
-    * `spark.read.parquet` performs per call (a driver FS round trip,
-    * paid by nearly every query) is pure repeat work after the first
-    * load — guide §5 (driver does no avoidable work). Metadata only:
-    * row data is always read from the files. */
+  /** Inferred schema per (table path, modification time), cached for
+    * the process: the footer-read schema inference `spark.read.parquet`
+    * performs per call (several driver FS round trips, paid by nearly
+    * every query) is repeat work while the file is unchanged — guide §5
+    * (driver does no avoidable work). One `getFileStatus` per load keeps
+    * the cache honest: a path rewritten in the same JVM gets a new
+    * modification time, so it is never served a stale schema. Metadata
+    * only: row data is always read from the files. */
   private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
+    (String, Long), org.apache.spark.sql.types.StructType]()
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    val schema = schemaCache.computeIfAbsent(path,
-      p => spark.read.parquet(p).schema)
+    val p = new org.apache.hadoop.fs.Path(path)
+    val mtime = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getFileStatus(p).getModificationTime
+    val schema = schemaCache.computeIfAbsent((path, mtime),
+      _ => spark.read.parquet(path).schema)
     spark.read.schema(schema).parquet(path)
   }
 

@@ -10,8 +10,8 @@ import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, Data
 /** Metadata-only `count(*)` over snapshot tables (the Delta
   * `OptimizeMetadataOnlyDeltaQuery` shape): every commit records each
   * data dir's EXACT row count in the manifest
-  * ([[graft.sources.SnapshotTable.Snapshot.dirRows]], one extra column
-  * in the stats pass the commit already pays for), so an unfiltered
+  * ([[graft.sources.SnapshotTable.Snapshot.dirRows]], counted by the
+  * commit's own write tasks), so an unfiltered
   * global `COUNT(*)` / `df.count()` is the SUM of O(entries) driver-
   * resident longs — this rule rewrites the whole aggregate to a
   * [[LocalRelation]] and the 100 TB table contributes ZERO scan tasks.

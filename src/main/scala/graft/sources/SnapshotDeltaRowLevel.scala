@@ -107,11 +107,18 @@ private[sources] class SnapshotDeltaWrite(root: String,
     private val uuid = SnapshotTable.freshUuid()
     private val stageDir = SnapshotTable.stagingCommitDir(spark, root,
       snapshot.version + 1, uuid)
+    // write-task stats: data dirs record the table's stats columns and
+    // key bloom, tombstone dirs only their row counts
+    private val dataStats = new SnapshotWriteStats.Spec(
+      snapshot.physicalSchema(snapshot.schemaDdl), snapshot.statsCols,
+      snapshot.keys)
+    private val posStats = new SnapshotWriteStats.Spec(
+      SnapshotDeltaRowLevel.posTombWriteSchema, Nil, Nil)
 
     override def createBatchWriterFactory(
         pInfo: PhysicalWriteInfo): DeltaWriterFactory =
       new SnapshotDeltaWriterFactory(stageDir, snapshot.schemaDdl,
-        snapshot.keys, snapshot.buckets,
+        snapshot.keys, snapshot.buckets, dataStats, posStats,
         GraftParquetWriteBridge.rowFileWriterFactory(spark,
           snapshot.physicalSchema(snapshot.schemaDdl)),
         GraftParquetWriteBridge.rowFileWriterFactory(spark,
@@ -120,9 +127,15 @@ private[sources] class SnapshotDeltaWrite(root: String,
           snapshot.partSpec))
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
-      val staged = messages.flatMap {
+      val dirs = messages.toSeq.flatMap {
         case m: SnapshotDeltaCommitMessage => m.dirs
-      }.distinct.sorted
+      }
+      val staged = dirs.map { case (p, b, rel, _) => (p, b, rel) }
+        .distinct.sorted
+      val written = dirs.groupBy(_._1).flatMap { case (isPos, ds) =>
+        (if (isPos) posStats else dataStats).mergeAll(ds.iterator.map {
+          case (_, _, rel, d) => s"$stageDir/$rel" -> d })
+      }
       val fsys = new org.apache.hadoop.fs.Path(stageDir).getFileSystem(
         spark.sessionState.newHadoopConf())
       fsys.delete(new org.apache.hadoop.fs.Path(stageDir, "_temp"), true)
@@ -136,7 +149,7 @@ private[sources] class SnapshotDeltaWrite(root: String,
         case Command.MERGE => "merge-delta"
       }
       try SnapshotTable.commitWriteDelta(spark, root, snapshot,
-        dataDirs, posDirs, opName, uuid)
+        dataDirs, posDirs, dataStats, posStats, written, opName, uuid)
       catch { case e: Throwable =>
         fsys.delete(new org.apache.hadoop.fs.Path(stageDir), true)
         throw e
@@ -181,13 +194,15 @@ private[sources] object SnapshotDeltaRowLevel {
   }
 }
 
-/** Staged (isPos, bucket, relative dir) tuples one task's files landed
-  * in. */
+/** Staged (isPos, bucket, relative dir, write stats) tuples one task's
+  * files landed in. */
 private[sources] case class SnapshotDeltaCommitMessage(
-    dirs: Seq[(Boolean, Int, String)]) extends WriterCommitMessage
+    dirs: Seq[(Boolean, Int, String, SnapshotWriteStats.Dir)])
+    extends WriterCommitMessage
 
 private[sources] class SnapshotDeltaWriterFactory(stageDir: String,
     schemaDdl: String, keys: Seq[String], buckets: Int,
+    dataStats: SnapshotWriteStats.Spec, posStats: SnapshotWriteStats.Spec,
     dataFiles: GraftParquetWriteBridge.RowFileWriterFactory,
     tombFiles: GraftParquetWriteBridge.RowFileWriterFactory,
     partExprs: Seq[(Int, org.apache.spark.sql.catalyst.expressions.Expression)])
@@ -196,7 +211,8 @@ private[sources] class SnapshotDeltaWriterFactory(stageDir: String,
   override def createWriter(partitionId: Int,
       taskId: Long): DeltaWriter[InternalRow] =
     new SnapshotDeltaDataWriter(stageDir, schemaDdl, keys, buckets,
-      dataFiles, tombFiles, partitionId, taskId, partExprs)
+      dataStats, posStats, dataFiles, tombFiles, partitionId, taskId,
+      partExprs)
 }
 
 /** Executor-side delta writer: replacement/insert rows land in
@@ -206,6 +222,7 @@ private[sources] class SnapshotDeltaWriterFactory(stageDir: String,
   * group-replacement writers). */
 private[sources] class SnapshotDeltaDataWriter(stageDir: String,
     schemaDdl: String, keys: Seq[String], buckets: Int,
+    dataStats: SnapshotWriteStats.Spec, posStats: SnapshotWriteStats.Spec,
     dataFiles: GraftParquetWriteBridge.RowFileWriterFactory,
     tombFiles: GraftParquetWriteBridge.RowFileWriterFactory,
     partitionId: Int, taskId: Long,
@@ -253,22 +270,29 @@ private[sources] class SnapshotDeltaDataWriter(stageDir: String,
     }
 
   private val tmpDir = s"$stageDir/_temp/$partitionId-$taskId"
-  // staged rel dir -> (isPos, bucket, tmp ordinal, writer)
-  private val open = scala.collection.mutable.Map
-    .empty[String, (Boolean, Int, Int, GraftParquetWriteBridge.RowFileWriter)]
+  // staged rel dir -> (isPos, bucket, tmp ordinal, writer, write stats)
+  private val open = scala.collection.mutable.Map.empty[String, (Boolean,
+    Int, Int, GraftParquetWriteBridge.RowFileWriter, SnapshotWriteStats.Dir)]
 
-  private def writerFor(isPos: Boolean, b: Int, rel: String,
-      files: GraftParquetWriteBridge.RowFileWriterFactory)
-      : GraftParquetWriteBridge.RowFileWriter =
-    open.getOrElseUpdate(rel, {
+  /** Write `row` into staged dir `rel` and fold it into the dir's
+    * stats. */
+  private def writeTo(isPos: Boolean, b: Int, rel: String,
+      row: InternalRow): Unit = {
+    val (files, stats) =
+      if (isPos) (tombFiles, posStats) else (dataFiles, dataStats)
+    val (_, _, _, w, st) = open.getOrElseUpdate(rel, {
       val n = open.size
-      (isPos, b, n, files.open(s"$tmpDir/f$n.parquet", partitionId, taskId))
-    })._4
+      (isPos, b, n, files.open(s"$tmpDir/f$n.parquet", partitionId, taskId),
+        stats.newDir())
+    })
+    w.write(row)
+    stats.update(st, row)
+  }
 
   override def insert(row: InternalRow): Unit = {
     val b = bucketOf(row)
     val rel = s"${SnapshotTable.bucketDirName(b)}${dirSuffix(row)}"
-    writerFor(isPos = false, b, rel, dataFiles).write(row)
+    writeTo(isPos = false, b, rel, row)
   }
 
   override def delete(meta: InternalRow, id: InternalRow): Unit = {
@@ -277,7 +301,7 @@ private[sources] class SnapshotDeltaDataWriter(stageDir: String,
     val suffix = id.getUTF8String(0).toString
     val b = SnapshotDeltaRowLevel.bucketOfSuffix(suffix)
     val rel = s"_pos/${SnapshotTable.bucketDirName(b)}"
-    writerFor(isPos = true, b, rel, tombFiles).write(tombProj(id))
+    writeTo(isPos = true, b, rel, tombProj(id))
   }
 
   override def update(meta: InternalRow, id: InternalRow,
@@ -292,7 +316,7 @@ private[sources] class SnapshotDeltaDataWriter(stageDir: String,
   override def commit(): WriterCommitMessage = {
     open.values.foreach(_._4.close())
     val fsys = new Path(stageDir).getFileSystem(dataFiles.hadoopConf)
-    open.foreach { case (rel, (_, _, n, _)) =>
+    open.foreach { case (rel, (_, _, n, _, _)) =>
       val dest = new Path(stageDir,
         s"$rel/part-$partitionId-$taskId.parquet")
       fsys.mkdirs(dest.getParent)
@@ -300,13 +324,13 @@ private[sources] class SnapshotDeltaDataWriter(stageDir: String,
         s"failed to move staged file into $dest")
     }
     fsys.delete(new Path(tmpDir), true)
-    SnapshotDeltaCommitMessage(open.toSeq.map { case (rel, (p, b, _, _)) =>
-      (p, b, rel)
+    SnapshotDeltaCommitMessage(open.toSeq.map {
+      case (rel, (p, b, _, _, st)) => (p, b, rel, st)
     })
   }
 
   override def abort(): Unit = {
-    open.values.foreach { case (_, _, _, w) =>
+    open.values.foreach { case (_, _, _, w, _) =>
       try w.close() catch { case _: Throwable => () } }
     val fsys = new Path(tmpDir).getFileSystem(dataFiles.hadoopConf)
     fsys.delete(new Path(tmpDir), true)

@@ -101,11 +101,16 @@ private[sources] class SnapshotReplaceDataWrite(root: String,
     private val uuid = SnapshotTable.freshUuid()
     private val stageDir = SnapshotTable.stagingCommitDir(spark, root,
       snapshot.version + 1, uuid)
+    // stats, row counts and key blooms of the staged dirs, collected by
+    // the writer tasks over the physical rows they write
+    private val stats = new SnapshotWriteStats.Spec(
+      snapshot.physicalSchema(snapshot.schemaDdl), snapshot.statsCols,
+      snapshot.keys)
 
     override def createBatchWriterFactory(
         pInfo: PhysicalWriteInfo): DataWriterFactory =
       new SnapshotReplaceWriterFactory(stageDir, snapshot.schemaDdl,
-        snapshot.keys, snapshot.buckets,
+        snapshot.keys, snapshot.buckets, stats,
         // files land under PHYSICAL column names (column mapping);
         // incoming rows are positional, so only the writer's schema
         // labels change
@@ -122,11 +127,13 @@ private[sources] class SnapshotReplaceDataWrite(root: String,
       require(scan != null,
         "row-level write committed without its group scan — refusing " +
           "a replacement whose replaced set is unknown")
-      val staged = messages.flatMap {
+      val dirs = messages.toSeq.flatMap {
         case m: SnapshotReplaceCommitMessage => m.dirs
-      }.distinct.sorted.map { case (b, rel) =>
-        b -> s"$stageDir/$rel"
-      }.toSeq
+      }
+      val staged = dirs.map { case (b, rel, _) => (b, rel) }
+        .distinct.sorted.map { case (b, rel) => b -> s"$stageDir/$rel" }
+      val written = stats.mergeAll(dirs.iterator.map { case (_, rel, d) =>
+        s"$stageDir/$rel" -> d })
       // temp attempt dirs stay out of the registered bucket dirs; sweep
       // them before the manifest makes the commit dir live
       val fsys = new org.apache.hadoop.fs.Path(stageDir).getFileSystem(
@@ -138,7 +145,8 @@ private[sources] class SnapshotReplaceDataWrite(root: String,
         case Command.MERGE => "merge"
       }
       try SnapshotTable.commitReplace(spark, root, snapshot,
-        scan.currentEntries.map(_._2).toSet, staged, opName, uuid)
+        scan.currentEntries.map(_._2).toSet, staged, stats, written,
+        opName, uuid)
       catch { case e: Throwable =>
         fsys.delete(new org.apache.hadoop.fs.Path(stageDir), true)
         throw e
@@ -156,11 +164,12 @@ private[sources] class SnapshotReplaceDataWrite(root: String,
   override def description(): String = s"graft-snapshot replace-data $root"
 }
 
-/** Staged (bucket, relative dir) pairs one task's files landed in —
-  * dir-granular so partitioned tables register one entry per partition
-  * value dir. */
+/** Staged (bucket, relative dir, write stats) triples one task's files
+  * landed in — dir-granular so partitioned tables register one entry
+  * per partition value dir. */
 private[sources] case class SnapshotReplaceCommitMessage(
-    dirs: Seq[(Int, String)]) extends WriterCommitMessage
+    dirs: Seq[(Int, String, SnapshotWriteStats.Dir)])
+    extends WriterCommitMessage
 
 /** Executor-side writers: rows land in per-bucket parquet files under a
   * task-private temp dir, renamed into the staged bucket dirs at TASK
@@ -169,6 +178,7 @@ private[sources] case class SnapshotReplaceCommitMessage(
   * registered dir. */
 private[sources] class SnapshotReplaceWriterFactory(stageDir: String,
     schemaDdl: String, keys: Seq[String], buckets: Int,
+    stats: SnapshotWriteStats.Spec,
     files: GraftParquetWriteBridge.RowFileWriterFactory,
     partExprs: Seq[(Int, org.apache.spark.sql.catalyst.expressions.Expression)])
     extends DataWriterFactory {
@@ -176,11 +186,12 @@ private[sources] class SnapshotReplaceWriterFactory(stageDir: String,
   override def createWriter(partitionId: Int,
       taskId: Long): DataWriter[InternalRow] =
     new SnapshotReplaceDataWriter(stageDir, schemaDdl, keys, buckets,
-      files, partitionId, taskId, partExprs)
+      stats, files, partitionId, taskId, partExprs)
 }
 
 private[sources] class SnapshotReplaceDataWriter(stageDir: String,
     schemaDdl: String, keys: Seq[String], buckets: Int,
+    stats: SnapshotWriteStats.Spec,
     files: GraftParquetWriteBridge.RowFileWriterFactory,
     partitionId: Int, taskId: Long,
     partExprs: Seq[(Int, org.apache.spark.sql.catalyst.expressions.Expression)] =
@@ -262,23 +273,28 @@ private[sources] class SnapshotReplaceDataWriter(stageDir: String,
   private var lane: Lane = _
 
   private val tmpDir = s"$stageDir/_temp/$partitionId-$taskId"
-  // staged dir (bucket + partition suffix) -> (tmp file ordinal, writer)
-  private val open = scala.collection.mutable.Map
-    .empty[(Int, String), (Int, GraftParquetWriteBridge.RowFileWriter)]
+  // staged dir (bucket + partition suffix) -> (tmp file ordinal,
+  // writer, the dir's write stats)
+  private val open = scala.collection.mutable.Map.empty[(Int, String),
+    (Int, GraftParquetWriteBridge.RowFileWriter, SnapshotWriteStats.Dir)]
 
   override def write(row: InternalRow): Unit = {
     if (lane == null) lane = new Lane(prefixOf(row))
     val key = (lane.bucket(row), lane.dirSuffix(row))
-    open.getOrElseUpdate(key, {
+    val (_, w, st) = open.getOrElseUpdate(key, {
       val n = open.size
-      n -> files.open(s"$tmpDir/f$n.parquet", partitionId, taskId)
-    })._2.write(lane.align(row))
+      (n, files.open(s"$tmpDir/f$n.parquet", partitionId, taskId),
+        stats.newDir())
+    })
+    val aligned = lane.align(row)
+    w.write(aligned)
+    stats.update(st, aligned)
   }
 
   override def commit(): WriterCommitMessage = {
     open.values.foreach(_._2.close())
     val fsys = new Path(stageDir).getFileSystem(files.hadoopConf)
-    open.foreach { case ((b, suffix), (n, _)) =>
+    open.foreach { case ((b, suffix), (n, _, _)) =>
       val rel = s"${SnapshotTable.bucketDirName(b)}$suffix"
       val dest = new Path(stageDir,
         s"$rel/part-$partitionId-$taskId.parquet")
@@ -287,13 +303,14 @@ private[sources] class SnapshotReplaceDataWriter(stageDir: String,
         s"failed to move staged file into $dest")
     }
     fsys.delete(new Path(tmpDir), true)
-    SnapshotReplaceCommitMessage(open.keys.toSeq.map { case (b, suffix) =>
-      (b, s"${SnapshotTable.bucketDirName(b)}$suffix")
+    SnapshotReplaceCommitMessage(open.toSeq.map {
+      case ((b, suffix), (_, _, st)) =>
+        (b, s"${SnapshotTable.bucketDirName(b)}$suffix", st)
     })
   }
 
   override def abort(): Unit = {
-    open.values.foreach { case (_, w) =>
+    open.values.foreach { case (_, w, _) =>
       try w.close() catch { case _: Throwable => () } }
     val fsys = new Path(tmpDir).getFileSystem(files.hadoopConf)
     fsys.delete(new Path(tmpDir), true)

@@ -27,8 +27,13 @@ import graft.ops.Materialize
   * }}}
   *
   * Commit protocol: (1) write the commit's data files under a fresh
-  * `data/c<v>-<uuid>/` nobody reads yet; (2) write the manifest to a
-  * hidden `.tmp` name; (3) publish by renaming it to `v<N+1>`.
+  * `data/c<v>-<uuid>/` nobody reads yet — the write tasks also fold
+  * every row into its dir's stats accumulator ([[SnapshotWriteStats]]:
+  * row count, per-column min/max/has-null, key bloom), so the manifest's
+  * `stats=`/`rows=` lines and the `.bloom` sidecars come from the write
+  * itself and the commit never reads its own files back; (2) write the
+  * manifest to a hidden `.tmp` name; (3) publish by renaming it to
+  * `v<N+1>`.
   * Same-version race adjudication depends on the store:
   *   - HDFS/ABFS (atomic no-overwrite rename): the loser's rename fails
   *     and it throws [[ConcurrentCommitException]] — exact, lock-free;
@@ -286,8 +291,8 @@ object SnapshotTable {
   // ---- data-skipping stats ----
   //
   // The manifest records per-dir column min/max/has-null (the
-  // Delta/Iceberg file-statistics shape, VLDB'20 §4.2 "data skipping"):
-  // one extra O(batch) map-side-combined aggregation per commit buys
+  // Delta/Iceberg file-statistics shape, VLDB'20 §4.2 "data skipping"),
+  // collected by the commit's own write tasks at no extra pass, buys
   // range/equality dir pruning on the read side. The payoff pattern is
   // append-dominated tables whose commits correlate with a column —
   // time-series ingestion where each commit covers a time window makes
@@ -309,7 +314,7 @@ object SnapshotTable {
       case _ => false
     }
 
-  private val MaxStatsStringLen = 64
+  private[graft] val MaxStatsStringLen = 64
 
   /** Normalize an external (collect()-returned or V1-filter) value of
     * column type `dt` to the one order-comparable primitive stats are
@@ -462,16 +467,6 @@ object SnapshotTable {
     }
   }
 
-  /** One aggregation job over the freshly written commit dirs →
-    * per-bucket column stats, keyed back to dirs through the bucket id
-    * embedded in the path (this commit wrote exactly one dir per
-    * bucket). O(batch) scan, map-side combined, ≤ buckets rows to the
-    * driver. */
-  /** Per-dir column stats AND exact row counts for one commit's
-    * entries, in ONE map-side-combined aggregation pass over the just-
-    * written files (the count rides the same job the stats already
-    * paid for; with stats disabled it degrades to a count-only pass).
-    * Returns (dir → column stats, dir → row count). */
   /** Bloom sizing: fixed 2^17 bits (16 KB per dir) against an 8k-item
     * estimate — ~11 hashes, sub-percent false-positive rate at the
     * intended "one bucket ≈ one rewrite unit" dir sizes, degrading
@@ -482,6 +477,10 @@ object SnapshotTable {
   private[sources] val BloomFileName = ".bloom"
   /** Largest literal-key probe set worth bloom-testing on the driver. */
   private[sources] val BloomProbeMax = 4096
+
+  /** An empty per-dir key bloom at the fixed sizing above. */
+  private[sources] def newKeyBloom(): org.apache.spark.util.sketch.BloomFilter =
+    org.apache.spark.util.sketch.BloomFilter.create(BloomEstItems, BloomNumBits)
 
   /** Driver-side twin of the write path's `xxhash64(keyCols)` — the
     * long a literal key tuple contributes to a dir's bloom filter. */
@@ -511,97 +510,52 @@ object SnapshotTable {
     hashes.exists(bf.mightContainLong)
   }
 
-  private def computeStats(spark: SparkSession, entries: Seq[(Int, String)],
-      schemaDdl: String, statsCols: Seq[String],
-      colMap: Map[String, String] = Map.empty,
-      bloomKeys: Seq[String] = Seq.empty,
-      bloomFs: Option[FileSystem] = None,
-      files: Map[String, Seq[(String, Long)]] = Map.empty)
+  /** A recorded bound: a truncated lower bound stays a lower bound; a
+    * truncated UPPER bound would round down and lie — drop it. */
+  private def capped(v: Option[Any], roundsDown: Boolean): Option[Any] =
+    v.flatMap {
+      case s: String if s.length > MaxStatsStringLen =>
+        if (roundsDown) Some(s.substring(0, MaxStatsStringLen)) else None
+      case other => Some(other)
+    }
+
+  /** Per-dir column stats and exact row counts for one commit's
+    * entries, from the accumulators its write tasks filled
+    * ([[SnapshotWriteStats]], keyed by entry dir) — no pass over the
+    * written files. Writes each dir's key `.bloom` sidecar when the
+    * spec records blooms (the read side prunes point lookups with it —
+    * an absent-key probe reads ZERO data bytes). Returns (dir → column
+    * stats, dir → row count). */
+  private def commitStats(fsys: FileSystem, spec: SnapshotWriteStats.Spec,
+      written: Map[String, SnapshotWriteStats.Dir],
+      entries: Seq[(Int, String)])
       : (Map[String, Map[String, ColStats]], Map[String, Long]) = {
-    // files store PHYSICAL names; stats and statsCols are keyed physical
-    val schema = StructType(StructType.fromDDL(schemaDdl).fields.map(f =>
-      f.copy(name = colMap.getOrElse(f.name, f.name))))
-    val present = statsCols.filter(schema.fieldNames.contains)
-    if (entries.isEmpty) return (Map.empty, Map.empty)
-    // per-dir KEY bloom filter, riding the same aggregation pass (keys
-    // are never renameable, so their physical names are their logical
-    // ones): the read side prunes point lookups with it — an
-    // absent-key probe reads ZERO data bytes
-    val withBloom = bloomFs.isDefined && bloomKeys.nonEmpty &&
-      bloomKeys.forall(schema.fieldNames.contains)
-    val bloomAgg: Seq[org.apache.spark.sql.Column] = if (!withBloom) Nil
-      else {
-        import org.apache.spark.sql.catalyst.expressions.Literal
-        import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-        Seq(org.apache.spark.sql.GraftSqlBridge.column(
-          new BloomFilterAggregate(
-            org.apache.spark.sql.GraftSqlBridge.expression(
-              xxhash64(bloomKeys.map(col): _*)),
-            Literal(BloomEstItems), Literal(BloomNumBits))
-            .toAggregateExpression()).as("bloom:"))
-      }
-    // key rows back to their entry dir by the dir-path SUFFIX from the
-    // bucket segment on (`_gb=b` or `_gb=b/_zs=k`): the suffix comes
-    // verbatim from the entry string, so scheme qualification in
-    // input_file_name can't break the mapping, and z-order commits
-    // (many slice dirs per bucket) key exactly like plain ones
-    val bySuffix = entries.map { case (_, d) =>
-      d.substring(d.lastIndexOf(s"$BucketCol=")) -> d
-    }.toMap
-    val aggs = (count(lit(1)).as("cnt:") +: present.flatMap(c => Seq(
-      min(col(c)).as(s"lo:$c"), max(col(c)).as(s"hi:$c"),
-      max(when(col(c).isNull, 1).otherwise(0)).as(s"nn:$c")))) ++ bloomAgg
-    // the commit walk already knows every file: read them explicitly
-    // (zero listing RPCs, no distributed listing job) when covered
-    val scan =
-      if (entries.forall(e => files.contains(e._2)))
-        org.apache.spark.sql.GraftFileListBridge.parquetDf(spark,
-          entries.flatMap(e => files(e._2).map { case (n, len) =>
-            (e._2 + "/" + n, len) }), schema)
-      else spark.read.schema(schema).parquet(entries.map(_._2): _*)
-    val rows = scan
-      .groupBy(regexp_extract(input_file_name(),
-        s"($BucketCol=\\d+(?:/[^/]+=[^/]+)*)/[^/]+$$", 1).as("_b"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-    val dirRows = rows.flatMap(r => bySuffix.get(r.getString(0))
-      .map(_ -> r.getLong(r.fieldIndex("cnt:")))).toMap
-    if (withBloom) rows.foreach { r =>
-      bySuffix.get(r.getString(0)).foreach { dir =>
-        val bytes = r.get(r.fieldIndex("bloom:")).asInstanceOf[Array[Byte]]
-        if (bytes != null) {
-          val out = bloomFs.get.create(new Path(dir, BloomFileName), true)
-          try out.write(bytes) finally out.close()
-        }
+    import org.apache.spark.sql.catalyst.CatalystTypeConverters
+    val dirs = entries.map(_._2)
+    if (spec.withBloom) dirs.foreach { d =>
+      written.get(d).flatMap(w => Option(w.bloom)).foreach { bf =>
+        val out = fsys.create(new Path(d, BloomFileName), true)
+        try out.write(org.apache.spark.sql.catalyst.expressions.aggregate
+          .BloomFilterAggregate.serialize(bf))
+        finally out.close()
       }
     }
-    // a dir absent from the agg output received ZERO rows (empty
-    // parquet write): its count is exactly 0, not unknown
-    val allRows = entries.map(_._2).map(d => d -> dirRows.getOrElse(d, 0L))
-      .toMap
-    val statsMap = rows.flatMap { r =>
-      bySuffix.get(r.getString(0)).map { dir =>
-        dir -> present.flatMap { c =>
-          val dt = schema(c).dataType
-          def capped(v: Option[Any], roundsDown: Boolean): Option[Any] =
-            v.flatMap {
-              // a truncated lower bound stays a lower bound; a truncated
-              // UPPER bound would round down and lie — drop it
-              case s: String if s.length > MaxStatsStringLen =>
-                if (roundsDown) Some(s.substring(0, MaxStatsStringLen)) else None
-              case other => Some(other)
-            }
-          val lo = capped(normalizeStatsValue(dt, r.get(r.fieldIndex(s"lo:$c"))),
-            roundsDown = true)
-          val hi = capped(normalizeStatsValue(dt, r.get(r.fieldIndex(s"hi:$c"))),
-            roundsDown = false)
-          val nn = r.getInt(r.fieldIndex(s"nn:$c")) == 1
-          if (lo.isEmpty && hi.isEmpty && !nn) None
-          else Some(c -> ColStats(lo, hi, nn))
-        }.toMap
-      }
-    }.filter(_._2.nonEmpty).toMap
-    (statsMap, allRows)
+    // a dir no task wrote a row into holds ZERO rows (empty parquet
+    // write): its count is exactly 0, not unknown
+    val rows = dirs.map(d => d -> written.get(d).fold(0L)(_.rows)).toMap
+    val stats = dirs.flatMap(d => written.get(d).map { w =>
+      d -> spec.cols.indices.flatMap { i =>
+        val (c, _, dt) = spec.cols(i)
+        def bound(v: Any, roundsDown: Boolean) = capped(
+          Option(v).flatMap(x => normalizeStatsValue(dt,
+            CatalystTypeConverters.convertToScala(x, dt))), roundsDown)
+        val lo = bound(w.lo(i), roundsDown = true)
+        val hi = bound(w.hi(i), roundsDown = false)
+        if (lo.isEmpty && hi.isEmpty && !w.hasNull(i)) None
+        else Some(c -> ColStats(lo, hi, w.hasNull(i)))
+      }.toMap
+    }).filter(_._2.nonEmpty).toMap
+    (stats, rows)
   }
 
   /** DATA file names+bytes of already-written dirs — one driver listing
@@ -612,28 +566,26 @@ object SnapshotTable {
     * both the file list and the size a join planner compares against
     * its broadcast threshold. */
   private def dirFileLists(fsys: FileSystem,
-      entries: Seq[(Int, String)]): Map[String, Seq[(String, Long)]] =
-    entries.map { case (_, d) =>
-      d -> fsys.listStatus(new Path(d)).iterator
-        .filter(st => st.isFile && {
-          val n = st.getPath.getName
-          !n.startsWith(".") && !n.startsWith("_")
-        }).map(st => (st.getPath.getName, st.getLen))
-        .toSeq.sortBy(_._1)
-    }.filter { case (_, fs) => fs.forall(f => fileListSafe(f._1)) }.toMap
+      entries: Seq[(Int, String)]): CommitFiles =
+    CommitFiles.of(entries, entries.map { case (_, d) =>
+      d -> dataFilesOf(fsys.listStatus(new Path(d)).toSeq) })
 
-  private def bytesOf(files: Map[String, Seq[(String, Long)]])
-      : Map[String, Long] =
-    files.map { case (d, fs) => d -> fs.iterator.map(_._2).sum }
+  /** The DATA files among one dir's listed children, name-sorted —
+    * hidden `.`/`_` names excluded, the visibility rule Spark's own
+    * listing applies. */
+  private def dataFilesOf(listed: Seq[org.apache.hadoop.fs.FileStatus])
+      : Seq[(String, Long)] =
+    listed.filter(st => st.isFile && {
+      val n = st.getPath.getName
+      !n.startsWith(".") && !n.startsWith("_")
+    }).map(st => (st.getPath.getName, st.getLen)).sortBy(_._1)
 
   /** File list of a commit's `_cdc` change dir, keyed like
     * [[dirFileLists]] — recorded so a rate-limited change-feed reader
     * can charge a cdc commit's REAL size against its byte budget
     * instead of "unknown" (one listing on the commit). */
-  private def cdcFiles(fsys: FileSystem,
-      cdc: Option[String]): Map[String, Seq[(String, Long)]] =
-    cdc.fold(Map.empty[String, Seq[(String, Long)]])(d =>
-      dirFileLists(fsys, Seq(0 -> d)))
+  private def cdcFiles(fsys: FileSystem, cdc: Option[String]): CommitFiles =
+    cdc.fold(CommitFiles.empty)(d => dirFileLists(fsys, Seq(0 -> d)))
 
   // stats serialization: one flat JSON object per dir, our own
   // writer/parser (the grammar is fixed and tab/newline-free so the
@@ -737,7 +689,7 @@ object SnapshotTable {
 
   private val FormatHeader = "graft-snapshot-v1"
   /** Reserved bucket-partition column; inputs must not use it. */
-  private val BucketCol = "_gb"
+  private[sources] val BucketCol = "_gb"
   private val ZSliceCol = "_zs"
   private[sources] val PartPrefix = "_pt"
   private[sources] val PosFileCol = "_sdv_file"
@@ -1151,14 +1103,23 @@ object SnapshotTable {
         val Array(k, pv) = l.drop("prop=".length).split("\t", 2)
         k -> pv
     }.toMap
+    // file lists are an optimization layer: a malformed `files=` line
+    // drops only its dir's list (that dir's reads fall back to
+    // listing), never the manifest
     val dirFiles = lines.collect {
-      case l if l.startsWith("files=") =>
-        val Array(dir, fl) = l.drop("files=".length).split("\t", 2)
-        dir -> fl.split(",").toSeq.filter(_.nonEmpty).map { ent =>
-          val i = ent.lastIndexOf(':')
-          require(i > 0, s"manifest $p has malformed files entry: $ent")
-          (ent.take(i), ent.drop(i + 1).toLong)
-        }
+      case l if l.startsWith("files=") => l.drop("files=".length)
+    }.flatMap { body =>
+      body.split("\t", 2) match {
+        case Array(dir, fl) =>
+          val ents = fl.split(",").toSeq.filter(_.nonEmpty).map { ent =>
+            val i = ent.lastIndexOf(':')
+            if (i <= 0) None
+            else ent.drop(i + 1).toLongOption.filter(_ >= 0)
+              .map(ent.take(i) -> _)
+          }
+          if (ents.forall(_.isDefined)) Some(dir -> ents.flatten) else None
+        case _ => None
+      }
     }.toMap
     Snapshot(v, field("op"),
       field("keys").split(",").toSeq.filter(_.nonEmpty),
@@ -1820,11 +1781,12 @@ object SnapshotTable {
 
   /** Explicit (path, bytes) list when `files` covers EVERY requested
     * dir; None → the caller's directory-listing fallback. */
-  private[sources] def coveredFiles(dirs: Seq[String],
+  private[graft] def coveredFiles(dirs: Seq[String],
       files: Map[String, Seq[(String, Long)]])
       : Option[Seq[(String, Long)]] =
     if (dirs.nonEmpty && dirs.forall(files.contains))
-      Some(dirs.flatMap(d =>
+      // a dir named twice is still read once
+      Some(dirs.distinct.flatMap(d =>
         files(d).map { case (n, len) => (d + "/" + n, len) }))
     else None
 
@@ -2421,12 +2383,14 @@ object SnapshotTable {
 
   /** Write `df`'s rows bucket-partitioned under a fresh commit dir;
     * returns the commit's entries (bucket → dir for the buckets that
-    * actually received rows) plus their file lists and sizes, from one
-    * post-write walk. */
+    * actually received rows), their file lists and sizes from one
+    * post-write walk, and the stats, row counts and (with `bloom`) key
+    * blooms the write tasks collected over `statsCols`. */
   private def writeCommitData(df: DataFrame, root: Path, version: Long,
       keys: Seq[String], buckets: Int, uuid: String,
       fsys: FileSystem, colMap: Map[String, String] = Map.empty,
-      partSpec: Seq[PartField] = Seq.empty)
+      partSpec: Seq[PartField] = Seq.empty,
+      statsCols: Seq[String] = Seq.empty, bloom: Boolean = false)
       : CommitFiles = {
     val commitDir = new Path(new Path(root, "data"), s"c$version-$uuid")
     // files land under PHYSICAL column names (one atomic select so even
@@ -2450,25 +2414,55 @@ object SnapshotTable {
         d.withColumn(s"$PartPrefix${f.idx}",
           partValueCol(f, schema(f.col).dataType))
     }
-    withPt.repartition((col(BucketCol) +: ptNames.map(col)): _*)
-      .write.options(commitWriteOptions)
-      .partitionBy((BucketCol +: ptNames): _*)
-      .parquet(commitDir.toString)
-    enumerateCommit(fsys, commitDir, buckets)
+    writeCommitDir(withPt.repartition((col(BucketCol) +: ptNames.map(col)): _*),
+      BucketCol +: ptNames, commitDir, buckets, fsys, statsCols,
+      if (bloom) keys else Seq.empty)
+  }
+
+  /** Write a frame that carries its dir columns (`partCols`, bucket
+    * first) under `commitDir` — the write tasks fold every row into its
+    * leaf dir's [[SnapshotWriteStats]] accumulator — then walk the
+    * result once for entries and file lists. */
+  private def writeCommitDir(frame: DataFrame, partCols: Seq[String],
+      commitDir: Path, buckets: Int, fsys: FileSystem,
+      statsCols: Seq[String], bloomKeys: Seq[String]): CommitFiles = {
+    val spec = new SnapshotWriteStats.Spec(
+      StructType(frame.schema.filterNot(f => partCols.contains(f.name))),
+      statsCols, bloomKeys)
+    val tracker = new SnapshotWriteStats.Tracker(spec)
+    org.apache.spark.sql.GraftParquetWriteBridge.writeParquet(frame,
+      commitDir.toString, partCols, commitWriteOptions, Seq(tracker))
+    val walked = enumerateCommit(fsys, commitDir, buckets)
+    val written = walked.entries.flatMap { case (_, d) =>
+      tracker.dirs.get(SnapshotWriteStats.leafKey(d)).map(d -> _)
+    }.toMap
+    val (st, rw) = commitStats(fsys, spec, written, walked.entries)
+    walked.copy(stats = st, rows = rw)
   }
 
   /** A freshly-written commit dir's layout from ONE recursive walk:
     * entries (bucket → leaf data dir, name-sorted for deterministic
-    * manifests), per-dir DATA file lists (hidden `.`/`_` names excluded
-    * — the same visibility rule Spark's own listing applies), and the
-    * byte totals derived from them. Previously the enumerate walk and a
-    * separate dirSizes listing each paid their own per-dir RPCs; the
-    * file lists now also ride into the manifest (`files=` lines) so
-    * READS never list at all (guide §6). */
+    * manifests), per-dir DATA file lists and byte totals (the file
+    * lists also ride into the manifest as `files=` lines, so READS
+    * never list at all, guide §6), plus the dirs' column stats and row
+    * counts when the write tasks collected them. */
   private final case class CommitFiles(entries: Seq[(Int, String)],
-      files: Map[String, Seq[(String, Long)]]) {
-    def bytes: Map[String, Long] =
-      files.map { case (d, fs) => d -> fs.iterator.map(_._2).sum }
+      files: Map[String, Seq[(String, Long)]], bytes: Map[String, Long],
+      stats: Map[String, Map[String, ColStats]] = Map.empty,
+      rows: Map[String, Long] = Map.empty)
+
+  private object CommitFiles {
+    val empty: CommitFiles = CommitFiles(Seq.empty, Map.empty, Map.empty)
+
+    /** From each dir's listed DATA files: the byte total is recorded
+      * for EVERY dir; the `files=` list only when all its names are
+      * [[fileListSafe]] — an exotic name downgrades that dir's reads to
+      * the listing fallback but keeps its planner statistic. */
+    def of(entries: Seq[(Int, String)],
+        listed: Seq[(String, Seq[(String, Long)])]): CommitFiles =
+      CommitFiles(entries,
+        listed.filter(_._2.forall(f => fileListSafe(f._1))).toMap,
+        listed.map { case (d, fs) => d -> fs.iterator.map(_._2).sum }.toMap)
   }
 
   /** A file name a manifest `files=` line can carry verbatim. Parquet
@@ -2478,20 +2472,25 @@ object SnapshotTable {
     !(n.contains(',') || n.contains(':') || n.contains('\t') ||
       n.contains('\n'))
 
+  /** (entries, `files=` lists, `bytes=` totals) the commit walk and the
+    * per-dir listing record for an already-written commit dir. */
+  private[graft] def recordedFilesForTest(spark: SparkSession,
+      commitDir: String, buckets: Int)
+      : Seq[(Seq[(Int, String)], Map[String, Seq[(String, Long)]], Map[String, Long])] = {
+    val (fsys, dir) = fs(spark, commitDir)
+    val walked = enumerateCommit(fsys, dir, buckets)
+    val listed = dirFileLists(fsys, walked.entries)
+    Seq(walked, listed).map(c => (c.entries, c.files, c.bytes))
+  }
+
   private def enumerateCommit(fsys: FileSystem, commitDir: Path,
       buckets: Int): CommitFiles = {
-    val fileMap = Map.newBuilder[String, Seq[(String, Long)]]
+    val listed = Seq.newBuilder[(String, Seq[(String, Long)])]
     def leaves(d: Path): Seq[Path] = {
       val st = fsys.listStatus(d).toSeq
       val subs = st.filter(_.isDirectory)
       if (subs.isEmpty) {
-        val data = st.filter(s => s.isFile && {
-          val n = s.getPath.getName
-          !n.startsWith(".") && !n.startsWith("_")
-        }).map(s => (s.getPath.getName, s.getLen))
-          .sortBy(_._1)
-        if (data.forall(f => fileListSafe(f._1)))
-          fileMap += d.toString -> data
+        listed += d.toString -> dataFilesOf(st)
         Seq(d)
       } else subs.sortBy(_.getPath.getName).flatMap(s => leaves(s.getPath))
     }
@@ -2499,7 +2498,7 @@ object SnapshotTable {
       val d = new Path(commitDir, s"$BucketCol=$b")
       if (fsys.exists(d)) leaves(d).map(b -> _.toString) else Seq.empty
     }
-    CommitFiles(entries, fileMap.result())
+    CommitFiles.of(entries, listed.result())
   }
 
   /** Serialize the publish critical section on filesystems whose rename
@@ -3040,7 +3039,9 @@ object SnapshotTable {
     * invisible; abort sweeps them). */
   private[sources] def commitReplace(spark: SparkSession, root: String,
       base: Snapshot, removedDirs: Set[String],
-      stagedDirs: Seq[(Int, String)], op: String, uuid: String): Long = {
+      stagedDirs: Seq[(Int, String)], spec: SnapshotWriteStats.Spec,
+      written: Map[String, SnapshotWriteStats.Dir], op: String,
+      uuid: String): Long = {
     val (fsys, rootP) = fs(spark, root)
     val cur = current(spark, root)
     if (cur.version != base.version)
@@ -3055,16 +3056,14 @@ object SnapshotTable {
     val stagedF = dirFileLists(fsys, stagedDirs)
     if (base.constraints.nonEmpty)
       requireConstraints(readEntries(spark, base.schemaDdl, base.colMap,
-        stagedDirs.map(_._2), base.existsDefaults, stagedF), base, op)
-    val (st, rw) = computeStats(spark, stagedDirs, base.schemaDdl,
-      base.statsCols, base.colMap, base.keys, Some(fsys),
-      files = stagedF)
+        stagedDirs.map(_._2), base.existsDefaults, stagedF.files), base, op)
+    val (st, rw) = commitStats(fsys, spec, written, stagedDirs)
     publish(fsys, rootP, stamped(Snapshot(v, op, base.keys, base.buckets,
       base.schemaDdl, uuid, kept ++ stagedDirs,
       statsCols = base.statsCols,
       dirStats = (base.dirStats -- removedDirs) ++ st,
       dirRows = (base.dirRows -- removedDirs) ++ rw,
-      dirBytes = (base.dirBytes -- removedDirs) ++ bytesOf(stagedF),
+      dirBytes = (base.dirBytes -- removedDirs) ++ stagedF.bytes,
       // the operation scan refuses delta-bearing snapshots, so this is
       // empty in practice — carried through so a future reader of this
       // code can't silently drop a layer
@@ -3080,7 +3079,7 @@ object SnapshotTable {
       constraints = base.constraints, partSpec = base.partSpec,
       colDefaults = base.colDefaults,
       existsDefaults = base.existsDefaults, props = base.props,
-      dirFiles = (base.dirFiles -- removedDirs) ++ stagedF)))
+      dirFiles = (base.dirFiles -- removedDirs) ++ stagedF.files)))
     v
   }
 
@@ -3095,7 +3094,10 @@ object SnapshotTable {
     * Zero staged dirs (a DML that matched nothing) commits nothing. */
   private[sources] def commitWriteDelta(spark: SparkSession, root: String,
       base: Snapshot, dataDirs: Seq[(Int, String)],
-      posDirs: Seq[(Int, String)], op: String, uuid: String): Long = {
+      posDirs: Seq[(Int, String)], dataSpec: SnapshotWriteStats.Spec,
+      posSpec: SnapshotWriteStats.Spec,
+      written: Map[String, SnapshotWriteStats.Dir], op: String,
+      uuid: String): Long = {
     val (fsys, rootP) = fs(spark, root)
     val cur = current(spark, root)
     if (cur.version != base.version)
@@ -3112,18 +3114,16 @@ object SnapshotTable {
     val dataF = dirFileLists(fsys, dataDirs)
     if (base.constraints.nonEmpty && dataDirs.nonEmpty)
       requireConstraints(readEntries(spark, base.schemaDdl, base.colMap,
-        dataDirs.map(_._2), base.existsDefaults, dataF), base, op)
+        dataDirs.map(_._2), base.existsDefaults, dataF.files), base, op)
     val posF = dirFileLists(fsys, posDirs)
-    val (st, rw) = computeStats(spark, dataDirs, base.schemaDdl,
-      base.statsCols, base.colMap, base.keys, Some(fsys), files = dataF)
-    val (pst, prw) = computeStats(spark, posDirs, posTombSchema.toDDL,
-      Seq.empty, files = posF)
+    val (st, rw) = commitStats(fsys, dataSpec, written, dataDirs)
+    val (pst, prw) = commitStats(fsys, posSpec, written, posDirs)
     publish(fsys, rootP, stamped(Snapshot(v, op, base.keys, base.buckets,
       base.schemaDdl, uuid, base.entries ++ dataDirs,
       statsCols = base.statsCols,
       dirStats = base.dirStats ++ st ++ pst,
       dirRows = base.dirRows ++ rw ++ prw,
-      dirBytes = base.dirBytes ++ bytesOf(dataF) ++ bytesOf(posF),
+      dirBytes = base.dirBytes ++ dataF.bytes ++ posF.bytes,
       deltas = base.deltas ++
         posDirs.map { case (b, d) => DeltaEntry(b, v, "pos", d) },
       changeFeed = base.changeFeed,
@@ -3132,7 +3132,7 @@ object SnapshotTable {
       constraints = base.constraints, partSpec = base.partSpec,
       colDefaults = base.colDefaults,
       existsDefaults = base.existsDefaults, props = base.props,
-      dirFiles = base.dirFiles ++ dataF ++ posF)))
+      dirFiles = base.dirFiles ++ dataF.files ++ posF.files)))
     v
   }
 
@@ -3226,14 +3226,11 @@ object SnapshotTable {
     val uuid = newUuid()
     val ddl = df.schema.toDDL
     val cd = writeCommitData(df, rootP, 1L, keys, buckets, uuid, fsys,
-      partSpec = pSpec)
-    val entries = cd.entries
-    val (st, rw) = computeStats(df.sparkSession, entries, ddl, sc,
-      bloomKeys = keys, bloomFs = Some(fsys), files = cd.files)
+      partSpec = pSpec, statsCols = sc, bloom = true)
     publish(fsys, rootP, stamped(Snapshot(1L, "create", keys, buckets,
-      ddl, uuid, entries,
+      ddl, uuid, cd.entries,
       statsCols = sc,
-      dirStats = st, dirRows = rw, dirBytes = cd.bytes,
+      dirStats = cd.stats, dirRows = cd.rows, dirBytes = cd.bytes,
       txn = txn, changeFeed = changeFeed, partSpec = pSpec,
       colDefaults = colDefaults, props = props,
       dirFiles = cd.files)))
@@ -3284,14 +3281,11 @@ object SnapshotTable {
     val uuid = newUuid()
     val ddl = df.schema.toDDL
     val cd = writeCommitData(df, rootP, v, keys, buckets, uuid, fsys,
-      partSpec = pSpec)
-    val entries = cd.entries
-    val (st, rw) = computeStats(spark, entries, ddl, sc,
-      bloomKeys = keys, bloomFs = Some(fsys), files = cd.files)
+      partSpec = pSpec, statsCols = sc, bloom = true)
     publish(fsys, rootP, stamped(Snapshot(v, "replace", keys, buckets,
-      ddl, uuid, entries,
+      ddl, uuid, cd.entries,
       statsCols = sc,
-      dirStats = st, dirRows = rw, dirBytes = cd.bytes,
+      dirStats = cd.stats, dirRows = cd.rows, dirBytes = cd.bytes,
       changeFeed = changeFeed, partSpec = pSpec,
       colDefaults = colDefaults, props = props,
       dirFiles = cd.files)))
@@ -3511,12 +3505,10 @@ object SnapshotTable {
     val v = cur.version + 1
     val uuid = newUuid()
     val cd = writeCommitData(aligned(df, ddl), rootP, v, cur.keys,
-      cur.buckets, uuid, fsys, cur.colMap, cur.partSpec)
-    val entries = cd.entries
-    val (st, rw) = computeStats(spark, entries, ddl, cur.statsCols,
-      cur.colMap, cur.keys, Some(fsys), files = cd.files)
+      cur.buckets, uuid, fsys, cur.colMap, cur.partSpec, cur.statsCols,
+      bloom = true)
     commitRebasing(spark, root, fsys, rootP, cur,
-      Pending("append", ddl, uuid, v, entries, st, rw,
+      Pending("append", ddl, uuid, v, cd.entries, cd.stats, cd.rows,
         cd.bytes, hit = None, txn = txn, files = cd.files,
         layoutBuckets = cur.buckets), retries, branch)
   }
@@ -3547,14 +3539,12 @@ object SnapshotTable {
     val v = cur.version + 1
     val uuid = newUuid()
     val cd = writeCommitData(aligned(df, ddl), rootP, v, cur.keys,
-      cur.buckets, uuid, fsys, cur.colMap, cur.partSpec)
-    val entries = cd.entries
-    val (st, rw) = computeStats(spark, entries, ddl, cur.statsCols,
-      cur.colMap, cur.keys, Some(fsys), files = cd.files)
+      cur.buckets, uuid, fsys, cur.colMap, cur.partSpec, cur.statsCols,
+      bloom = true)
     publish(fsys, rootP, stamped(Snapshot(v, op, cur.keys,
-      cur.buckets, ddl, uuid, entries,
+      cur.buckets, ddl, uuid, cd.entries,
       statsCols = cur.statsCols,
-      dirStats = st, dirRows = rw, dirBytes = cd.bytes,
+      dirStats = cd.stats, dirRows = cd.rows, dirBytes = cd.bytes,
       txn = txn, changeFeed = cur.changeFeed,
       colMap = cur.colMap, droppedPhys = cur.droppedPhys,
       constraints = cur.constraints, partSpec = cur.partSpec,
@@ -3636,19 +3626,17 @@ object SnapshotTable {
     val v = cur.version + 1
     val uuid = newUuid()
     if (mergeOnRead) {
-      val cd = writeCommitData(aligned(batch.drop(BucketCol), ddl),
-        rootP, v, cur.keys, cur.buckets, uuid, fsys, cur.colMap)
-      val entries = cd.entries
       // no bloom sidecars for DELTA dirs: reads never bloom-prune them
       // (their events shadow older rows), so the 16 KB filter would be
       // pure write amplification on the O(batch) commit path
-      val (st, rw) = computeStats(spark, entries, ddl, cur.statsCols,
-        cur.colMap, files = cd.files)
+      val cd = writeCommitData(aligned(batch.drop(BucketCol), ddl),
+        rootP, v, cur.keys, cur.buckets, uuid, fsys, cur.colMap,
+        statsCols = cur.statsCols)
       // a merge-on-read commit is an EVENT layer with no read-dependency:
       // it rebases over any concurrent commit (re-stamped to the new
       // version — "applied after the winner")
       return commitRebasing(spark, root, fsys, rootP, cur,
-        Pending("upsert-mor", ddl, uuid, v, entries, st, rw,
+        Pending("upsert-mor", ddl, uuid, v, cd.entries, cd.stats, cd.rows,
           cd.bytes, hit = None, txn = txn, files = cd.files,
           layoutBuckets = cur.buckets), retries, branch)
     }
@@ -3680,9 +3668,9 @@ object SnapshotTable {
       .join(batch.select(keyCols: _*), cur.keys, "left_anti")
       .unionByName(aligned(batch.drop(BucketCol), ddl))
     val cd = writeCommitData(merged, rootP, v, cur.keys,
-      cur.buckets, uuid, fsys, cur.colMap, cur.partSpec)
-    val entries = cd.entries
-    requireSubset(entries, hit, "upsert")
+      cur.buckets, uuid, fsys, cur.colMap, cur.partSpec, cur.statsCols,
+      bloom = true)
+    requireSubset(cd.entries, hit, "upsert")
     // commit-time change file (the Delta CDF shape): diff-exact rows —
     // inserts = batch minus identical displaced rows, deletes = displaced
     // minus identical batch rows — so the recorded feed equals what the
@@ -3699,13 +3687,11 @@ object SnapshotTable {
           rootP, v, uuid, cur.colMap))
       }
     val cdcF = cdcFiles(fsys, cdcDir)
-    val (st, rw) = computeStats(spark, entries, ddl, cur.statsCols,
-      cur.colMap, cur.keys, Some(fsys), files = cd.files)
     commitRebasing(spark, root, fsys, rootP, cur,
-      Pending("upsert", ddl, uuid, v, entries, st, rw,
-        cd.bytes ++ bytesOf(cdcF),
+      Pending("upsert", ddl, uuid, v, cd.entries, cd.stats, cd.rows,
+        cd.bytes ++ cdcF.bytes,
         hit = Some(hit), txn = txn,
-        cdc = cdcDir, files = cd.files ++ cdcF,
+        cdc = cdcDir, files = cd.files ++ cdcF.files,
         layoutBuckets = cur.buckets), retries, branch)
   }
 
@@ -3739,14 +3725,12 @@ object SnapshotTable {
     val uuid = newUuid()
     if (mergeOnRead) {
       val tombs = batch.drop(BucketCol)
-      val cd = writeCommitData(tombs, rootP, v, cur.keys,
-        cur.buckets, uuid, fsys, cur.colMap)
-      val entries = cd.entries
       // tombstone dirs are events too: never bloom-pruned, no sidecar
-      val (st, rw) = computeStats(spark, entries, tombs.schema.toDDL,
-        cur.statsCols, cur.colMap, files = cd.files)
+      val cd = writeCommitData(tombs, rootP, v, cur.keys,
+        cur.buckets, uuid, fsys, cur.colMap, statsCols = cur.statsCols)
       return commitRebasing(spark, root, fsys, rootP, cur,
-        Pending("delete-mor", cur.schemaDdl, uuid, v, entries, st, rw,
+        Pending("delete-mor", cur.schemaDdl, uuid, v, cd.entries,
+          cd.stats, cd.rows,
           cd.bytes, hit = None, txn = None, files = cd.files,
           layoutBuckets = cur.buckets), retries, branch)
     }
@@ -3756,9 +3740,9 @@ object SnapshotTable {
     val priorHit = resolvedRead(spark, cur, Some(hit), cur.schemaDdl)
     val kept = priorHit.join(batch.drop(BucketCol), cur.keys, "left_anti")
     val cd = writeCommitData(kept, rootP, v, cur.keys,
-      cur.buckets, uuid, fsys, cur.colMap, cur.partSpec)
-    val entries = cd.entries
-    requireSubset(entries, hit, "delete")
+      cur.buckets, uuid, fsys, cur.colMap, cur.partSpec, cur.statsCols,
+      bloom = true)
+    requireSubset(cd.entries, hit, "delete")
     val cdcDir =
       if (!cur.changeFeed) None
       else Some(writeChangeData(
@@ -3766,13 +3750,11 @@ object SnapshotTable {
           .withColumn(ChangeTypeCol, lit("delete")),
         rootP, v, uuid, cur.colMap))
     val cdcF = cdcFiles(fsys, cdcDir)
-    val (st, rw) = computeStats(spark, entries, cur.schemaDdl,
-      cur.statsCols, cur.colMap, cur.keys, Some(fsys), files = cd.files)
     commitRebasing(spark, root, fsys, rootP, cur,
-      Pending("delete", cur.schemaDdl, uuid, v, entries, st, rw,
-        cd.bytes ++ bytesOf(cdcF),
+      Pending("delete", cur.schemaDdl, uuid, v, cd.entries, cd.stats,
+        cd.rows, cd.bytes ++ cdcF.bytes,
         hit = Some(hit), txn = None,
-        cdc = cdcDir, files = cd.files ++ cdcF,
+        cdc = cdcDir, files = cd.files ++ cdcF.files,
         layoutBuckets = cur.buckets), retries, branch)
   }
 
@@ -3841,9 +3823,6 @@ object SnapshotTable {
     val tomb = matched.select(col(PosFileCol), col(PosPosCol))
     val cd = writeCommitData(tomb, rootP, v, Seq.empty, cur.buckets,
       uuid, fsys)
-    val entries = cd.entries
-    val (st, rw) = computeStats(spark, entries, posTombSchema.toDDL,
-      Seq.empty, files = cd.files)
     val cdcDir =
       if (!cur.changeFeed) None
       else Some(writeChangeData(
@@ -3852,10 +3831,10 @@ object SnapshotTable {
         rootP, v, uuid, cur.colMap))
     val cdcF = cdcFiles(fsys, cdcDir)
     commitRebasing(spark, root, fsys, rootP, cur,
-      Pending("delete-pos", cur.schemaDdl, uuid, v, entries, st, rw,
-        cd.bytes ++ bytesOf(cdcF),
+      Pending("delete-pos", cur.schemaDdl, uuid, v, cd.entries, cd.stats,
+        cd.rows, cd.bytes ++ cdcF.bytes,
         hit = Some(Set(0)), txn = None,
-        cdc = cdcDir, files = cd.files ++ cdcF,
+        cdc = cdcDir, files = cd.files ++ cdcF.files,
         layoutBuckets = cur.buckets), retries, branch)
   }
 
@@ -3951,9 +3930,6 @@ object SnapshotTable {
     // them ([[writeCommitData]]'s hash); readers project (file, pos)
     val cd = writeCommitData(tomb, rootP, v, cur.keys, cur.buckets,
       uuid, fsys)
-    val entries = cd.entries
-    val (st, rw) = computeStats(spark, entries, tomb.schema.toDDL,
-      Seq.empty, files = cd.files)
     val cdcDir =
       if (!cur.changeFeed) None
       else Some(writeChangeData(
@@ -3961,13 +3937,13 @@ object SnapshotTable {
             .map(col).toIndexedSeq: _*)
           .withColumn(ChangeTypeCol, lit("delete")),
         rootP, v, uuid, cur.colMap))
-    val hit = entries.map(_._1).toSet
+    val hit = cd.entries.map(_._1).toSet
     val cdcF = cdcFiles(fsys, cdcDir)
     commitRebasing(spark, root, fsys, rootP, cur,
-      Pending("delete-pos", ddl, uuid, v, entries, st, rw,
-        cd.bytes ++ bytesOf(cdcF),
+      Pending("delete-pos", ddl, uuid, v, cd.entries, cd.stats, cd.rows,
+        cd.bytes ++ cdcF.bytes,
         hit = Some(hit), txn = None,
-        cdc = cdcDir, files = cd.files ++ cdcF,
+        cdc = cdcDir, files = cd.files ++ cdcF.files,
         layoutBuckets = cur.buckets), retries, branch)
   }
 
@@ -3993,16 +3969,13 @@ object SnapshotTable {
     // deltas are empty by classification's precondition, so a plain
     // dir read IS the resolved content of the boundary dirs
     val cd =
-      if (rewrite.isEmpty) CommitFiles(Seq.empty, Map.empty)
+      if (rewrite.isEmpty) CommitFiles.empty
       else writeCommitData(
         readEntries(spark, cur.schemaDdl, cur.colMap, rewriteDirs,
           cur.existsDefaults, cur.dirFiles)
           .filter(not(coalesce(condition, lit(false)))),
         rootP, v, cur.keys, cur.buckets, uuid, fsys, cur.colMap,
-        cur.partSpec)
-    val newEntries = cd.entries
-    val (st, rw) = computeStats(spark, newEntries, cur.schemaDdl,
-      cur.statsCols, cur.colMap, cur.keys, Some(fsys), files = cd.files)
+        cur.partSpec, cur.statsCols, bloom = true)
     // commit-time change data from the DROPPED + boundary dirs only —
     // O(deleted rows), never O(table); classification guarantees the
     // predicate is deterministic, so this re-evaluation matches the
@@ -4023,16 +3996,16 @@ object SnapshotTable {
     val cdcF = cdcFiles(fsys, cdcDir)
     publish(fsys, rootP, stamped(Snapshot(v, "delete", cur.keys,
       cur.buckets, cur.schemaDdl, uuid,
-      kept ++ newEntries,
+      kept ++ cd.entries,
       statsCols = cur.statsCols,
-      dirStats = cur.dirStats ++ st, dirRows = cur.dirRows ++ rw,
-      dirBytes = cur.dirBytes ++ cd.bytes ++ bytesOf(cdcF),
+      dirStats = cur.dirStats ++ cd.stats, dirRows = cur.dirRows ++ cd.rows,
+      dirBytes = cur.dirBytes ++ cd.bytes ++ cdcF.bytes,
       deltas = Seq.empty, changeFeed = cur.changeFeed, cdc = cdcDir,
       dirLayout = cur.dirLayout, colMap = cur.colMap,
       droppedPhys = cur.droppedPhys, constraints = cur.constraints,
       partSpec = cur.partSpec, colDefaults = cur.colDefaults,
       existsDefaults = cur.existsDefaults, props = cur.props,
-      dirFiles = cur.dirFiles ++ cd.files ++ cdcF)), branch)
+      dirFiles = cur.dirFiles ++ cd.files ++ cdcF.files)), branch)
     v
   }
 
@@ -4393,17 +4366,12 @@ object SnapshotTable {
       d.withColumn(s"$PartPrefix${f.idx}",
         partValueCol(f, out1.schema(f.col).dataType))
     }
-    out.write.options(commitWriteOptions)
-      .partitionBy((BucketCol +: ptNames :+ ZSliceCol): _*)
-      .parquet(commitDir.toString)
-    val cd = enumerateCommit(fsys, commitDir, cur.buckets)
-    val entries = cd.entries
-    val (st, rw) = computeStats(spark, entries, cur.schemaDdl,
-      cur.statsCols, cur.colMap, cur.keys, Some(fsys), files = cd.files)
+    val cd = writeCommitDir(out, BucketCol +: ptNames :+ ZSliceCol,
+      commitDir, cur.buckets, fsys, cur.statsCols, cur.keys)
     publish(fsys, rootP, stamped(Snapshot(v, "zorder", cur.keys,
-      cur.buckets, cur.schemaDdl, uuid, entries,
+      cur.buckets, cur.schemaDdl, uuid, cd.entries,
       statsCols = cur.statsCols,
-      dirStats = st, dirRows = rw, dirBytes = cd.bytes,
+      dirStats = cd.stats, dirRows = cd.rows, dirBytes = cd.bytes,
       changeFeed = cur.changeFeed,
       colMap = cur.colMap, droppedPhys = cur.droppedPhys,
       constraints = cur.constraints, partSpec = cur.partSpec,
@@ -4913,18 +4881,16 @@ object SnapshotTable {
     val v = cur.version + 1
     val uuid = newUuid()
     val cd = writeCommitData(rows, rootP, v, cur.keys,
-      cur.buckets, uuid, fsys, cur.colMap, cur.partSpec)
-    val entries = cd.entries
+      cur.buckets, uuid, fsys, cur.colMap, cur.partSpec, cur.statsCols,
+      bloom = true)
     // committed parquet is deterministic input: rows rehash to exactly
     // their original buckets, so the produced set must stay inside target
-    requireSubset(entries, target, "compact")
-    val (st, rw) = computeStats(spark, entries, cur.schemaDdl,
-      cur.statsCols, cur.colMap, cur.keys, Some(fsys), files = cd.files)
+    requireSubset(cd.entries, target, "compact")
     publish(fsys, rootP, stamped(Snapshot(v, "compact", cur.keys,
       cur.buckets, cur.schemaDdl, uuid,
-      cur.entries.filterNot(e => cur.entryHit(e, target)) ++ entries,
+      cur.entries.filterNot(e => cur.entryHit(e, target)) ++ cd.entries,
       statsCols = cur.statsCols,
-      dirStats = cur.dirStats ++ st, dirRows = cur.dirRows ++ rw,
+      dirStats = cur.dirStats ++ cd.stats, dirRows = cur.dirRows ++ cd.rows,
       dirBytes = cur.dirBytes ++ cd.bytes,
       deltas = cur.deltas.filterNot(d => target(d.bucket)),
       changeFeed = cur.changeFeed,
@@ -4967,16 +4933,13 @@ object SnapshotTable {
     val rows = readEntries(spark, cur.schemaDdl, cur.colMap,
       target.map(_._2), cur.existsDefaults, cur.dirFiles)
     val cd = writeCommitData(rows, rootP, v, cur.keys, cur.buckets,
-      uuid, fsys, cur.colMap, cur.partSpec)
-    val entries = cd.entries
-    val (st, rw) = computeStats(spark, entries, cur.schemaDdl,
-      cur.statsCols, cur.colMap, cur.keys, Some(fsys), files = cd.files)
+      uuid, fsys, cur.colMap, cur.partSpec, cur.statsCols, bloom = true)
     val targetDirs = target.map(_._2).toSet
     publish(fsys, rootP, stamped(Snapshot(v, "compact", cur.keys,
       cur.buckets, cur.schemaDdl, uuid,
-      cur.entries.filterNot(e => targetDirs(e._2)) ++ entries,
+      cur.entries.filterNot(e => targetDirs(e._2)) ++ cd.entries,
       statsCols = cur.statsCols,
-      dirStats = cur.dirStats ++ st, dirRows = cur.dirRows ++ rw,
+      dirStats = cur.dirStats ++ cd.stats, dirRows = cur.dirRows ++ cd.rows,
       dirBytes = cur.dirBytes ++ cd.bytes,
       deltas = cur.deltas, // empty: classification refuses delta tables
       changeFeed = cur.changeFeed,

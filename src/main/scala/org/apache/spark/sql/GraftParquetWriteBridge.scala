@@ -1,10 +1,13 @@
 package org.apache.spark.sql
 
+import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.{Job, JobID, TaskAttemptID, TaskID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.internal.io.FileCommitProtocol
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.{BasicWriteJobStatsTracker, FileFormatWriter, OutputWriter, OutputWriterFactory, WriteJobStatsTracker}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetOptions, ParquetUtils}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
 
@@ -67,5 +70,44 @@ object GraftParquetWriteBridge {
       new ParquetOptions(Map.empty[String, String], sqlConf))
     new RowFileWriterFactory(factory,
       new SerializableConfiguration(job.getConfiguration), schema.toDDL)
+  }
+
+  /** `df.write.options(options).partitionBy(partitionBy: _*).parquet(path)`
+    * with extra [[WriteJobStatsTracker]]s riding the write tasks — the
+    * hook `DataFrameWriter` does not expose (Delta's
+    * `DeltaJobStatisticsTracker` wiring is this exact call). Same job
+    * as the plain V1 write: one SQL execution over the frame's plan,
+    * `FileFormatWriter` sorting by the partition columns when the plan
+    * is not already ordered, the session's commit protocol, the
+    * Hadoop `options`, and the basic tracker that feeds task output
+    * metrics. The target dir must be fresh (the caller's commit dirs
+    * always are). */
+  def writeParquet(df: DataFrame, path: String, partitionBy: Seq[String],
+      options: Map[String, String],
+      trackers: Seq[WriteJobStatsTracker]): Unit = {
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val spark = ds.sparkSession
+    org.apache.spark.sql.util.SchemaUtils.checkSchemaColumnNameDuplication(
+      df.schema, spark.sessionState.conf.caseSensitiveAnalysis)
+    val hadoopConf = spark.sessionState.newHadoopConfWithOptions(options)
+    val out = new Path(path)
+    val qualified = out.getFileSystem(hadoopConf).makeQualified(out).toString
+    val qe = spark.sessionState.executePlan(ds.logicalPlan)
+    SQLExecution.withNewExecutionId(qe, Some(s"write parquet $qualified")) {
+      val plan = qe.executedPlan
+      val parts = partitionBy.map(n => plan.output.find(_.name == n)
+        .getOrElse(sys.error(s"partition column $n not in ${plan.output}")))
+      val committer = FileCommitProtocol.instantiate(
+        spark.sessionState.conf.fileCommitProtocolClass,
+        jobId = java.util.UUID.randomUUID().toString,
+        outputPath = qualified)
+      FileFormatWriter.write(spark, plan, new ParquetFileFormat, committer,
+        FileFormatWriter.OutputSpec(qualified, Map.empty, plan.output),
+        hadoopConf, parts, None,
+        new BasicWriteJobStatsTracker(new SerializableConfiguration(hadoopConf),
+          BasicWriteJobStatsTracker.metrics) +: trackers,
+        options)
+    }
+    ()
   }
 }

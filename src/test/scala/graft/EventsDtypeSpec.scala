@@ -101,6 +101,23 @@ class EventsDtypeSpec extends AnyFunSuite {
     assert(e.getMessage.contains("Tables.embeddings"), e.getMessage)
   }
 
+  test("Tables.load re-infers the schema of a path rewritten in the " +
+      "same JVM") {
+    val dir = java.nio.file.Files.createTempDirectory("tables_rewrite").toString
+    val path = s"$dir/t.parquet"
+    spark.range(3).toDF("a").write.parquet(path)
+    assert(Tables.load(spark, dir, "t").columns.toSeq === Seq("a"))
+    val before = new java.io.File(path).lastModified()
+    spark.range(3).selectExpr("id AS b", "id * 2 AS c")
+      .write.mode("overwrite").parquet(path)
+    // a rewrite always lands a new modification time; pin it past the
+    // old one so a coarse filesystem clock cannot hide it
+    new java.io.File(path).setLastModified(before + 5000L)
+    val reloaded = Tables.load(spark, dir, "t")
+    assert(reloaded.columns.toSeq === Seq("b", "c"))
+    assert(reloaded.count() === 3L)
+  }
+
   test("normalizeTs fails loudly on a NEW unexpected encoding") {
     val weird = baseDf.withColumn("ts", col("ts_us").cast(StringType))
     val e = intercept[IllegalStateException](Tables.normalizeTs(weird))

@@ -68,6 +68,67 @@ class SnapshotFileListSpec extends AnyFunSuite {
     assert(viaLists.toSeq === viaListing.toSeq)
   }
 
+  test("a malformed files= line drops only its dir's list: the read " +
+    "falls back to listing for that dir and stays exact") {
+    val dir = tmp()
+    import spark.implicits._
+    val df = (0 until 40).map(i => (i.toLong, s"s$i")).toDF("k", "s")
+    SnapshotTable.create(df, dir, Seq("k"), buckets = 4)
+    val want = SnapshotTable.read(spark, dir).orderBy("k").collect().toSeq
+    val clean = SnapshotTable.headOption(spark, dir).get
+    val manifest = java.nio.file.Paths.get(dir, "_manifests", "v00000001.txt")
+    val lines = java.nio.file.Files.readAllLines(manifest)
+    val i = (0 until lines.size).find(lines.get(_).startsWith("files=")).get
+    val broken = lines.get(i).split("\t", 2)(0).stripPrefix("files=")
+    // corrupt the length field of the first file entry of one dir
+    lines.set(i, lines.get(i).replaceFirst(":(\\d+)", ":12x4"))
+    java.nio.file.Files.write(manifest, lines)
+    // the local filesystem's checksum sidecar would reject the edit
+    java.nio.file.Files.deleteIfExists(
+      manifest.resolveSibling(".v00000001.txt.crc"))
+    val head = SnapshotTable.headOption(spark, dir).get
+    assert(!head.dirFiles.contains(broken))
+    assert(head.dirFiles === clean.dirFiles - broken)
+    assert(head.entries === clean.entries)
+    assert(SnapshotTable.read(spark, dir).orderBy("k").collect().toSeq === want)
+  }
+
+  test("an unlistable file name drops only its dir's files= list; the " +
+    "dir's bytes stay recorded, so metadataSizeBytes stays defined") {
+    val dir = tmp()
+    import spark.implicits._
+    SnapshotTable.create((0 until 20).map(i => (i.toLong, s"s$i"))
+      .toDF("k", "s"), dir, Seq("k"), buckets = 2)
+    val commitDir = new java.io.File(dir, "data").listFiles()
+      .filter(_.getName.startsWith("c1-")).head
+    val bucketDir = new java.io.File(commitDir, "_gb=0")
+    val part = bucketDir.listFiles().filter(_.getName.endsWith(".parquet")).head
+    assert(part.renameTo(new java.io.File(bucketDir, "odd,name.parquet")))
+    SnapshotTable.recordedFilesForTest(spark, commitDir.getPath, 2)
+      .foreach { case (entries, files, bytes) =>
+        assert(entries.size === 2)
+        val odd = entries.collectFirst {
+          case (0, d) if d.endsWith("_gb=0") => d }.get
+        assert(!files.contains(odd))
+        assert(files.size === 1)
+        assert(bytes.keySet === entries.map(_._2).toSet)
+        assert(bytes(odd) > 0L)
+        val snap = SnapshotTable.Snapshot(1L, "create", Seq("k"), 2,
+          "k BIGINT, s STRING", "u", entries, dirBytes = bytes,
+          dirFiles = files)
+        assert(snap.metadataSizeBytes === Some(bytes.values.sum))
+      }
+  }
+
+  test("coveredFiles reads a repeated dir once") {
+    val files = Map("/t/d1" -> Seq(("a.parquet", 3L), ("b.parquet", 4L)),
+      "/t/d2" -> Seq(("c.parquet", 5L)))
+    assert(SnapshotTable.coveredFiles(Seq("/t/d1", "/t/d2", "/t/d1"), files) ===
+      Some(Seq(("/t/d1/a.parquet", 3L), ("/t/d1/b.parquet", 4L),
+        ("/t/d2/c.parquet", 5L))))
+    assert(SnapshotTable.coveredFiles(Seq("/t/d1", "/t/d3"), files) === None)
+  }
+
   test("symmetricDiff (readChanges) equals the exceptAll-pair spelling " +
     "on multisets with duplicates and nulls") {
     import spark.implicits._

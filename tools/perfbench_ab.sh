@@ -1,0 +1,53 @@
+#!/bin/bash
+# Same-window A/B of two checkouts on one perfbench workload.
+#   tools/perfbench_ab.sh <treeA> <treeB> <workload> <runs>
+# Runs `python3 perfbench/run.py` of tree A and tree B alternately (pair i
+# uses seed FIRST_SEED+i for both; odd pairs run B first), so host CPU
+# steal — which swings single runs by 5-15% — lands on both sides alike.
+# Prints every metric's median for A and B, the B/A change, and each
+# side's median host_steal_share. Env: FIRST_SEED (default 1200),
+# SECONDS_PER_RUN (default 8), TRACE (0 = end-to-end metrics, 1 = per
+# layer; default 0), OUT_DIR (keeps every run's output; default a temp
+# dir). Each tree builds itself on its first run.
+set -euo pipefail
+if [ $# -ne 4 ]; then
+  echo "usage: $0 <treeA> <treeB> <workload> <runs>" >&2
+  exit 2
+fi
+A="$(cd "$1" && pwd)"; B="$(cd "$2" && pwd)"; W="$3"; RUNS="$4"
+SEED0="${FIRST_SEED:-1200}"; SECS="${SECONDS_PER_RUN:-8}"; TRACE="${TRACE:-0}"
+OUT="${OUT_DIR:-$(mktemp -d -t perfbench_ab.XXXXXX)}"
+mkdir -p "$OUT"
+
+run() { # <tag> <tree> <seed>
+  local f="$OUT/$1.$3.txt"
+  (cd "$2" && python3 perfbench/run.py --workload "$W" --seed "$3" \
+    --seconds "$SECS" --trace "$TRACE") > "$f" 2> "$f.err" || {
+    echo "run $1 seed $3 failed; see $f.err" >&2; exit 1; }
+  echo "$1 seed=$3 $(grep -E '^metric (rows_per_s|op_p50_s|host_steal_share) ' "$f" | awk '{printf "%s=%s ", $2, $4}')"
+}
+
+for ((i = 0; i < RUNS; i++)); do
+  s=$((SEED0 + i))
+  if ((i % 2 == 0)); then run A "$A" "$s"; run B "$B" "$s"
+  else run B "$B" "$s"; run A "$A" "$s"; fi
+done
+
+python3 - "$OUT" <<'EOF'
+import glob, statistics, sys
+out = sys.argv[1]
+vals = {"A": {}, "B": {}}
+for side in vals:
+    for f in sorted(glob.glob(f"{out}/{side}.*.txt")):
+        for line in open(f):
+            p = line.split()
+            if len(p) >= 4 and p[0] in ("metric", "layer") and p[2] == "=":
+                vals[side].setdefault(p[1], []).append(float(p[3]))
+names = [n for n in vals["A"] if n in vals["B"]]
+print(f"{'metric':34s} {'median A':>14s} {'median B':>14s} {'B/A-1':>8s}   n")
+for n in names:
+    a, b = statistics.median(vals["A"][n]), statistics.median(vals["B"][n])
+    ch = f"{(b / a - 1) * 100:+.1f}%" if a else "n/a"
+    print(f"{n:34s} {a:14.6g} {b:14.6g} {ch:>8s}   {len(vals['A'][n])}/{len(vals['B'][n])}")
+print(f"runs kept in {out}")
+EOF
