@@ -89,7 +89,7 @@ class SnapshotCatalog extends TableCatalog with SupportsNamespaces
 
   private def spark = SparkSession.active
   private def fsys: FileSystem =
-    new Path(warehouse).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    LocalFs.resolve(new Path(warehouse), spark.sparkContext.hadoopConfiguration)
 
   override def initialize(name: String,
       options: CaseInsensitiveStringMap): Unit = {

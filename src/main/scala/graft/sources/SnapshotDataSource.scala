@@ -440,7 +440,7 @@ private[graft] class SnapshotScanBuilder(snap: SnapshotTable.Snapshot,
       case Some(tuples) if tuples.nonEmpty =>
         val hashes = tuples.map(t =>
           SnapshotTable.keyHashOfLiterals(t, keyTypes))
-        val fsys = new org.apache.hadoop.fs.Path(root).getFileSystem(
+        val fsys = LocalFs.resolve(new org.apache.hadoop.fs.Path(root),
           SparkSession.active.sessionState.newHadoopConf())
         cur.filter(e => SnapshotTable.bloomMayContain(fsys, e._2, hashes))
       case _ => cur

@@ -136,7 +136,7 @@ private[sources] class SnapshotDeltaWrite(root: String,
         (if (isPos) posStats else dataStats).mergeAll(ds.iterator.map {
           case (_, _, rel, d) => s"$stageDir/$rel" -> d })
       }
-      val fsys = new org.apache.hadoop.fs.Path(stageDir).getFileSystem(
+      val fsys = LocalFs.resolve(new org.apache.hadoop.fs.Path(stageDir),
         spark.sessionState.newHadoopConf())
       fsys.delete(new org.apache.hadoop.fs.Path(stageDir, "_temp"), true)
       val dataDirs = staged.collect { case (false, b, rel) =>
@@ -160,7 +160,7 @@ private[sources] class SnapshotDeltaWrite(root: String,
     }
 
     override def abort(messages: Array[WriterCommitMessage]): Unit = {
-      val fsys = new org.apache.hadoop.fs.Path(stageDir).getFileSystem(
+      val fsys = LocalFs.resolve(new org.apache.hadoop.fs.Path(stageDir),
         spark.sessionState.newHadoopConf())
       fsys.delete(new org.apache.hadoop.fs.Path(stageDir), true)
       ()
@@ -315,7 +315,7 @@ private[sources] class SnapshotDeltaDataWriter(stageDir: String,
 
   override def commit(): WriterCommitMessage = {
     open.values.foreach(_._4.close())
-    val fsys = new Path(stageDir).getFileSystem(dataFiles.hadoopConf)
+    val fsys = LocalFs.resolve(new Path(stageDir), dataFiles.hadoopConf)
     open.foreach { case (rel, (_, _, n, _, _)) =>
       val dest = new Path(stageDir,
         s"$rel/part-$partitionId-$taskId.parquet")
@@ -332,7 +332,7 @@ private[sources] class SnapshotDeltaDataWriter(stageDir: String,
   override def abort(): Unit = {
     open.values.foreach { case (_, _, _, w, _) =>
       try w.close() catch { case _: Throwable => () } }
-    val fsys = new Path(tmpDir).getFileSystem(dataFiles.hadoopConf)
+    val fsys = LocalFs.resolve(new Path(tmpDir), dataFiles.hadoopConf)
     fsys.delete(new Path(tmpDir), true)
     ()
   }

@@ -136,7 +136,7 @@ private[sources] class SnapshotReplaceDataWrite(root: String,
         s"$stageDir/$rel" -> d })
       // temp attempt dirs stay out of the registered bucket dirs; sweep
       // them before the manifest makes the commit dir live
-      val fsys = new org.apache.hadoop.fs.Path(stageDir).getFileSystem(
+      val fsys = LocalFs.resolve(new org.apache.hadoop.fs.Path(stageDir),
         spark.sessionState.newHadoopConf())
       fsys.delete(new org.apache.hadoop.fs.Path(stageDir, "_temp"), true)
       val opName = op.command() match {
@@ -154,7 +154,7 @@ private[sources] class SnapshotReplaceDataWrite(root: String,
     }
 
     override def abort(messages: Array[WriterCommitMessage]): Unit = {
-      val fsys = new org.apache.hadoop.fs.Path(stageDir).getFileSystem(
+      val fsys = LocalFs.resolve(new org.apache.hadoop.fs.Path(stageDir),
         spark.sessionState.newHadoopConf())
       fsys.delete(new org.apache.hadoop.fs.Path(stageDir), true)
       ()
@@ -293,7 +293,7 @@ private[sources] class SnapshotReplaceDataWriter(stageDir: String,
 
   override def commit(): WriterCommitMessage = {
     open.values.foreach(_._2.close())
-    val fsys = new Path(stageDir).getFileSystem(files.hadoopConf)
+    val fsys = LocalFs.resolve(new Path(stageDir), files.hadoopConf)
     open.foreach { case ((b, suffix), (n, _, _)) =>
       val rel = s"${SnapshotTable.bucketDirName(b)}$suffix"
       val dest = new Path(stageDir,
@@ -312,7 +312,7 @@ private[sources] class SnapshotReplaceDataWriter(stageDir: String,
   override def abort(): Unit = {
     open.values.foreach { case (_, w, _) =>
       try w.close() catch { case _: Throwable => () } }
-    val fsys = new Path(tmpDir).getFileSystem(files.hadoopConf)
+    val fsys = LocalFs.resolve(new Path(tmpDir), files.hadoopConf)
     fsys.delete(new Path(tmpDir), true)
     ()
   }

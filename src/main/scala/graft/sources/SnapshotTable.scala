@@ -998,7 +998,7 @@ object SnapshotTable {
 
   private def fs(spark: SparkSession, root: String): (FileSystem, Path) = {
     val p = new Path(root)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
+    (LocalFs.resolve(p, spark.sparkContext.hadoopConfiguration), p)
   }
 
   private def manifestDir(root: Path) = new Path(root, "_manifests")
@@ -2364,10 +2364,13 @@ object SnapshotTable {
     * driver-side merge — a crashed job leaves orphan files in a dir no
     * manifest references, reclaimed by vacuum. Skipping the _SUCCESS
     * marker drops one FS create per commit; readers trust manifests,
-    * never markers. Guide §5 (driver does no data work) / §6. */
+    * never markers. Guide §5 (driver does no data work) / §6. The
+    * [[LocalFs.JobConf]] entries let the write tasks create, mkdir and
+    * commit-rename on a local root without forking `chmod`. */
   private val commitWriteOptions = Map(
     "mapreduce.fileoutputcommitter.algorithm.version" -> "2",
-    "mapreduce.fileoutputcommitter.marksuccessfuljobs" -> "false")
+    "mapreduce.fileoutputcommitter.marksuccessfuljobs" -> "false") ++
+    LocalFs.JobConf
 
   private def writeChangeData(changes: DataFrame, root: Path,
       version: Long, uuid: String,
@@ -4318,17 +4321,26 @@ object SnapshotTable {
       s"z-order column $c is not in statsCols=${cur.statsCols} — no read " +
         "would ever prune on it; recreate the table with it in statsCols"))
     val data = read(spark, root)
-    // ONE O(table) agg pass for every dimension's min/max
-    val minMax = cols.flatMap(c =>
-      Seq(min(col(c)).cast("double"), max(col(c)).cast("double")))
+    // ONE O(table) agg pass for every dimension's min/max, over FINITE
+    // values only: a NaN or ±Infinity bound would scale every row to a
+    // non-finite double, whose cast to BIGINT fails under ANSI. Spark
+    // orders NaN above +Infinity, so both comparisons exclude it.
+    def dbl(c: String) = col(c).cast("double")
+    def finite(c: String) = when(dbl(c) > Double.NegativeInfinity &&
+      dbl(c) < Double.PositiveInfinity, dbl(c))
+    val minMax = cols.flatMap(c => Seq(min(finite(c)), max(finite(c))))
     val b = data.agg(minMax.head, minMax.tail: _*).head()
     if (cols.indices.exists(d => b.isNullAt(2 * d)))
-      return cur.version // empty table or an all-null dimension
+      return cur.version // empty table or a dimension with no finite value
     val maxV = (1L << kBits) - 1
+    // +Infinity and NaN take the top rank, -Infinity the bottom one
     def norm(c: String, lo: Double, hi: Double) =
-      if (hi <= lo) lit(0L)
-      else least(lit(maxV), greatest(lit(0L),
-        ((col(c).cast("double") - lo) / (hi - lo) * maxV).cast("long")))
+      when(dbl(c) >= Double.PositiveInfinity, lit(maxV))
+        .when(dbl(c) <= Double.NegativeInfinity, lit(0L))
+        .otherwise(
+          if (hi <= lo) lit(0L)
+          else least(lit(maxV), greatest(lit(0L),
+            ((dbl(c) - lo) / (hi - lo) * maxV).cast("long"))))
     val zk = graft.ops.ZOrder.zKeyN(
       cols.zipWithIndex.map { case (c, d) =>
         norm(c, b.getDouble(2 * d), b.getDouble(2 * d + 1)) },

@@ -61,10 +61,14 @@ object GraftParquetWriteBridge {
   }
 
   /** Build the writer factory on the driver from the active session's
-    * parquet configuration (compression, timestamp encoding, …). */
+    * parquet configuration (compression, timestamp encoding, …). The
+    * job conf carries [[graft.sources.LocalFs.JobConf]], so the tasks'
+    * file creates on a local root fork no `chmod`. */
   def rowFileWriterFactory(spark: SparkSession,
       schema: StructType): RowFileWriterFactory = {
     val job = Job.getInstance(spark.sessionState.newHadoopConf())
+    graft.sources.LocalFs.JobConf.foreach { case (k, v) =>
+      job.getConfiguration.set(k, v) }
     val sqlConf = spark.sessionState.conf
     val factory = ParquetUtils.prepareWrite(sqlConf, job, schema,
       new ParquetOptions(Map.empty[String, String], sqlConf))

@@ -11,6 +11,16 @@ import org.apache.spark.sql.SparkSession
   * stop moving. Returns (result, recordsWritten, recordsRead,
   * maxPerTaskRead). */
 object ShuffleMetrics {
+  /** Deliver every queued listener event before a measuring listener is
+    * added: the bus hands a new listener the events still queued, so
+    * the task ends of an earlier action would count as this one's. */
+  private def drainBus(spark: SparkSession): Unit = {
+    val sc = spark.sparkContext
+    val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+    bus.getClass.getMethod("waitUntilEmpty", java.lang.Long.TYPE)
+      .invoke(bus, java.lang.Long.valueOf(10000L))
+  }
+
   def measure[A](spark: SparkSession)(action: => A): (A, Long, Long, Long) = {
     val write = new AtomicLong; val read = new AtomicLong
     val maxTaskRead = new AtomicLong
@@ -25,6 +35,7 @@ object ShuffleMetrics {
         }
       }
     }
+    drainBus(spark)
     spark.sparkContext.addSparkListener(l)
     try {
       val a = action
@@ -54,6 +65,7 @@ object ShuffleMetrics {
         }
       }
     }
+    drainBus(spark)
     spark.sparkContext.addSparkListener(l)
     try {
       val a = action

@@ -232,7 +232,13 @@ class SnapshotWriteStatsSpec extends AnyFunSuite {
     commit(root)(SnapshotTable.deleteWhere(spark, root,
       col("i") === 4, mergeOnRead = true))
     commit(root)(SnapshotTable.compact(spark, root, maxDirsPerBucket = 1))
-    commit(root)(SnapshotTable.zorder(spark, root, Seq("id", "i"),
+    // `d` holds NaN, and this append adds ±Infinity: the z-order
+    // dimension over it ranks them without a non-finite cast
+    commit(root)(SnapshotTable.append(typed(180L until 186L, "f")
+      .withColumn("d", when(col("id") % 2 === 0,
+        lit(Double.PositiveInfinity)).otherwise(lit(Double.NegativeInfinity))),
+      root))
+    commit(root)(SnapshotTable.zorder(spark, root, Seq("id", "i", "d"),
       slicesPerBucket = 4))
     commit(root)(SnapshotTable.overwrite(typed(200L until 260L, "o"),
       root))

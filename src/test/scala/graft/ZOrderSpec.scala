@@ -205,4 +205,24 @@ class ZOrderSpec extends AnyFunSuite {
         sum(col("user_id") * 65536 + col("epoch") * 256 + col("domain"))).head()
     assert(a === b)
   }
+
+  test("SnapshotTable.zorder over a DOUBLE with NaN and ±Infinity: NaN " +
+      "and +Infinity rank top, -Infinity bottom, finite bounds scale the rest") {
+    val root = java.nio.file.Files.createTempDirectory("graft_zorder_nan")
+      .toString + "/t"
+    val df = ((0L until 20L).map(i => (i, i.toDouble)) ++ Seq(
+      (100L, Double.NaN), (101L, Double.PositiveInfinity),
+      (102L, Double.NegativeInfinity))).toDF("id", "x")
+    graft.sources.SnapshotTable.create(df, root, Seq("id"), buckets = 1)
+    // two slices on (id, x): the slice is the top bit of x's rank
+    graft.sources.SnapshotTable.zorder(spark, root, Seq("id", "x"),
+      slicesPerBucket = 2)
+    val snap = graft.sources.SnapshotTable.versions(spark, root).last
+    assert(snap.op === "zorder")
+    def ids(slice: String) = snap.entries.map(_._2)
+      .filter(_.contains(s"_zs=$slice")).flatMap(d =>
+        spark.read.parquet(d).select("id").as[Long].collect()).toSet
+    assert(ids("1") === (10L until 20L).toSet ++ Set(100L, 101L))
+    assert(ids("0") === (0L until 10L).toSet + 102L)
+  }
 }

@@ -5,7 +5,10 @@
 # uses seed FIRST_SEED+i for both; odd pairs run B first), so host CPU
 # steal — which swings single runs by 5-15% — lands on both sides alike.
 # Prints every metric's median for A and B, the B/A change, and each
-# side's median host_steal_share. Env: FIRST_SEED (default 1200),
+# side's median host_steal_share; then, for rows_per_s and op_p50_s, each
+# side's median and quartiles, the pairs B won (ties count for neither)
+# and whether B's gain passes the claim rule: B wins at least 9/10 of the
+# pairs and the medians differ by more than A's q3-q1. Env: FIRST_SEED (default 1200),
 # SECONDS_PER_RUN (default 8), TRACE (0 = end-to-end metrics, 1 = per
 # layer; default 0), OUT_DIR (keeps every run's output; default a temp
 # dir). Each tree builds itself on its first run.
@@ -49,5 +52,31 @@ for n in names:
     a, b = statistics.median(vals["A"][n]), statistics.median(vals["B"][n])
     ch = f"{(b / a - 1) * 100:+.1f}%" if a else "n/a"
     print(f"{n:34s} {a:14.6g} {b:14.6g} {ch:>8s}   {len(vals['A'][n])}/{len(vals['B'][n])}")
+
+# the same seed runs once per side, so a seed names a pair
+pairs = {"A": {}, "B": {}}
+for side in pairs:
+    for f in glob.glob(f"{out}/{side}.*.txt"):
+        seed = f.rsplit(".", 2)[-2]
+        for line in open(f):
+            p = line.split()
+            if len(p) >= 4 and p[0] == "metric" and p[2] == "=":
+                pairs[side].setdefault(p[1], {})[seed] = float(p[3])
+print()
+print(f"{'claim metric':12s} {'A median [q1-q3]':>28s} {'B median [q1-q3]':>28s} {'B won':>7s}  rule")
+for n, higher in (("rows_per_s", True), ("op_p50_s", False)):
+    a, b = pairs["A"].get(n, {}), pairs["B"].get(n, {})
+    seeds = sorted(set(a) & set(b))
+    if len(seeds) < 2:
+        continue
+    def mq(xs):
+        q1, _, q3 = statistics.quantiles(xs, n=4, method="inclusive")
+        return statistics.median(xs), q1, q3
+    (ma, qa1, qa3), (mb, qb1, qb3) = mq([a[s] for s in seeds]), mq([b[s] for s in seeds])
+    won = sum(1 for s in seeds if (b[s] > a[s] if higher else b[s] < a[s]))
+    gain = (mb - ma) if higher else (ma - mb)
+    met = won * 10 >= 9 * len(seeds) and gain > qa3 - qa1
+    print(f"{n:12s} {f'{ma:.4g} [{qa1:.4g}-{qa3:.4g}]':>28s} {f'{mb:.4g} [{qb1:.4g}-{qb3:.4g}]':>28s} "
+          f"{f'{won}/{len(seeds)}':>7s}  {'met' if met else 'not met'}")
 print(f"runs kept in {out}")
 EOF
