@@ -814,15 +814,8 @@ private[graft] class SnapshotScan(snap: SnapshotTable.Snapshot,
     SnapshotTable.readSchemaMetaPhys(snap, physSchema(st))
 
   private def inner(paths: Seq[String]): Scan = {
-    // manifest-recorded file lists make the delegated scan listing-free
-    // (guide §6); dirs without a recorded list fall back to discovery
-    val b = SnapshotTable.coveredFiles(paths, snap.dirFiles) match {
-      case Some(fl) => org.apache.spark.sql.GraftFileListBridge
-        .parquetScanBuilderFiles(SparkSession.active, fl,
-          metaFor(tableSchema))
-      case None => GraftParquetBridge.parquetScanBuilder(
-        SparkSession.active, paths, metaFor(tableSchema))
-    }
+    val b = SnapshotTable.scanBuilderOf(paths, snap.dirFiles,
+      metaFor(tableSchema))
     GraftParquetBridge.pushCatalystFilters(b, physFilters(catalystFilters))
     GraftParquetBridge.pruneColumns(b, metaFor(required))
     GraftParquetBridge.buildScan(b)
@@ -1595,23 +1588,13 @@ private[graft] class SnapshotCdfScan(snap: SnapshotTable.Snapshot,
 
   private def rawInner(paths: Seq[String],
       files: Map[String, Seq[(String, Long)]] = Map.empty): Scan = {
-    val b = SnapshotTable.coveredFiles(paths, files) match {
-      case Some(fl) => org.apache.spark.sql.GraftFileListBridge
-        .parquetScanBuilderFiles(spark, fl, physTable)
-      case None =>
-        GraftParquetBridge.parquetScanBuilder(spark, paths, physTable)
-    }
+    val b = SnapshotTable.scanBuilderOf(paths, files, physTable)
     GraftParquetBridge.pruneColumns(b, physTable)
     GraftParquetBridge.buildScan(b)
   }
   private def cdcInner(paths: Seq[String],
       files: Map[String, Seq[(String, Long)]] = Map.empty): Scan = {
-    val b = SnapshotTable.coveredFiles(paths, files) match {
-      case Some(fl) => org.apache.spark.sql.GraftFileListBridge
-        .parquetScanBuilderFiles(spark, fl, cdcFileSchema)
-      case None =>
-        GraftParquetBridge.parquetScanBuilder(spark, paths, cdcFileSchema)
-    }
+    val b = SnapshotTable.scanBuilderOf(paths, files, cdcFileSchema)
     GraftParquetBridge.pruneColumns(b, cdcFileSchema)
     GraftParquetBridge.buildScan(b)
   }

@@ -109,22 +109,12 @@ private[graft] class SnapshotMorScan(snap: SnapshotTable.Snapshot,
     st.fields :+ org.apache.spark.sql.types.StructField(idxCol,
       org.apache.spark.sql.types.LongType))
 
-  /** Listing-free builder when the manifest recorded this dir set's
-    * file lists (guide §6); fallback = path discovery. */
-  private def builderFor(paths: Seq[String], tbl: StructType)
-      : org.apache.spark.sql.connector.read.ScanBuilder =
-    SnapshotTable.coveredFiles(paths, snap.dirFiles) match {
-      case Some(fl) => org.apache.spark.sql.GraftFileListBridge
-        .parquetScanBuilderFiles(SparkSession.active, fl, tbl)
-      case None => GraftParquetBridge.parquetScanBuilder(
-        SparkSession.active, paths, tbl)
-    }
-
   private def innerScan(paths: Seq[String], schema: StructType,
       pushFilters: Boolean, withIdx: Boolean = false): Scan = {
     val tbl = metaFor(physSchema(tableSchema))
     val sch = metaFor(physSchema(schema))
-    val b = builderFor(paths, if (withIdx) plusIdx(tbl) else tbl)
+    val b = SnapshotTable.scanBuilderOf(paths, snap.dirFiles,
+      if (withIdx) plusIdx(tbl) else tbl)
     if (pushFilters) GraftParquetBridge.pushCatalystFilters(b,
       if (snap.colMap.isEmpty) catalystFilters
       else catalystFilters.map(_.transform {
@@ -145,7 +135,7 @@ private[graft] class SnapshotMorScan(snap: SnapshotTable.Snapshot,
     .add(SnapshotTable.PosPosCol, org.apache.spark.sql.types.LongType)
 
   private def posTombScan(paths: Seq[String]): Scan = {
-    val b = builderFor(paths, posTombSchema)
+    val b = SnapshotTable.scanBuilderOf(paths, snap.dirFiles, posTombSchema)
     GraftParquetBridge.pruneColumns(b, posTombSchema)
     GraftParquetBridge.buildScan(b)
   }
@@ -578,13 +568,8 @@ private[graft] class SnapshotPosScan(snap: SnapshotTable.Snapshot,
 
   private def innerScan(paths: Seq[String], schema: StructType,
       tblSchema: StructType, pushFilters: Boolean): Scan = {
-    val b = SnapshotTable.coveredFiles(paths, snap.dirFiles) match {
-      case Some(fl) => org.apache.spark.sql.GraftFileListBridge
-        .parquetScanBuilderFiles(SparkSession.active, fl,
-          metaFor(tblSchema))
-      case None => GraftParquetBridge.parquetScanBuilder(
-        SparkSession.active, paths, metaFor(tblSchema))
-    }
+    val b = SnapshotTable.scanBuilderOf(paths, snap.dirFiles,
+      metaFor(tblSchema))
     if (pushFilters) GraftParquetBridge.pushCatalystFilters(b,
       if (snap.colMap.isEmpty) pushableFilters
       else pushableFilters.map(_.transform {

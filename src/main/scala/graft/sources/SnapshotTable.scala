@@ -146,11 +146,12 @@ object SnapshotTable {
       props: Map[String, String] = Map.empty,
       /** Per-dir DATA file lists `(name, bytes)` recorded by the writing
         * commit (`files=` manifest lines) — dirs are immutable once
-        * published, so a recorded list is exact forever. Readers with a
-        * complete list for their dir set scan with ZERO filesystem
-        * listings ([[org.apache.spark.sql.GraftFileListBridge]]); a dir
-        * absent from the map (pre-file-list manifests, renamed clones)
-        * only costs the old listing fallback, never correctness. */
+        * published, so a recorded list is exact forever, and clone and
+        * rename carry it. Scans plan from these lists with ZERO
+        * filesystem listings ([[SnapshotTable.filesOf]]); a dir absent
+        * from the map (pre-file-list manifests, a malformed line, a name
+        * the list cannot carry) costs one driver listing of that dir,
+        * never correctness. */
       dirFiles: Map[String, Seq[(String, Long)]] = Map.empty) {
 
     /** GUARANTEED per-dir column bounds derived from the partition
@@ -687,7 +688,6 @@ object SnapshotTable {
   private[graft] def statsTypes(schemaDdl: String): Map[String, org.apache.spark.sql.types.DataType] =
     StructType.fromDDL(schemaDdl).fields.map(f => f.name -> f.dataType).toMap
 
-  private val FormatHeader = "graft-snapshot-v1"
   /** Reserved bucket-partition column; inputs must not use it. */
   private[sources] val BucketCol = "_gb"
   private val ZSliceCol = "_zs"
@@ -740,11 +740,6 @@ object SnapshotTable {
   /** Fields new writes partition by, in spec order. */
   private def activeSpec(spec: Seq[PartField]): Seq[PartField] =
     spec.filter(_.active)
-
-  /** Does `spec` serialize in the legacy positional form? True until
-    * the first evolution (all active, idx == position). */
-  private def legacySpecShape(spec: Seq[PartField]): Boolean =
-    spec.zipWithIndex.forall { case (f, i) => f.active && f.idx == i }
 
   private val PartFieldRe = """^([a-z]+)\(([^()]+)\)$""".r
   private val PartFieldIdxRe = """^([a-z]+)\(([^()]+)\)@(\d+)(!?)$""".r
@@ -1033,116 +1028,14 @@ object SnapshotTable {
 
   private def parseManifest(fsys: FileSystem, p: Path, v: Long): Snapshot = {
     manifestParses.incrementAndGet()
+    SnapshotManifest.decode(readText(fsys, p), p.toString, v)
+  }
+
+  /** A small metadata file's whole body as UTF-8 text. */
+  private def readText(fsys: FileSystem, p: Path): String = {
     val in = fsys.open(p)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val lines = text.split("\n").toSeq.filter(_.nonEmpty)
-    require(lines.headOption.contains(FormatHeader),
-      s"$p is not a $FormatHeader manifest (header: ${lines.headOption})")
-    def fieldOpt(k: String): Option[String] = lines
-      .collectFirst { case l if l.startsWith(s"$k=") => l.drop(k.length + 1) }
-    def field(k: String): String =
-      fieldOpt(k).getOrElse(sys.error(s"manifest $p missing field $k"))
-    val entries = lines.collect {
-      case l if l.startsWith("entry=") =>
-        val Array(b, dir) = l.drop("entry=".length).split("\t", 2)
-        (b.toInt, dir)
-    }
-    val deltas = lines.collect {
-      case l if l.startsWith("delta=") =>
-        val Array(b, seq, kind, dir) = l.drop("delta=".length).split("\t", 4)
-        require(kind == "rows" || kind == "tomb" || kind == "pos",
-          s"manifest $p has unknown delta kind '$kind'")
-        DeltaEntry(b.toInt, seq.toLong, kind, dir)
-    }
-    val schemaDdl = field("schema")
-    val types = statsTypes(schemaDdl)
-    val dirStats = lines.collect {
-      case l if l.startsWith("stats=") =>
-        val Array(dir, json) = l.drop("stats=".length).split("\t", 2)
-        dir -> statsFromJson(json, types)
-    }.toMap
-    val dirRows = lines.collect {
-      case l if l.startsWith("rows=") =>
-        val Array(dir, n) = l.drop("rows=".length).split("\t", 2)
-        dir -> n.toLong
-    }.toMap
-    val dirBytes = lines.collect {
-      case l if l.startsWith("bytes=") =>
-        val Array(dir, n) = l.drop("bytes=".length).split("\t", 2)
-        dir -> n.toLong
-    }.toMap
-    val dirLayout = lines.collect {
-      case l if l.startsWith("layout=") =>
-        val Array(dir, n) = l.drop("layout=".length).split("\t", 2)
-        dir -> n.toInt
-    }.toMap
-    val colMap = lines.collect {
-      case l if l.startsWith("colmap=") =>
-        val Array(lg, ph) = l.drop("colmap=".length).split("\t", 2)
-        lg -> ph
-    }.toMap
-    val constraints = lines.collect {
-      case l if l.startsWith("constraint=") =>
-        val Array(n, e) = l.drop("constraint=".length).split("\t", 2)
-        n -> e
-    }.toMap
-    val colDefaults = lines.collect {
-      case l if l.startsWith("coldefault=") =>
-        val Array(c, d) = l.drop("coldefault=".length).split("\t", 2)
-        c -> d
-    }.toMap
-    val existsDefaults = lines.collect {
-      case l if l.startsWith("existsdefault=") =>
-        val Array(c, d) = l.drop("existsdefault=".length).split("\t", 2)
-        c -> d
-    }.toMap
-    val props = lines.collect {
-      case l if l.startsWith("prop=") =>
-        val Array(k, pv) = l.drop("prop=".length).split("\t", 2)
-        k -> pv
-    }.toMap
-    // file lists are an optimization layer: a malformed `files=` line
-    // drops only its dir's list (that dir's reads fall back to
-    // listing), never the manifest
-    val dirFiles = lines.collect {
-      case l if l.startsWith("files=") => l.drop("files=".length)
-    }.flatMap { body =>
-      body.split("\t", 2) match {
-        case Array(dir, fl) =>
-          val ents = fl.split(",").toSeq.filter(_.nonEmpty).map { ent =>
-            val i = ent.lastIndexOf(':')
-            if (i <= 0) None
-            else ent.drop(i + 1).toLongOption.filter(_ >= 0)
-              .map(ent.take(i) -> _)
-          }
-          if (ents.forall(_.isDefined)) Some(dir -> ents.flatten) else None
-        case _ => None
-      }
-    }.toMap
-    Snapshot(v, field("op"),
-      field("keys").split(",").toSeq.filter(_.nonEmpty),
-      field("buckets").toInt, schemaDdl, field("uuid"), entries,
-      // absent in pre-timestamp manifests: 0 sorts before any real clock
-      fieldOpt("ts").map(_.toLong).getOrElse(0L),
-      fieldOpt("statscols").map(_.split(",").toSeq.filter(_.nonEmpty))
-        .getOrElse(Seq.empty),
-      dirStats,
-      // split on the LAST colon: the app id is caller-chosen free text
-      fieldOpt("txn").map { t =>
-        val i = t.lastIndexOf(':')
-        require(i > 0, s"manifest $p has malformed txn field: $t")
-        (t.take(i), t.drop(i + 1).toLong)
-      },
-      dirRows, dirBytes, deltas,
-      fieldOpt("changefeed").exists(_.toBoolean),
-      fieldOpt("cdc"), dirLayout, colMap,
-      fieldOpt("dropped").map(_.split(",").toSeq.filter(_.nonEmpty))
-        .getOrElse(Seq.empty), constraints,
-      fieldOpt("partspec").map(s => parsePartSpec(s.split(",").toSeq))
-        .getOrElse(Seq.empty),
-      colDefaults, existsDefaults, props, dirFiles)
+    try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+    finally in.close()
   }
 
   // ---- consolidated checkpoints ----
@@ -1185,11 +1078,7 @@ object SnapshotTable {
 
   private def parseCheckpoint(fsys: FileSystem, p: Path): Checkpoint = {
     checkpointParses.incrementAndGet()
-    val in = fsys.open(p)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    val lines = text.split("\n").toSeq.filter(_.nonEmpty)
+    val lines = readText(fsys, p).split("\n").toSeq.filter(_.nonEmpty)
     require(lines.headOption.contains(CkptHeader),
       s"$p is not a $CkptHeader file (header: ${lines.headOption})")
     val v = lines.collectFirst {
@@ -1603,10 +1492,7 @@ object SnapshotTable {
   }
 
   private def parseTagFile(fsys: FileSystem, p: Path): Long = {
-    val in = fsys.open(p)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
+    val text = readText(fsys, p)
     text.split("\n").collectFirst {
       case l if l.startsWith("version=") => l.drop("version=".length).toLong
     }.getOrElse(sys.error(s"malformed tag file $p: $text"))
@@ -1675,10 +1561,7 @@ object SnapshotTable {
     if (!fsys.exists(p))
       sys.error(s"no branch '$name' at $root " +
         s"(have ${branchList(spark, root).map(_._1).mkString(",")})")
-    val in = fsys.open(p)
-    val text =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
+    val text = readText(fsys, p)
     text.split("\n").collectFirst {
       case l if l.startsWith("base=") => l.drop("base=".length).toLong
     }.getOrElse(sys.error(s"malformed branch ref $p: $text"))
@@ -1779,29 +1662,39 @@ object SnapshotTable {
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
-  /** Explicit (path, bytes) list when `files` covers EVERY requested
-    * dir; None → the caller's directory-listing fallback. */
-  private[graft] def coveredFiles(dirs: Seq[String],
-      files: Map[String, Seq[(String, Long)]])
-      : Option[Seq[(String, Long)]] =
-    if (dirs.nonEmpty && dirs.forall(files.contains))
-      // a dir named twice is still read once
-      Some(dirs.distinct.flatMap(d =>
-        files(d).map { case (n, len) => (d + "/" + n, len) }))
-    else None
+  /** The (path, bytes) DATA files of `dirs`, each dir once: the
+    * manifest-recorded list (`files=`, [[Snapshot.dirFiles]]) where the
+    * writing commit left one, else one driver listing of the dir — a
+    * malformed `files=` line, a manifest from before file lists, or a
+    * name [[fileListSafe]] keeps out of a list. Every snapshot scan
+    * plans from this list ([[org.apache.spark.sql.GraftFileListBridge]]),
+    * so a recorded dir costs zero filesystem listings. */
+  private[graft] def filesOf(spark: SparkSession, dirs: Seq[String],
+      files: Map[String, Seq[(String, Long)]]): Seq[(String, Long)] =
+    dirs.distinct.flatMap { d =>
+      files.getOrElse(d, {
+        val (fsys, p) = fs(spark, d)
+        dataFilesOf(fsys.listStatus(p).toSeq)
+      }).map { case (n, len) => (d + "/" + n, len) }
+    }
 
-  /** Parquet scan of `dirs` under an explicit schema — listing-free
-    * via the manifest-recorded file lists when they cover every dir
-    * (guide §6: zero FS listings, no distributed listing job), else
-    * the plain multi-dir read. */
+  /** DSv2 parquet `ScanBuilder` over `dirs`' files ([[filesOf]]) under
+    * an explicit schema — what every snapshot connector scan delegates
+    * its data plane to. */
+  private[sources] def scanBuilderOf(dirs: Seq[String],
+      files: Map[String, Seq[(String, Long)]], schema: StructType)
+      : org.apache.spark.sql.connector.read.ScanBuilder = {
+    val spark = SparkSession.active
+    org.apache.spark.sql.GraftFileListBridge.parquetScanBuilderFiles(spark,
+      filesOf(spark, dirs, files), schema)
+  }
+
+  /** Parquet scan of `dirs` under an explicit schema. */
   private def parquetDirs(spark: SparkSession, schema: StructType,
       dirs: Seq[String],
       files: Map[String, Seq[(String, Long)]]): DataFrame =
-    coveredFiles(dirs, files) match {
-      case Some(fl) =>
-        org.apache.spark.sql.GraftFileListBridge.parquetDf(spark, fl, schema)
-      case None => spark.read.schema(schema).parquet(dirs: _*)
-    }
+    org.apache.spark.sql.GraftFileListBridge.parquetDf(spark,
+      filesOf(spark, dirs, files), schema)
 
   private def readEntries(spark: SparkSession, schemaDdl: String,
       colMap: Map[String, String], dirs: Seq[String],
@@ -1837,27 +1730,6 @@ object SnapshotTable {
       s"c(\\d+)-[^/]+/$BucketCol=\\d+(?:/[^/]+=[^/]+)*/[^/]+$$", 1)
       .cast("long")
 
-  /** Resolution-aware read of a snapshot restricted to `buckets` (None =
-    * whole table): merge-on-read deltas are replayed per key in commit
-    * order, exactly reproducing what the merge-on-write spelling of the
-    * same commits would have produced.
-    *
-    * Replay rule — a row (base file row or delta replacement row) from
-    * commit seq `s` survives iff its key has NO delta event with seq
-    * greater than `s`. That one rule covers every interleaving: a
-    * tombstone kills everything older and nothing newer; a replacement
-    * row shadows all older rows of its key (including multiple base
-    * copies a blind append left behind) but coexists with a LATER blind
-    * append of the same key, which is precisely what merge-on-write
-    * produces for upsert-then-append.
-    *
-    * Cost shape (the 100 TB audit): buckets WITHOUT deltas stream
-    * straight through with zero added work; delta-bearing buckets pay
-    * one aggregation over the DELTA rows only (small: the un-compacted
-    * batches) plus two joins of base against that small per-key event
-    * table — the broadcast-join cost profile of Delta's deletion-vector
-    * reads, never a shuffle of the base data by key. Compaction
-    * ([[compact]]) restores the zero-overhead path. */
   /** Stable file identity for positional tombstones: the path suffix
     * from the commit-dir segment on, so scheme qualification
     * (`file:///` vs bare) of `_metadata.file_path` can never split the
@@ -1904,6 +1776,27 @@ object SnapshotTable {
       Seq(PosFileCol, PosPosCol), "left_anti")
   }
 
+  /** Resolution-aware read of a snapshot restricted to `buckets` (None =
+    * whole table): merge-on-read deltas are replayed per key in commit
+    * order, exactly reproducing what the merge-on-write spelling of the
+    * same commits would have produced.
+    *
+    * Replay rule — a row (base file row or delta replacement row) from
+    * commit seq `s` survives iff its key has NO delta event with seq
+    * greater than `s`. That one rule covers every interleaving: a
+    * tombstone kills everything older and nothing newer; a replacement
+    * row shadows all older rows of its key (including multiple base
+    * copies a blind append left behind) but coexists with a LATER blind
+    * append of the same key, which is precisely what merge-on-write
+    * produces for upsert-then-append.
+    *
+    * Cost shape (the 100 TB audit): buckets WITHOUT deltas stream
+    * straight through with zero added work; delta-bearing buckets pay
+    * one aggregation over the DELTA rows only (small: the un-compacted
+    * batches) plus two joins of base against that small per-key event
+    * table — the broadcast-join cost profile of Delta's deletion-vector
+    * reads, never a shuffle of the base data by key. Compaction
+    * ([[compact]]) restores the zero-overhead path. */
   private def resolvedRead(spark: SparkSession, snap: Snapshot,
       buckets: Option[Set[Int]], ddl: String): DataFrame = {
     // positional (deletion-vector) deltas: a row lives unless some
@@ -2035,14 +1928,8 @@ object SnapshotTable {
       liveDelta.fold(liveBase)(liveBase.unionByName(_)))
   }
 
-  /** Read the table at `version`, at the newest commit whose wall-clock
-    * is ≤ `asOfTimestamp`, or latest (neither). The file list is
-    * resolved once from one immutable manifest — concurrent commits are
-    * invisible to this scan (snapshot isolation). Merge-on-read deltas
-    * resolve transparently ([[resolvedRead]]); a delta-free snapshot
-    * reads its files straight through. */
   /** Test seam: [[resolvedRead]] of an explicit snapshot value (lets a
-    * spec strip `dirFiles` to prove the listing fallback reads the same
+    * spec strip `dirFiles` to prove the per-dir listing reads the same
     * rows the list-driven path serves). */
   private[graft] def readSnapshotForTest(spark: SparkSession,
       snap: Snapshot): DataFrame =
@@ -2052,6 +1939,12 @@ object SnapshotTable {
   private[graft] def symmetricDiffForTest(newSide: DataFrame,
       oldSide: DataFrame): DataFrame = symmetricDiff(newSide, oldSide)
 
+  /** Read the table at `version`, at the newest commit whose wall-clock
+    * is ≤ `asOfTimestamp`, or latest (neither). The file list is
+    * resolved once from one immutable manifest — concurrent commits are
+    * invisible to this scan (snapshot isolation). Merge-on-read deltas
+    * resolve transparently ([[resolvedRead]]); a delta-free snapshot
+    * reads its files straight through. */
   def read(spark: SparkSession, root: String,
       version: Option[Long] = None,
       asOfTimestamp: Option[Long] = None,
@@ -2459,8 +2352,8 @@ object SnapshotTable {
 
     /** From each dir's listed DATA files: the byte total is recorded
       * for EVERY dir; the `files=` list only when all its names are
-      * [[fileListSafe]] — an exotic name downgrades that dir's reads to
-      * the listing fallback but keeps its planner statistic. */
+      * [[fileListSafe]] — an exotic name costs that dir one listing per
+      * scan ([[filesOf]]) but keeps its planner statistic. */
     def of(entries: Seq[(Int, String)],
         listed: Seq[(String, Seq[(String, Long)])]): CommitFiles =
       CommitFiles(entries,
@@ -2469,8 +2362,10 @@ object SnapshotTable {
   }
 
   /** A file name a manifest `files=` line can carry verbatim. Parquet
-    * part names always qualify; an exotic name only downgrades its dir
-    * to the listing fallback. */
+    * part names always qualify; an exotic name only costs its dir one
+    * listing per scan ([[filesOf]]). There is deliberately no escaping:
+    * published manifests already carry the names this check admits
+    * verbatim, and a `%` codec would misread those containing `%`. */
   private def fileListSafe(n: String): Boolean =
     !(n.contains(',') || n.contains(':') || n.contains('\t') ||
       n.contains('\n'))
@@ -2638,7 +2533,7 @@ object SnapshotTable {
       line: Option[String] = None): Unit = {
     val target = manifestPath(root, snap.version, line)
     try storeFor(fsys).writeNoOverwrite(target,
-      manifestBody(snap).getBytes("UTF-8"))
+      SnapshotManifest.encode(snap).getBytes("UTF-8"))
     catch {
       case e: ConcurrentCommitException =>
         throw new ConcurrentCommitException(
@@ -2648,90 +2543,6 @@ object SnapshotTable {
     // best-effort cache on top (main line only — branch chains are
     // short-lived audit runs)
     if (line.isEmpty) writeCheckpointIfDue(fsys, root, snap)
-  }
-
-  private def manifestBody(snap: Snapshot): String = {
-    {
-      val body = new StringBuilder
-      body ++= FormatHeader += '\n'
-      body ++= s"op=${snap.op}" += '\n'
-      body ++= s"keys=${snap.keys.mkString(",")}" += '\n'
-      body ++= s"buckets=${snap.buckets}" += '\n'
-      body ++= s"schema=${snap.schemaDdl}" += '\n'
-      body ++= s"uuid=${snap.uuid}" += '\n'
-      body ++= s"ts=${snap.ts}" += '\n'
-      body ++= s"statscols=${snap.statsCols.mkString(",")}" += '\n'
-      if (snap.partSpec.nonEmpty) {
-        // legacy positional form until the first evolution (so
-        // never-evolved tables serialize byte-identically to before);
-        // explicit @idx[!] entries afterwards
-        val ser =
-          if (legacySpecShape(snap.partSpec)) snap.partSpec.mkString(",")
-          else snap.partSpec.map(_.serialized).mkString(",")
-        body ++= s"partspec=$ser" += '\n'
-      }
-      if (snap.changeFeed) body ++= "changefeed=true" += '\n'
-      snap.props.toSeq.sortBy(_._1).foreach { case (k, pv) =>
-        body ++= s"prop=$k\t$pv" += '\n'
-      }
-      snap.cdc.foreach(d => body ++= s"cdc=$d" += '\n')
-      snap.txn.foreach { case (app, ver) =>
-        require(!app.contains('\n') && !app.contains('\t'),
-          s"txn app id must be line-safe: $app")
-        body ++= s"txn=$app:$ver" += '\n'
-      }
-      snap.entries.foreach { case (b, d) => body ++= s"entry=$b\t$d" += '\n' }
-      // layout lines only for entries written under a historical bucket
-      // count (absent = current layout), so pre-rescale manifests and
-      // never-rescaled tables serialize byte-identically to before
-      snap.entries.foreach { case (_, d) =>
-        val l = snap.layoutOf(d)
-        if (l != snap.buckets) body ++= s"layout=$d\t$l" += '\n'
-      }
-      // column-mapping lines only for renamed columns; dropped physical
-      // names are RESERVED forever (re-adding one would resurrect old
-      // file data under the new logical name)
-      snap.colMap.toSeq.sortBy(_._1).foreach { case (lg, ph) =>
-        body ++= s"colmap=$lg\t$ph" += '\n'
-      }
-      snap.constraints.toSeq.sortBy(_._1).foreach { case (n, e) =>
-        body ++= s"constraint=$n\t$e" += '\n'
-      }
-      // write-side column DEFAULTs (SQL expression text, logical names)
-      snap.colDefaults.toSeq.sortBy(_._1).foreach { case (c, d) =>
-        body ++= s"coldefault=$c\t$d" += '\n'
-      }
-      // existence DEFAULTs of ADD COLUMN … DEFAULT (frozen literal SQL,
-      // logical names): files physically lacking the column read this
-      // value at scan — the Delta metadata-fill shape
-      snap.existsDefaults.toSeq.sortBy(_._1).foreach { case (c, d) =>
-        body ++= s"existsdefault=$c\t$d" += '\n'
-      }
-      if (snap.droppedPhys.nonEmpty)
-        body ++= s"dropped=${snap.droppedPhys.mkString(",")}" += '\n'
-      snap.deltas.foreach { d =>
-        body ++= s"delta=${d.bucket}\t${d.seq}\t${d.kind}\t${d.dir}" += '\n'
-      }
-      // stats/rows only for live entries: carried-forward dirs keep
-      // theirs, dropped dirs' metadata goes with them. The commit's own
-      // cdc dir is live too (its recorded bytes feed CDF admission).
-      val live = snap.entries.map(_._2).toSet ++ snap.deltas.map(_.dir) ++
-        snap.cdc
-      snap.dirStats.toSeq.filter(e => live(e._1)).sortBy(_._1)
-        .foreach { case (d, st) =>
-          body ++= s"stats=$d\t${statsToJson(st)}" += '\n'
-        }
-      snap.dirRows.toSeq.filter(e => live(e._1)).sortBy(_._1)
-        .foreach { case (d, n) => body ++= s"rows=$d\t$n" += '\n' }
-      snap.dirBytes.toSeq.filter(e => live(e._1)).sortBy(_._1)
-        .foreach { case (d, n) => body ++= s"bytes=$d\t$n" += '\n' }
-      snap.dirFiles.toSeq.filter(e => live(e._1)).sortBy(_._1)
-        .foreach { case (d, fs) =>
-          body ++= s"files=$d\t${fs.map { case (n, len) => s"$n:$len" }
-            .mkString(",")}" += '\n'
-        }
-      body.toString
-    }
   }
 
   private def newUuid() = java.util.UUID.randomUUID().toString.take(12)
@@ -4237,11 +4048,7 @@ object SnapshotTable {
     if (!fsys.exists(dir)) return Seq.empty
     fsys.listStatus(dir).toSeq.filter(_.isFile).flatMap { st =>
       try {
-        val in = fsys.open(st.getPath)
-        val text =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-        val lines = text.split("\n").toSeq
+        val lines = readText(fsys, st.getPath).split("\n").toSeq
         if (!lines.headOption.contains(CloneRefHeader)) None
         else for {
           d <- lines.collectFirst { case l if l.startsWith("dst=") =>
@@ -4395,9 +4202,10 @@ object SnapshotTable {
 
   /** Move the table root. Manifests record ABSOLUTE data-dir paths, so
     * a bare filesystem rename would strand every entry at the old
-    * location — after moving the directory this rewrites each
-    * manifest's `entry=`/`stats=` lines with the new prefix (atomic
-    * per file: tmp + rename). O(versions) driver metadata, ZERO data
+    * location — after moving the directory this decodes each
+    * manifest, moves every dir it records to the new prefix, and
+    * re-encodes it ([[SnapshotManifest]]; atomic per file: tmp +
+    * rename). O(versions) driver metadata, ZERO data
     * files moved beyond the one directory rename.
     *
     * Single-writer operation: a commit racing the rename loses its
@@ -4412,50 +4220,33 @@ object SnapshotTable {
     Option(newP.getParent).foreach(fsys.mkdirs)
     require(fsys.rename(oldP, newP),
       s"filesystem rename $oldRoot -> $newRoot failed")
-    val oldPrefix = oldP.toString + "/"
-    val newPrefix = newP.toString + "/"
+    // a dir is recorded as the root was given, or scheme-qualified (the
+    // commit walk's listed partition sub-dirs): each form keeps its own
+    val prefixes = Seq(oldP -> newP,
+      fsys.makeQualified(oldP) -> fsys.makeQualified(newP))
+      .map { case (o, n) => (o.toString + "/", n.toString + "/") }
     def moved(dir: String): String = {
-      require(dir.startsWith(oldPrefix),
-        s"manifest entry $dir is not under $oldPrefix — mixed-root table, " +
-          "refusing a half-rename")
-      newPrefix + dir.drop(oldPrefix.length)
+      val hit = prefixes.find(p => dir.startsWith(p._1))
+      require(hit.nonEmpty, s"manifest entry $dir is not under " +
+        s"${prefixes.head._1} — mixed-root table, refusing a half-rename")
+      val (o, n) = hit.get
+      n + dir.drop(o.length)
     }
     // main AND branch manifests both carry absolute dir paths
     val V = """(?:b\.[A-Za-z0-9][A-Za-z0-9._-]{0,127}\.)?v(\d{8,})\.txt""".r
     fsys.listStatus(manifestDir(newP)).toSeq.foreach { st =>
       st.getPath.getName match {
-        case V(_) =>
-          val in = fsys.open(st.getPath)
-          val text =
-            try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-            finally in.close()
-          val rewritten = text.split("\n", -1).map { l =>
-            if (l.startsWith("entry=")) {
-              val Array(b, dir) = l.drop("entry=".length).split("\t", 2)
-              s"entry=$b\t${moved(dir)}"
-            } else if (l.startsWith("delta=")) {
-              val Array(b, seq, kind, dir) =
-                l.drop("delta=".length).split("\t", 4)
-              s"delta=$b\t$seq\t$kind\t${moved(dir)}"
-            } else if (l.startsWith("stats=")) {
-              val Array(dir, json) = l.drop("stats=".length).split("\t", 2)
-              s"stats=${moved(dir)}\t$json"
-            } else if (l.startsWith("rows=")) {
-              val Array(dir, n) = l.drop("rows=".length).split("\t", 2)
-              s"rows=${moved(dir)}\t$n"
-            } else if (l.startsWith("bytes=")) {
-              val Array(dir, n) = l.drop("bytes=".length).split("\t", 2)
-              s"bytes=${moved(dir)}\t$n"
-            } else if (l.startsWith("cdc=")) {
-              s"cdc=${moved(l.drop("cdc=".length))}"
-            } else if (l.startsWith("files=")) {
-              val Array(dir, fl) = l.drop("files=".length).split("\t", 2)
-              s"files=${moved(dir)}\t$fl"
-            } else if (l.startsWith("layout=")) {
-              val Array(dir, n) = l.drop("layout=".length).split("\t", 2)
-              s"layout=${moved(dir)}\t$n"
-            } else l
-          }.mkString("\n")
+        case V(v) =>
+          val s = SnapshotManifest.decode(readText(fsys, st.getPath),
+            st.getPath.toString, v.toLong)
+          def keysMoved[X](m: Map[String, X]) = m.map { case (d, x) => moved(d) -> x }
+          val rewritten = SnapshotManifest.encode(s.copy(
+            entries = s.entries.map { case (b, d) => b -> moved(d) },
+            deltas = s.deltas.map(d => d.copy(dir = moved(d.dir))),
+            cdc = s.cdc.map(moved),
+            dirStats = keysMoved(s.dirStats), dirRows = keysMoved(s.dirRows),
+            dirBytes = keysMoved(s.dirBytes), dirLayout = keysMoved(s.dirLayout),
+            dirFiles = keysMoved(s.dirFiles)))
           val tmp = new Path(st.getPath.getParent,
             s".tmp-rename-${st.getPath.getName}")
           val out = fsys.create(tmp, false)

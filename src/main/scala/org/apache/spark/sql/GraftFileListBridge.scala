@@ -73,8 +73,9 @@ object GraftFileListBridge {
     classic.Dataset.ofRows(cs, LogicalRelation(rel, isStreaming = false))
   }
 
-  /** V2 ScanBuilder over explicit files — the listing-free twin of
-    * [[GraftParquetBridge.parquetScanBuilder]]. */
+  /** V2 ScanBuilder over explicit files under an explicit schema — the
+    * inner builder a manifest-resolving connector delegates to after it
+    * has pruned its file list. */
   def parquetScanBuilderFiles(spark: SparkSession,
       files: Seq[(String, Long)], schema: StructType): ScanBuilder =
     ParquetScanBuilder(spark, new StaticFileIndex(spark, statuses(files)),

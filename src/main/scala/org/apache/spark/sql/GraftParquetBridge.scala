@@ -5,10 +5,8 @@ import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.execution.datasources.DataSourceStrategy
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** Bridge into the `private[sql]` surface a DataSource V2 connector needs
   * to DELEGATE its data plane to Spark's own vectorized parquet scan
@@ -23,17 +21,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * `SparkScanBuilder`) keeps a package-located accessor like this one. */
 object GraftParquetBridge {
 
-  /** A `ScanBuilder` for an explicit parquet file-dir list under an
-    * explicit schema — the inner builder a manifest-resolving connector
-    * delegates to after it has pruned `paths`. */
-  def parquetScanBuilder(spark: SparkSession, paths: Seq[String],
-      schema: StructType): ScanBuilder = {
-    val options = new CaseInsensitiveStringMap(java.util.Collections.emptyMap())
-    ParquetTable("graft-snapshot", spark, options, paths, Some(schema),
-      classOf[ParquetFileFormat]).newScanBuilder(options)
-  }
-
-  /** Forward catalyst predicates into a [[parquetScanBuilder]] result so
+  /** Forward catalyst predicates into a parquet `ScanBuilder` so
     * parquet row-group/page statistics pruning engages; returns the
     * post-scan residue Spark must still evaluate. */
   def pushCatalystFilters(builder: ScanBuilder,

@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * ([[org.apache.spark.sql.GraftFileListBridge.StaticFileIndex]]).
   * The CONTENT correctness of every consumer is the existing suites'
   * job; this spec pins the mechanism itself — recording, carry-forward,
-  * byte agreement, and the fallback when lists are absent. */
+  * byte agreement, and the per-dir listing ([[SnapshotTable.filesOf]])
+  * when a dir's list is absent or malformed, under every reader. */
 class SnapshotFileListSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import graft.sources.SnapshotTable
@@ -120,13 +121,115 @@ class SnapshotFileListSpec extends AnyFunSuite {
       }
   }
 
-  test("coveredFiles reads a repeated dir once") {
+  test("filesOf reads a repeated dir once and lists a dir without a list") {
+    // the listing keeps only data files: `_` and `.` names and subdirs
+    // stay out
+    val d3 = java.nio.file.Files.createTempDirectory("graft_flist_dir")
+    Seq("p1.parquet" -> 6, "_SUCCESS" -> 0, ".p1.parquet.crc" -> 2,
+      "p0.parquet" -> 7).foreach { case (n, len) =>
+      java.nio.file.Files.write(d3.resolve(n), new Array[Byte](len)) }
+    java.nio.file.Files.createDirectory(d3.resolve("_sub"))
     val files = Map("/t/d1" -> Seq(("a.parquet", 3L), ("b.parquet", 4L)),
       "/t/d2" -> Seq(("c.parquet", 5L)))
-    assert(SnapshotTable.coveredFiles(Seq("/t/d1", "/t/d2", "/t/d1"), files) ===
-      Some(Seq(("/t/d1/a.parquet", 3L), ("/t/d1/b.parquet", 4L),
-        ("/t/d2/c.parquet", 5L))))
-    assert(SnapshotTable.coveredFiles(Seq("/t/d1", "/t/d3"), files) === None)
+    assert(SnapshotTable.filesOf(spark, Seq("/t/d1", "/t/d2", "/t/d1"),
+      files) === Seq(("/t/d1/a.parquet", 3L), ("/t/d1/b.parquet", 4L),
+        ("/t/d2/c.parquet", 5L)))
+    assert(SnapshotTable.filesOf(spark, Seq("/t/d1", d3.toString), files) ===
+      Seq(("/t/d1/a.parquet", 3L), ("/t/d1/b.parquet", 4L),
+        (s"$d3/p0.parquet", 7L), (s"$d3/p1.parquet", 6L)))
+  }
+
+  /** Corrupt the `files=` line of the first dir in `root`'s head
+    * manifest that `pick` accepts; returns that dir. */
+  private def corruptFileList(root: String)(pick: String => Boolean): String = {
+    val head = SnapshotTable.headOption(spark, root).get
+    val manifest = java.nio.file.Paths.get(root, "_manifests",
+      f"v${head.version}%08d.txt")
+    val lines = java.nio.file.Files.readAllLines(manifest)
+    val i = (0 until lines.size).find { j =>
+      val l = lines.get(j)
+      l.startsWith("files=") && pick(l.stripPrefix("files=").split("\t", 2)(0))
+    }.get
+    val dir = lines.get(i).stripPrefix("files=").split("\t", 2)(0)
+    lines.set(i, lines.get(i).replaceFirst(":(\\d+)", ":12x4"))
+    java.nio.file.Files.write(manifest, lines)
+    // the local filesystem's checksum sidecar would reject the edit
+    java.nio.file.Files.deleteIfExists(
+      manifest.resolveSibling(s".${manifest.getFileName}.crc"))
+    assert(!SnapshotTable.headOption(spark, root).get.dirFiles.contains(dir))
+    dir
+  }
+
+  private def sorted(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+
+  private def v2(root: String) = spark.read.format("graft-snapshot").load(root)
+
+  test("every reader returns the same rows with one dir's files= line " +
+    "corrupted: V1 read, readForKeys, V2 and merge-on-read scans") {
+    import spark.implicits._
+    val dir = tmp()
+    val rows = (0 until 60).map(i => (i.toLong, s"s$i")).toDF("k", "s")
+    SnapshotTable.create(rows, dir, Seq("k"), buckets = 4)
+    SnapshotTable.upsert(Seq((1L, "U1"), (2L, "U2"), (61L, "N61"))
+      .toDF("k", "s"), dir, mergeOnRead = true)
+    SnapshotTable.delete(Seq(3L, 4L).toDF("k"), dir, mergeOnRead = true)
+    val head = SnapshotTable.headOption(spark, dir).get
+    assert(head.deltas.map(_.kind).toSet === Set("rows", "tomb"))
+    val probe = (0L until 70L).toDF("k")
+    def readers = Seq(
+      "read" -> sorted(SnapshotTable.read(spark, dir)),
+      "readForKeys" -> sorted(SnapshotTable.readForKeys(probe, dir)),
+      "mor scan" -> sorted(v2(dir)))
+    assert(v2(dir).queryExecution.executedPlan.toString
+      .contains("merge-on-read ("))
+    val want = readers
+    assert(want.head._2.size === 59)
+    // one base dir, then one rows delta, then one tombstone delta
+    val rowsDir = head.deltas.find(_.kind == "rows").get.dir
+    val tombDir = head.deltas.find(_.kind == "tomb").get.dir
+    Seq[String => Boolean](head.entries.map(_._2).toSet, _ == rowsDir,
+      _ == tombDir).foreach { pick =>
+      val broken = corruptFileList(dir)(pick)
+      assert(readers === want, broken)
+    }
+    // the compacted table plans the plain V2 scan
+    SnapshotTable.compact(spark, dir)
+    val wantV2 = sorted(v2(dir))
+    assert(wantV2 === want.head._2)
+    corruptFileList(dir)(_ => true)
+    assert(sorted(v2(dir)) === wantV2)
+    assert(sorted(SnapshotTable.read(spark, dir)) === wantV2)
+  }
+
+  test("the positional scan and a CDF batch read return the same rows " +
+    "with one dir's files= line corrupted") {
+    import spark.implicits._
+    val kl = tmp()
+    SnapshotTable.create((0 until 30).map(i => (i.toLong, s"s$i"))
+      .toDF("k", "s"), kl, Seq.empty, buckets = 1)
+    SnapshotTable.deleteWhere(spark, kl, col("k") < 5L, mergeOnRead = true)
+    val posDir = SnapshotTable.headOption(spark, kl).get.deltas.head.dir
+    assert(v2(kl).queryExecution.executedPlan.toString
+      .contains("positional merge-on-read"))
+    val want = sorted(v2(kl))
+    assert(want.size === 25)
+    corruptFileList(kl)(_ == posDir)
+    assert(sorted(v2(kl)) === want)
+    assert(sorted(SnapshotTable.read(spark, kl)) === want)
+
+    val cf = tmp()
+    SnapshotTable.create((0 until 20).map(i => (i.toLong, s"s$i"))
+      .toDF("k", "s"), cf, Seq("k"), buckets = 2, changeFeed = true)
+    SnapshotTable.upsert(Seq((1L, "U1"), (30L, "N30")).toDF("k", "s"), cf)
+    def feed = sorted(spark.read.format("graft-snapshot")
+      .option("readChangeFeed", "true").option("startingVersion", 1)
+      .option("endingVersion", 2).load(cf))
+    val wantFeed = feed
+    assert(wantFeed.size === 20 + 3)
+    val cdc = SnapshotTable.headOption(spark, cf).get.cdc.get
+    corruptFileList(cf)(_ == cdc)
+    assert(feed === wantFeed)
   }
 
   test("symmetricDiff (readChanges) equals the exceptAll-pair spelling " +
