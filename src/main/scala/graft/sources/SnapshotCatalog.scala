@@ -53,8 +53,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   * Scale note: every catalog operation is O(manifests) driver metadata
   * (+ one directory listing for DDL); no data files are read or moved
-  * except by DROP (delete) and ALTER RENAME (one filesystem rename +
-  * an O(versions) manifest rewrite, see [[SnapshotTable.rename]]).
+  * except by DROP (delete) and ALTER RENAME (one filesystem rename:
+  * manifests record dirs relative to the table root, see
+  * [[SnapshotTable.rename]]).
   */
 class SnapshotCatalog extends TableCatalog with SupportsNamespaces
     with StagingTableCatalog

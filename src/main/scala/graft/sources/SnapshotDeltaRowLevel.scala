@@ -113,7 +113,7 @@ private[sources] class SnapshotDeltaWrite(root: String,
       snapshot.physicalSchema(snapshot.schemaDdl), snapshot.statsCols,
       snapshot.keys)
     private val posStats = new SnapshotWriteStats.Spec(
-      SnapshotDeltaRowLevel.posTombWriteSchema, Nil, Nil)
+      SnapshotTable.posTombSchema, Nil, Nil)
 
     override def createBatchWriterFactory(
         pInfo: PhysicalWriteInfo): DeltaWriterFactory =
@@ -122,7 +122,7 @@ private[sources] class SnapshotDeltaWrite(root: String,
         GraftParquetWriteBridge.rowFileWriterFactory(spark,
           snapshot.physicalSchema(snapshot.schemaDdl)),
         GraftParquetWriteBridge.rowFileWriterFactory(spark,
-          SnapshotDeltaRowLevel.posTombWriteSchema),
+          SnapshotTable.posTombSchema),
         SnapshotTable.boundPartExprs(spark, snapshot.schemaDdl,
           snapshot.partSpec))
 
@@ -172,13 +172,6 @@ private[sources] class SnapshotDeltaWrite(root: String,
 }
 
 private[sources] object SnapshotDeltaRowLevel {
-  /** On-disk tombstone schema: the bare position pair (the keyed
-    * deleteWhere layer also stores key columns for routing; readers
-    * project just the pair, so both spellings read identically). */
-  val posTombWriteSchema: StructType = new StructType()
-    .add(SnapshotTable.PosFileCol, org.apache.spark.sql.types.StringType)
-    .add(SnapshotTable.PosPosCol, org.apache.spark.sql.types.LongType)
-
   /** Physical bucket a tombstoned position belongs to: the `_gb=<b>`
     * segment of its commit-relative file suffix. For current-layout
     * files this IS the key-hash bucket; for historical-layout files it

@@ -130,13 +130,10 @@ private[graft] class SnapshotMorScan(snap: SnapshotTable.Snapshot,
     * columns (bucket routing) plus the `(file-suffix, row_index)` pair;
     * readers project just the pair. Never filter-pushed, never
     * column-mapped (tombstone columns are reserved names). */
-  private val posTombSchema: StructType = new StructType()
-    .add(SnapshotTable.PosFileCol, org.apache.spark.sql.types.StringType)
-    .add(SnapshotTable.PosPosCol, org.apache.spark.sql.types.LongType)
-
   private def posTombScan(paths: Seq[String]): Scan = {
-    val b = SnapshotTable.scanBuilderOf(paths, snap.dirFiles, posTombSchema)
-    GraftParquetBridge.pruneColumns(b, posTombSchema)
+    val b = SnapshotTable.scanBuilderOf(paths, snap.dirFiles,
+      SnapshotTable.posTombSchema)
+    GraftParquetBridge.pruneColumns(b, SnapshotTable.posTombSchema)
     GraftParquetBridge.buildScan(b)
   }
 
@@ -145,16 +142,6 @@ private[graft] class SnapshotMorScan(snap: SnapshotTable.Snapshot,
     s"graft-snapshot v${snap.version} merge-on-read " +
       s"(${baseEntries.size} base dirs, ${deltas.size} delta dirs" +
       (if (hasPos) s", ${posDeltas.size} pos tombstone dirs)" else ")")
-
-  private val SuffixRe = java.util.regex.Pattern.compile("(c\\d+-[^/]+/.*)$")
-
-  /** Stable commit-relative file suffix — the identity positional
-    * tombstones record ([[SnapshotTable.posFileOf]]'s driver twin). */
-  private def suffixOf(path: String): String = {
-    val m = SuffixRe.matcher(path)
-    require(m.find(), s"cannot derive a commit-relative suffix from $path")
-    m.group(1)
-  }
 
   /** Commit version encoded in a bucket-dir path (driver-side twin of
     * the read-path file parse; end-anchored so user path segments can't
@@ -221,7 +208,7 @@ private[graft] class SnapshotMorScan(snap: SnapshotTable.Snapshot,
             .toBatch.planInputPartitions()
           if (!hasPos) parts.toSeq.map(p => (seq, "", p))
           else GraftParquetBridge.splitPartitionsByFile(parts)
-            .map { case (f, p) => (seq, suffixOf(f), p) }
+            .map { case (f, p) => (seq, SnapshotTable.suffixOf(f), p) }
         }
       def perDirKeys(dirs: Seq[(Long, String)]): Seq[(Long, InputPartition)] =
         dirs.flatMap { case (seq, d) =>
@@ -555,10 +542,6 @@ private[graft] class SnapshotPosScan(snap: SnapshotTable.Snapshot,
     catalystFilters.filterNot(_.references.exists(
       a => IdentityNames(a.name)))
 
-  private val tombSchema: StructType = new StructType()
-    .add("_sdv_file", org.apache.spark.sql.types.StringType)
-    .add("_sdv_pos", org.apache.spark.sql.types.LongType)
-
   /** Manifest existence defaults in physical-name space — the only
     * default metadata allowed to reach the parquet plane: pre-add
     * base/delta files fill the frozen ADD COLUMN value per footer
@@ -610,14 +593,6 @@ private[graft] class SnapshotPosScan(snap: SnapshotTable.Snapshot,
     }
   }
 
-  private val SuffixRe = java.util.regex.Pattern.compile("(c\\d+-[^/]+/.*)$")
-
-  private def suffixOf(path: String): String = {
-    val m = SuffixRe.matcher(path)
-    require(m.find(), s"cannot derive a commit-relative suffix from $path")
-    m.group(1)
-  }
-
   override def toBatch: Batch = new Batch {
     override def planInputPartitions(): Array[InputPartition] = {
       val spark = SparkSession.active
@@ -630,14 +605,15 @@ private[graft] class SnapshotPosScan(snap: SnapshotTable.Snapshot,
         innerScan(baseEntries.map(_._2).distinct, withIdx, baseTblSchema,
           pushFilters = true).toBatch.planInputPartitions())
       if (perFile.isEmpty) return Array.empty
-      val tombParts = innerScan(posDeltas.map(_.dir), tombSchema,
-        tombSchema, pushFilters = false).toBatch.planInputPartitions()
+      val tomb = SnapshotTable.posTombSchema
+      val tombParts = innerScan(posDeltas.map(_.dir), tomb, tomb,
+        pushFilters = false).toBatch.planInputPartitions()
       val groups = math.max(1, math.min(perFile.size,
         spark.sparkContext.defaultParallelism * 2))
       perFile.zipWithIndex.groupBy(_._2 % groups).toSeq.sortBy(_._1)
         .map { case (_, fs) =>
           PosInputPartition(
-            fs.map { case ((f, p), _) => suffixOf(f) -> p },
+            fs.map { case ((f, p), _) => SnapshotTable.suffixOf(f) -> p },
             tombParts.toSeq): InputPartition
         }.toArray
     }
@@ -646,7 +622,8 @@ private[graft] class SnapshotPosScan(snap: SnapshotTable.Snapshot,
       new PosReaderFactory(
         innerScan(Seq.empty, withIdx, baseTblSchema, pushFilters = true)
           .toBatch.createReaderFactory(),
-        innerScan(Seq.empty, tombSchema, tombSchema, pushFilters = false)
+        innerScan(Seq.empty, SnapshotTable.posTombSchema,
+          SnapshotTable.posTombSchema, pushFilters = false)
           .toBatch.createReaderFactory(),
         joinedTypes, outBinds)
   }

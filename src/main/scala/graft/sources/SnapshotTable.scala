@@ -111,7 +111,9 @@ object SnapshotTable {
       dir: String)
 
   /** One published version: `entries` maps bucket id → data dirs
-    * (absolute), in commit order; `ts` is the commit wall-clock
+    * (absolute, spelled from the table root as the reader gave it;
+    * [[SnapshotManifest]] records them relative to it), in commit
+    * order; `ts` is the commit wall-clock
     * (driver millis at publish; 0 for pre-timestamp manifests);
     * `statsCols` are the columns every commit records data-skipping
     * stats for (fixed at [[create]]); `dirStats` maps data dir →
@@ -1026,9 +1028,13 @@ object SnapshotTable {
   private[graft] val manifestParses =
     new java.util.concurrent.atomic.AtomicLong
 
+  /** Decode the manifest at `p`, which lives at `<root>/_manifests/`
+    * in the root's spelling ([[listManifests]] names it so): its dirs
+    * resolve against that root. */
   private def parseManifest(fsys: FileSystem, p: Path, v: Long): Snapshot = {
     manifestParses.incrementAndGet()
-    SnapshotManifest.decode(readText(fsys, p), p.toString, v)
+    SnapshotManifest.decode(readText(fsys, p), p.getParent.getParent.toString,
+      p.toString, v)
   }
 
   /** A small metadata file's whole body as UTF-8 text. */
@@ -1177,7 +1183,8 @@ object SnapshotTable {
     * a single `listStatus` — the O(1)-RPC metadata read every resolution
     * path starts from. Scala regex pattern matching anchors the whole
     * name, so each line's listing is blind to the other lines' files,
-    * to checkpoints, and to hidden .tmp/.lock strays. */
+    * to checkpoints, and to hidden .tmp/.lock strays. Paths are spelled
+    * from `rootP`, not as the listing qualifies them. */
   private def listManifests(fsys: FileSystem, rootP: Path,
       line: Option[String]): ManifestListing = {
     val dir = manifestDir(rootP)
@@ -1194,12 +1201,11 @@ object SnapshotTable {
     val C = """ckpt\.v(\d{8,})\.txt""".r
     val vs = Seq.newBuilder[(Long, Path)]
     val cs = Seq.newBuilder[(Long, Path)]
-    fsys.listStatus(dir).foreach { st =>
-      st.getPath.getName match {
-        case V(n) => vs += ((n.toLong, st.getPath))
-        case C(n) if line.isEmpty => cs += ((n.toLong, st.getPath))
-        case _ => () // other lines' files, checkpoints, strays: invisible
-      }
+    fsys.listStatus(dir).map(_.getPath.getName).foreach {
+      case name @ V(n) => vs += ((n.toLong, new Path(dir, name)))
+      case name @ C(n) if line.isEmpty =>
+        cs += ((n.toLong, new Path(dir, name)))
+      case _ => () // other lines' files, checkpoints, strays: invisible
     }
     ManifestListing(vs.result().sortBy(_._1), cs.result().sortBy(_._1))
   }
@@ -1734,10 +1740,23 @@ object SnapshotTable {
     * from the commit-dir segment on, so scheme qualification
     * (`file:///` vs bare) of `_metadata.file_path` can never split the
     * identity of one physical file. */
+  private val PosSuffix = "(c\\d+-[^/]+/.*)$"
   private def posFileOf: org.apache.spark.sql.Column =
-    regexp_extract(col("_metadata.file_path"), "(c\\d+-[^/]+/.*)$", 1)
+    regexp_extract(col("_metadata.file_path"), PosSuffix, 1)
+  private val PosSuffixRe = java.util.regex.Pattern.compile(PosSuffix)
 
-  private def posTombSchema: StructType = new StructType()
+  /** [[posFileOf]]'s driver twin: the identity a positional tombstone
+    * records for the file at `path`. */
+  private[sources] def suffixOf(path: String): String = {
+    val m = PosSuffixRe.matcher(path)
+    require(m.find(), s"cannot derive a commit-relative suffix from $path")
+    m.group(1)
+  }
+
+  /** Positional tombstone columns: `(file suffix, row index)`. Writers
+    * store just this pair (the keyed deleteWhere layer adds the key
+    * columns for routing); readers project just the pair. */
+  private[sources] val posTombSchema: StructType = new StructType()
     .add(PosFileCol, org.apache.spark.sql.types.StringType)
     .add(PosPosCol, org.apache.spark.sql.types.LongType)
 
@@ -2010,21 +2029,6 @@ object SnapshotTable {
       .join(probe.drop(BucketCol), snap.keys, "left_semi")
   }
 
-  /** Change feed between two published versions, from manifest deltas:
-    * every row inserted or deleted in `(fromVersion, toVersion]`, tagged
-    * `_change_type` (`insert` | `delete`; an update surfaces as
-    * delete(old row) + insert(new row)) and `_commit_version`. Rows are
-    * read ONLY from the dirs each commit actually changed:
-    *   - `append` commits scan just their new dirs (pure inserts, zero
-    *     old data read);
-    *   - `upsert`/`delete`/`compact` commits diff only the buckets whose
-    *     dir list changed — old vs new content of the hit buckets;
-    *   - `create`/`overwrite` commits are whole-table diffs by nature.
-    * The diff is multiset-exact (`exceptAll`), so append-only tables
-    * with repeated rows report honest counts. Feeds straight into the
-    * [[graft.ops.Cdc]] apply side. Schema drift across the range is
-    * handled by reading every commit under ITS OWN manifest schema and
-    * unioning by name (missing columns backfill null). */
   /** Two-directional multiset diff in ONE aggregation — the
     * `new.exceptAll(old) ∪ old.exceptAll(new)` pair spelled as
     * union+group (guide §2.4: the pair computes each input subtree
@@ -2049,6 +2053,21 @@ object SnapshotTable {
       .drop(sign, rep)
   }
 
+  /** Change feed between two published versions, from manifest deltas:
+    * every row inserted or deleted in `(fromVersion, toVersion]`, tagged
+    * `_change_type` (`insert` | `delete`; an update surfaces as
+    * delete(old row) + insert(new row)) and `_commit_version`. Rows are
+    * read ONLY from the dirs each commit actually changed:
+    *   - `append` commits scan just their new dirs (pure inserts, zero
+    *     old data read);
+    *   - `upsert`/`delete`/`compact` commits diff only the buckets whose
+    *     dir list changed — old vs new content of the hit buckets;
+    *   - `create`/`overwrite` commits are whole-table diffs by nature.
+    * The diff is multiset-exact (`exceptAll`), so append-only tables
+    * with repeated rows report honest counts. Feeds straight into the
+    * [[graft.ops.Cdc]] apply side. Schema drift across the range is
+    * handled by reading every commit under ITS OWN manifest schema and
+    * unioning by name (missing columns backfill null). */
   def readChanges(spark: SparkSession, root: String,
       fromVersion: Long, toVersion: Long): DataFrame = {
     val (fsys, rootP) = fs(spark, root)
@@ -2381,6 +2400,10 @@ object SnapshotTable {
     Seq(walked, listed).map(c => (c.entries, c.files, c.bytes))
   }
 
+  /** Every leaf dir of a written commit dir, per bucket. Leaves are
+    * spelled `commitDir` + listed child names (never the qualified path
+    * a listing returns), so bucket and partition leaves share the
+    * root's spelling. */
   private def enumerateCommit(fsys: FileSystem, commitDir: Path,
       buckets: Int): CommitFiles = {
     val listed = Seq.newBuilder[(String, Seq[(String, Long)])]
@@ -2390,7 +2413,8 @@ object SnapshotTable {
       if (subs.isEmpty) {
         listed += d.toString -> dataFilesOf(st)
         Seq(d)
-      } else subs.sortBy(_.getPath.getName).flatMap(s => leaves(s.getPath))
+      } else subs.map(_.getPath.getName).sorted
+        .flatMap(n => leaves(new Path(d, n)))
     }
     val entries = (0 until buckets).flatMap { b =>
       val d = new Path(commitDir, s"$BucketCol=$b")
@@ -2533,7 +2557,7 @@ object SnapshotTable {
       line: Option[String] = None): Unit = {
     val target = manifestPath(root, snap.version, line)
     try storeFor(fsys).writeNoOverwrite(target,
-      SnapshotManifest.encode(snap).getBytes("UTF-8"))
+      SnapshotManifest.encode(snap, root.toString).getBytes("UTF-8"))
     catch {
       case e: ConcurrentCommitException =>
         throw new ConcurrentCommitException(
@@ -4200,13 +4224,20 @@ object SnapshotTable {
     v
   }
 
-  /** Move the table root. Manifests record ABSOLUTE data-dir paths, so
-    * a bare filesystem rename would strand every entry at the old
-    * location — after moving the directory this decodes each
-    * manifest, moves every dir it records to the new prefix, and
-    * re-encodes it ([[SnapshotManifest]]; atomic per file: tmp +
-    * rename). O(versions) driver metadata, ZERO data
-    * files moved beyond the one directory rename.
+  /** Move the table root: ONE directory rename, ZERO data files moved.
+    * Manifests record the dirs under the root relative to it
+    * ([[SnapshotManifest]]) and a shallow clone's source dirs as
+    * absolute paths, so every manifest stays valid at the new root
+    * byte for byte. Manifests written before relative dirs
+    * (`graft-snapshot-v1`: absolute paths only) are first re-encoded in
+    * place at the old root, each to the same snapshot (tmp + rename per
+    * file), so a crash at any point leaves a valid table at the old or
+    * the new path.
+    *
+    * A renamed clone's registration at its source ([[cloneTable]])
+    * keeps naming the clone's OLD root: the source's vacuum still
+    * protects the pinned version, and [[unregisterClone]] takes the old
+    * root to drop it.
     *
     * Single-writer operation: a commit racing the rename loses its
     * table out from under it (its writes land at the dead old root and
@@ -4217,46 +4248,29 @@ object SnapshotTable {
     val (_, newP) = fs(spark, newRoot)
     require(exists(spark, oldRoot), s"no snapshot table at $oldRoot")
     require(!fsys.exists(newP), s"rename target $newRoot already exists")
+    // main AND branch manifests; the v1 ones hold absolute dirs
+    val V = """(?:b\.[A-Za-z0-9][A-Za-z0-9._-]{0,127}\.)?v(\d{8,})\.txt""".r
+    val dir = manifestDir(oldP)
+    fsys.listStatus(dir).map(_.getPath.getName).foreach {
+      case name @ V(v) =>
+        val (p, tmp) = (new Path(dir, name), new Path(dir, s".tmp-$name"))
+        val text = readText(fsys, p)
+        val v2 = SnapshotManifest.encode(SnapshotManifest.decode(
+          text, oldP.toString, p.toString, v.toLong), oldP.toString)
+        if (v2 != text) {
+          val out = fsys.create(tmp, true)
+          try out.write(v2.getBytes("UTF-8")) finally out.close()
+          // POSIX rename replaces the target atomically; a store whose
+          // rename refuses an existing target takes delete + rename
+          require(fsys.rename(tmp, p) ||
+            fsys.delete(p, false) && fsys.rename(tmp, p),
+            s"manifest rewrite failed for $p")
+        }
+      case _ => () // checkpoints, locks, strays
+    }
     Option(newP.getParent).foreach(fsys.mkdirs)
     require(fsys.rename(oldP, newP),
       s"filesystem rename $oldRoot -> $newRoot failed")
-    // a dir is recorded as the root was given, or scheme-qualified (the
-    // commit walk's listed partition sub-dirs): each form keeps its own
-    val prefixes = Seq(oldP -> newP,
-      fsys.makeQualified(oldP) -> fsys.makeQualified(newP))
-      .map { case (o, n) => (o.toString + "/", n.toString + "/") }
-    def moved(dir: String): String = {
-      val hit = prefixes.find(p => dir.startsWith(p._1))
-      require(hit.nonEmpty, s"manifest entry $dir is not under " +
-        s"${prefixes.head._1} — mixed-root table, refusing a half-rename")
-      val (o, n) = hit.get
-      n + dir.drop(o.length)
-    }
-    // main AND branch manifests both carry absolute dir paths
-    val V = """(?:b\.[A-Za-z0-9][A-Za-z0-9._-]{0,127}\.)?v(\d{8,})\.txt""".r
-    fsys.listStatus(manifestDir(newP)).toSeq.foreach { st =>
-      st.getPath.getName match {
-        case V(v) =>
-          val s = SnapshotManifest.decode(readText(fsys, st.getPath),
-            st.getPath.toString, v.toLong)
-          def keysMoved[X](m: Map[String, X]) = m.map { case (d, x) => moved(d) -> x }
-          val rewritten = SnapshotManifest.encode(s.copy(
-            entries = s.entries.map { case (b, d) => b -> moved(d) },
-            deltas = s.deltas.map(d => d.copy(dir = moved(d.dir))),
-            cdc = s.cdc.map(moved),
-            dirStats = keysMoved(s.dirStats), dirRows = keysMoved(s.dirRows),
-            dirBytes = keysMoved(s.dirBytes), dirLayout = keysMoved(s.dirLayout),
-            dirFiles = keysMoved(s.dirFiles)))
-          val tmp = new Path(st.getPath.getParent,
-            s".tmp-rename-${st.getPath.getName}")
-          val out = fsys.create(tmp, false)
-          try out.write(rewritten.getBytes("UTF-8")) finally out.close()
-          fsys.delete(st.getPath, false)
-          require(fsys.rename(tmp, st.getPath),
-            s"manifest rewrite rename failed for ${st.getPath}")
-        case _ => () // locks/strays
-      }
-    }
   }
 
   /** Grow the table's bucket count WITHOUT rewriting a byte — the
@@ -4820,9 +4834,11 @@ object SnapshotTable {
     val maxKept = keep.map(_.version).max
     val branchSnaps = branchList(spark, root)
       .flatMap(b => versionsOn(spark, root, Some(b._1)))
+    // decoded dirs under the root are spelled from `rootP`, like the
+    // candidates below
     val referenced = (keep ++ branchSnaps)
       .flatMap(s => s.entries.map(_._2) ++ s.deltas.map(_.dir) ++ s.cdc)
-      .map(d => fsys.makeQualified(new Path(d)).toString).toSet
+      .toSet
     // a bucket dir is live if IT or any DESCENDANT is referenced —
     // z-order commits reference `_gb=b/_zs=k` slice dirs, so the
     // `_gb=b` parent must survive even though it is not itself an entry
@@ -4833,23 +4849,24 @@ object SnapshotTable {
     val CommitV = """c(\d+)-.*""".r
     val dataRoot = new Path(rootP, "data")
     var removedDirs = 0
-    if (fsys.exists(dataRoot)) fsys.listStatus(dataRoot).foreach { c =>
-      val sweepable = c.getPath.getName match {
+    if (fsys.exists(dataRoot)) fsys.listStatus(dataRoot).foreach { cs =>
+      val c = new Path(dataRoot, cs.getPath.getName)
+      val sweepable = c.getName match {
         case CommitV(v) => v.toLong <= maxKept // never an in-flight commit
         case _ => false
       }
       if (sweepable) {
-        fsys.listStatus(c.getPath).filter(_.isDirectory).foreach { b =>
-          if (!liveOrAncestor(fsys.makeQualified(b.getPath).toString)) {
-            fsys.delete(b.getPath, true)
+        fsys.listStatus(c).filter(_.isDirectory).foreach { bs =>
+          val b = new Path(c, bs.getPath.getName)
+          if (!liveOrAncestor(b.toString)) {
+            fsys.delete(b, true)
             removedDirs += 1
           }
         }
         // husk check on SUBDIRECTORIES: parquet job commits leave a
         // _SUCCESS marker file in every commit dir, so "no files at all"
         // never triggers — the dir is spent once no bucket dir remains
-        if (!fsys.listStatus(c.getPath).exists(_.isDirectory))
-          fsys.delete(c.getPath, true)
+        if (!fsys.listStatus(c).exists(_.isDirectory)) fsys.delete(c, true)
       }
     }
     (expire.size, removedDirs)

@@ -78,6 +78,29 @@ class SnapshotConcurrencySpec extends AnyFunSuite {
     assert(commitDirs(root) === referenced)
   }
 
+  test("a partitioned upsert rebases over a concurrent disjoint-bucket " +
+      "upsert: its staged partition leaves move with the commit dir") {
+    val root = freshRoot("partitioned")
+    def prows(ids: Seq[Long], tag: String) =
+      rows(ids, tag).withColumn("p", col("id") % 2L)
+    SnapshotTable.create(prows(0L until 64L, "base"), root, Seq("id"),
+      Buckets, partitionBy = Seq("p"))
+    val tap = Materialize.Tap(() => {
+      SnapshotTable.upsert(prows(Seq(idB), "B"), root) // wins version 2
+      ()
+    })
+    val v = SnapshotTable.upsert(prows(Seq(idA), "A"), root,
+      mat = tap, retries = 2)
+    assert(v === 3L)
+    val expect = asSet(rows(0L until 64L, "base")) -
+      ((idA, "base", idA * 10)) - ((idB, "base", idB * 10)) +
+      ((idA, "A", idA * 10)) + ((idB, "B", idB * 10))
+    assert(asSet(SnapshotTable.read(spark, root)) === expect)
+    val head = SnapshotTable.versions(spark, root).last
+    assert(head.entries.exists(_._2.contains("/data/c3-")))
+    assert(head.entries.forall(e => new java.io.File(e._2).isDirectory))
+  }
+
   test("upsert rebase is REFUSED when a concurrent commit rewrote a hit " +
       "bucket — same-key and same-bucket writers conflict loudly") {
     val root = freshRoot("conflict")

@@ -80,7 +80,8 @@ class SnapshotFileListSpec extends AnyFunSuite {
     val manifest = java.nio.file.Paths.get(dir, "_manifests", "v00000001.txt")
     val lines = java.nio.file.Files.readAllLines(manifest)
     val i = (0 until lines.size).find(lines.get(_).startsWith("files=")).get
-    val broken = lines.get(i).split("\t", 2)(0).stripPrefix("files=")
+    // manifests record dirs relative to the table root
+    val broken = s"$dir/" + lines.get(i).split("\t", 2)(0).stripPrefix("files=")
     // corrupt the length field of the first file entry of one dir
     lines.set(i, lines.get(i).replaceFirst(":(\\d+)", ":12x4"))
     java.nio.file.Files.write(manifest, lines)
@@ -146,11 +147,13 @@ class SnapshotFileListSpec extends AnyFunSuite {
     val manifest = java.nio.file.Paths.get(root, "_manifests",
       f"v${head.version}%08d.txt")
     val lines = java.nio.file.Files.readAllLines(manifest)
+    // manifests record dirs relative to the table root
+    def dirOf(l: String) = s"$root/" + l.stripPrefix("files=").split("\t", 2)(0)
     val i = (0 until lines.size).find { j =>
       val l = lines.get(j)
-      l.startsWith("files=") && pick(l.stripPrefix("files=").split("\t", 2)(0))
+      l.startsWith("files=") && pick(dirOf(l))
     }.get
-    val dir = lines.get(i).stripPrefix("files=").split("\t", 2)(0)
+    val dir = dirOf(lines.get(i))
     lines.set(i, lines.get(i).replaceFirst(":(\\d+)", ":12x4"))
     java.nio.file.Files.write(manifest, lines)
     // the local filesystem's checksum sidecar would reject the edit
