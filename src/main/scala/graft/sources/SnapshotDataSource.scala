@@ -65,7 +65,12 @@ class SnapshotDataSource extends TableProvider
     *     add-column evolution mid-stream; `txnAppId` overrides the
     *     dedup scope (default: the streaming query id, so a RESTARTED
     *     query — same checkpoint, same id — dedups across restarts);
-    *   - Complete output mode maps to an overwrite commit per batch. */
+    *   - Complete output mode maps to an overwrite commit per batch.
+    *
+    * The sink keeps `sqlContext.sparkSession`, the session that called
+    * `writeStream.start`, and commits every micro-batch there rather
+    * than in the per-run clone Spark executes the query in (see
+    * [[SnapshotSink]]). */
   override def createSink(sqlContext: org.apache.spark.sql.SQLContext,
       parameters: Map[String, String], partitionColumns: Seq[String],
       outputMode: org.apache.spark.sql.streaming.OutputMode):
@@ -76,7 +81,7 @@ class SnapshotDataSource extends TableProvider
     val path = parameters.getOrElse("path",
       throw new IllegalArgumentException(
         "graft-snapshot sink needs a path: .start(<table root>)"))
-    new SnapshotSink(path,
+    new SnapshotSink(sqlContext.sparkSession, path,
       parameters.map { case (k, v) => k.toLowerCase -> v }, outputMode)
   }
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
@@ -152,8 +157,24 @@ class SnapshotDataSource extends TableProvider
   }
 }
 
-/** See [[SnapshotDataSource.createSink]]. */
-private[graft] class SnapshotSink(path: String, opts: Map[String, String],
+/** See [[SnapshotDataSource.createSink]] for the options.
+  *
+  * Every micro-batch commits in `spark`, the session that started the
+  * query, not in the clone the micro-batch arrives in. Spark runs each
+  * start of a query (each `Trigger.AvailableNow` run) in a fresh
+  * `cloneSession()` with its own session UUID; with artifact isolation
+  * on (the default) each UUID gets its own executor class loader, and
+  * the generated-code cache is keyed by that loader, so a commit in the
+  * clone would compile every generated class of the commit again on
+  * each run. In `spark` all runs of the query share one loader and one
+  * warm cache.
+  *
+  * The commit (the existence check, the `txn` watermark, the write and
+  * auto-compaction) is planned under `spark`'s SQL conf as it is when
+  * the batch runs, not under the clone's copy taken at query start. The
+  * table content a batch produces does not depend on that conf. */
+private[graft] class SnapshotSink(spark: SparkSession, path: String,
+    opts: Map[String, String],
     outputMode: org.apache.spark.sql.streaming.OutputMode)
     extends org.apache.spark.sql.execution.streaming.Sink {
   import org.apache.spark.sql.streaming.OutputMode
@@ -185,11 +206,10 @@ private[graft] class SnapshotSink(path: String, opts: Map[String, String],
 
   override def addBatch(batchId: Long,
       data0: org.apache.spark.sql.DataFrame): Unit = {
-    // the harness hands a streaming-flagged frame; re-wrap its executed
-    // plan as a batch frame (the ForeachBatchSink recipe) so the object
-    // API's writes can run on it
-    val data = org.apache.spark.sql.GraftSqlBridge.unStream(data0)
-    val spark = data.sparkSession
+    // the harness hands a streaming-flagged frame of the query's clone;
+    // re-wrap its executed plan as a batch frame of the starting session
+    // (the ForeachBatchSink recipe) so the object API's writes run on it
+    val data = org.apache.spark.sql.GraftSqlBridge.unStream(data0, spark)
     // dedup scope: the streaming query id (stable across restarts from
     // one checkpoint) unless the caller pins its own app id
     val appId = opts.getOrElse("txnappid",

@@ -206,12 +206,22 @@ private[graft] object SnapshotManifest {
   /** The part of `dir` below `root`, if it lies there. When
     * exactly one of the two is scheme-qualified (`file:/t/…` against
     * `/t`, or the reverse) their URI paths are compared; two different
-    * schemes never match. */
+    * schemes never match. A relative root is also compared in its
+    * absolute form against the working directory, as the local
+    * filesystem resolves it: v1 recorded the partition leaves of a
+    * table written through a relative root as `file:/<cwd>/<root>/…`. */
   private def below(root: String, dir: String): Option[String] = {
     def path(p: String) = if (hasScheme(p)) new Path(p).toUri.getPath else p
-    val (r, d) = if (hasScheme(root) == hasScheme(dir)) (root, dir)
-      else (path(root), path(dir))
-    Option.when(d.startsWith(r + "/"))(d.substring(r.length + 1))
+    def under(root: String) = {
+      val (r, d) = if (hasScheme(root) == hasScheme(dir)) (root, dir)
+        else (path(root), path(dir))
+      Option.when(d.startsWith(r + "/"))(d.substring(r.length + 1))
+    }
+    under(root).orElse {
+      val relative = !root.startsWith("/") && !hasScheme(root)
+      Option.when(relative)(java.nio.file.Paths.get(root).toAbsolutePath
+        .normalize.toString).flatMap(under)
+    }
   }
 
   /** Does `p` start with a URI scheme (`file:`, `hdfs:`)? */

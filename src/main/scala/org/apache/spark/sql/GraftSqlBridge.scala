@@ -18,15 +18,17 @@ object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
 
   /** Re-wrap a streaming micro-batch DataFrame (as handed to
-    * `Sink.addBatch`) as a BATCH DataFrame over the same executed plan —
-    * the ForeachBatchSink recipe (`isStreaming` would otherwise refuse
-    * `df.write` inside a sink). The wrapped frame re-runs the physical
-    * RDD on each action; materialize once downstream if acting twice. */
-  def unStream(df: DataFrame): DataFrame = {
-    val classicDf = df.asInstanceOf[classic.Dataset[Row]]
-    classicDf.sparkSession.internalCreateDataFrame(
-      classicDf.queryExecution.toRdd, df.schema, isStreaming = false)
-  }
+    * `Sink.addBatch`) as a BATCH DataFrame of `session` over the same
+    * executed plan — the ForeachBatchSink recipe (`isStreaming` would
+    * otherwise refuse `df.write` inside a sink). `session` need not be
+    * the micro-batch's own (the query's clone): jobs of the returned
+    * frame carry `session`'s artifact state. The wrapped frame re-runs
+    * the physical RDD on each action; materialize once downstream if
+    * acting twice. */
+  def unStream(df: DataFrame, session: SparkSession): DataFrame =
+    session.asInstanceOf[classic.SparkSession].internalCreateDataFrame(
+      df.asInstanceOf[classic.Dataset[Row]].queryExecution.toRdd, df.schema,
+      isStreaming = false)
 
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 }

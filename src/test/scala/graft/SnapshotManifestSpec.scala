@@ -376,14 +376,32 @@ class SnapshotManifestSpec extends AnyFunSuite {
   }
 
   /** `text`, a v2 manifest of the table at `root`, as the v1 format
-    * spelled it: every dir absolute, partition leaves scheme-qualified. */
+    * spelled it: every dir absolute, partition leaves scheme-qualified
+    * against the working directory. */
   private def v1Spelling(text: String, root: String, v: Long): String =
     SnapshotManifest.encode(SnapshotManifest.decode(text, root, "m", v),
       "/elsewhere").split("\n").map {
       case SnapshotManifest.Header => "graft-snapshot-v1"
-      case l if l.contains("/_pt0=") => l.replace(s"$root/", s"file:$root/")
+      case l if l.contains("/_pt0=") =>
+        l.replace(s"$root/", s"file:${absolute(root)}/")
       case l => l
     }.mkString("", "\n", "\n")
+
+  private def absolute(p: String): String =
+    java.nio.file.Paths.get(p).toAbsolutePath.normalize.toString
+
+  /** Swap every manifest of the table at `root` for its v1 spelling;
+    * returns the v2 manifests it replaced. */
+  private def toV1(root: String): Seq[(String, Long, String)] = {
+    val v2 = manifests(root)
+    v2.foreach { case (n, v, text) =>
+      val f = manifestPath(root, n)
+      java.nio.file.Files.write(f, v1Spelling(text, root, v).getBytes("UTF-8"))
+      // the local filesystem's checksum sidecar would reject the edit
+      java.nio.file.Files.deleteIfExists(f.resolveSibling(s".$n.crc"))
+    }
+    v2
+  }
 
   test("a table with v1 manifests renames: each is re-encoded to the v2 " +
     "bytes at the old root, then the moved table reads the same") {
@@ -391,13 +409,7 @@ class SnapshotManifestSpec extends AnyFunSuite {
     val (from, to) = (s"$base/old/t", s"$base/new/t")
     mixedTable(from)
     val want = contents(from)
-    val v2 = manifests(from)
-    v2.foreach { case (n, v, text) =>
-      val f = manifestPath(from, n)
-      java.nio.file.Files.write(f, v1Spelling(text, from, v).getBytes("UTF-8"))
-      // the local filesystem's checksum sidecar would reject the edit
-      java.nio.file.Files.deleteIfExists(f.resolveSibling(s".$n.crc"))
-    }
+    val v2 = toV1(from)
     val v1 = manifests(from)
     assert(v1.forall(_._3.startsWith("graft-snapshot-v1\n")))
     assert(v1.forall(_._3.contains(s"\tfile:$from/data/")))
@@ -405,5 +417,45 @@ class SnapshotManifestSpec extends AnyFunSuite {
     SnapshotTable.rename(spark, from, to)
     assert(manifests(to) === v2)
     assert(contents(to) === want)
+  }
+
+  test("a v1 partitioned table written through a relative root: decode " +
+    "spells its qualified partition leaves from the root, vacuum keeps " +
+    "them, and rename moves them") {
+    // the v1 writer qualified partition leaves against its working
+    // directory: `file:/<cwd>/w/t/…` beside bare `w/t/…` bucket leaves
+    val relGolden = goldenV1
+      .replace(s"file:$GoldenRoot/", s"file:${absolute("w/t")}/")
+      .replaceAll("(?<=[=\t])" + java.util.regex.Pattern.quote(GoldenRoot + "/"),
+        "w/t/")
+    val rel = SnapshotManifest.decode(relGolden, "w/t", "rel", 4L)
+    assert(rel.entries.map(_._2) === Seq("w/t/data/c1-0a1b2c3d4e5f/_gb=0",
+      "w/t/data/c3-9f2c41d07a1b/_gb=1/_pt0=2",
+      "/src/t/data/c1-77aa88bb99cc/_gb=1"))
+    assert(rel.deltas.map(_.dir) ===
+      Seq("w/t/data/c3-9f2c41d07a1b/_gb=0/_pt0=1"))
+    assert(SnapshotManifest.encode(rel, "w/t") === SnapshotManifest.encode(
+      SnapshotManifest.decode(goldenV1, GoldenRoot, "golden", 4L), GoldenRoot))
+
+    // a table at a relative root, under the build's `target/` dir
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get("target"))
+    val base = java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get("target"), "graft_relroot")
+    try {
+      val root = s"$base/t"
+      assert(!root.startsWith("/"))
+      SnapshotTable.create(rows(0 until 30, "a"), root, Seq("id"),
+        buckets = 2, partitionBy = Seq("p"))
+      SnapshotTable.upsert(rows(0 until 3, "u"), root)
+      val want = sortedRows(SnapshotTable.read(spark, root))
+      val v2 = toV1(root)
+      assert(manifests(root).forall(_._3.contains(s"\tfile:${absolute(root)}/")))
+      assert(SnapshotTable.vacuum(spark, root, keepVersions = 10) === (0, 0))
+      assert(sortedRows(SnapshotTable.read(spark, root)) === want)
+      val to = s"${tmp()}/moved/t"
+      SnapshotTable.rename(spark, root, to)
+      assert(manifests(to) === v2)
+      assert(sortedRows(SnapshotTable.read(spark, to)) === want)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(base.toFile)
   }
 }

@@ -539,7 +539,7 @@ class SnapshotV2Spec extends AnyFunSuite {
     // at most the uncheckpointed tail — NEVER a parse of every
     // manifest (the 8,640-opens/day streaming-resume hazard).
     val appId = snaps.head.txn.get._1
-    val sink = new SnapshotSink(root,
+    val sink = new SnapshotSink(spark, root,
       Map("op" -> "upsert", "txnappid" -> appId),
       org.apache.spark.sql.streaming.OutputMode.Append())
     val parses0 = SnapshotTable.manifestParses.get()

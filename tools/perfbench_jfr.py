@@ -12,27 +12,28 @@ Java Flight Recorder with the `profile` settings, and prints:
   for every kind, and the spawns outside any traced operation (set-up and
   the untraced half);
 - the spawned commands by name;
-- the top frames of `jdk.ExecutionSample` on executor task threads during
-  the traced half.
+- the top frames of `jdk.ExecutionSample` during the traced half, on
+  executor task threads and on the client threads (`main`, which drives
+  the workload, and each `stream execution thread`, which plans and
+  commits micro-batches).
 
 The JVM command line is the benchmark's own (`java_cmd` in the tree's
 perfbench/run.py) plus the recording flag. The recording and the span trace
 stay in <tree>/.bench_work/jfr-<workload>-<seed>/.
 """
-import bisect
 import collections
-import json
 import os
 import re
-import shutil
 import subprocess
 import sys
 from pathlib import Path
 
-sys.dont_write_bytecode = True  # leave nothing beside the tree's sources
+sys.dont_write_bytecode = True  # leave nothing beside the sources
+import perfbench_traced  # noqa: E402  (after the flag above)
 
 DAY_MS = 86400000
-EXECUTOR_THREAD = "Executor task launch worker"
+THREAD_GROUPS = (("executor", ('"Executor task launch worker',)),
+                 ("client", ('"main"', '"stream execution thread')))
 TOP_FRAMES = 15
 
 
@@ -54,38 +55,16 @@ def jfr_events(rec: Path, event: str):
 
 
 def main() -> None:
-    if len(sys.argv) not in (3, 4):
-        raise SystemExit(__doc__)
-    tree = Path(sys.argv[1]).resolve()
-    workload = sys.argv[2]
-    seed = int(sys.argv[3]) if len(sys.argv) == 4 else 1
-    sys.path.insert(0, str(tree / "perfbench"))
-    import run as bench  # the tree's perfbench/run.py
+    tree, workload, seed = perfbench_traced.args(__doc__)
 
-    bench.build.build()
-    work = tree / ".bench_work" / f"jfr-{workload}-{seed}"
-    shutil.rmtree(work, ignore_errors=True)
-    (work / "tmp").mkdir(parents=True)
+    def record(cmd, work):
+        cmd.insert(1, f"-XX:StartFlightRecording=filename={work / 'rec.jfr'},settings=profile")
+        return cmd
+
+    work, res, trace = perfbench_traced.run(tree, workload, seed, "jfr", record)
     rec = work / "rec.jfr"
-    cmd = bench.java_cmd(work, "run", "--workload", workload, "--seed", str(seed), "--seconds", "8",
-                         "--trace", "1", "--work", str(work), "--out", str(work / "result.json"))
-    cmd.insert(1, f"-XX:StartFlightRecording=filename={rec},settings=profile")
-    subprocess.run(cmd, cwd=tree, stdout=sys.stderr, timeout=900, check=True)
-    res = json.loads((work / "result.json").read_text())
-    trace = json.loads((work / f"trace-{workload}-{seed}.json").read_text())
-    shutil.rmtree(work / "spark-local", ignore_errors=True)
-    shutil.rmtree(work / "tmp", ignore_errors=True)
-
-    ops = sorted((s["start_ms"] % DAY_MS, s["end_ms"] % DAY_MS, s["name"][3:])
-                 for s in trace["spans"] if s["parent"] == -1 and s["name"].startswith("op."))
-    if not ops:
-        raise SystemExit("the trace holds no operation spans")
-    starts = [o[0] for o in ops]
+    ops, op_at = perfbench_traced.op_spans(trace, lambda ms: ms % DAY_MS)
     lo, hi = ops[0][0], max(o[1] for o in ops)
-
-    def op_at(t):
-        i = bisect.bisect_right(starts, t) - 1
-        return ops[i][2] if i >= 0 and t <= ops[i][1] else None
 
     n_ops = collections.Counter(o[2] for o in ops)
     spawns = collections.Counter()
@@ -104,14 +83,19 @@ def main() -> None:
     print(f"  {'outside traced ops':20s} {'':5s} {spawns[None]:7d}")
     print("spawned commands: " + (", ".join(f"{c}={n}" for c, n in commands.most_common()) or "none"))
 
-    frames = collections.Counter()
+    frames = {group: collections.Counter() for group, _ in THREAD_GROUPS}
     for t, f in jfr_events(rec, "jdk.ExecutionSample"):
-        if f.get("sampledThread", "").startswith(f'"{EXECUTOR_THREAD}') and (lo <= t <= hi or hi < lo):
-            frames[re.sub(r"\s+line: \d+$", "", f["frame"])] += 1
-    total = sum(frames.values())
-    print(f"top executor-thread frames (jdk.ExecutionSample, traced half, {total} samples)")
-    for frame, n in frames.most_common(TOP_FRAMES):
-        print(f"  {100.0 * n / total:5.1f}%  {frame}")
+        if not (lo <= t <= hi or hi < lo):
+            continue
+        thread = f.get("sampledThread", "")
+        for group, prefixes in THREAD_GROUPS:
+            if thread.startswith(prefixes):
+                frames[group][re.sub(r"\s+line: \d+$", "", f["frame"])] += 1
+    for group, _ in THREAD_GROUPS:
+        total = sum(frames[group].values())
+        print(f"top {group}-thread frames (jdk.ExecutionSample, traced half, {total} samples)")
+        for frame, n in frames[group].most_common(TOP_FRAMES):
+            print(f"  {100.0 * n / total:5.1f}%  {frame}")
 
 
 if __name__ == "__main__":
