@@ -9,11 +9,12 @@ import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionRead
 import org.apache.spark.sql.types.StructType
 
 /** Resolution-aware DSv2 scan for snapshots that carry unresolved
-  * merge-on-read deltas — the connector half of
-  * [[SnapshotTable.resolvedRead]]'s event replay, so SQL readers (and
-  * everything else that arrives through `spark.read.format /
-  * SnapshotCatalog`) see resolved content instead of a refusal. The
-  * "reader supports format-v2 deletes" step, in Iceberg terms.
+  * merge-on-read deltas — the one key-event replay of the format: SQL
+  * readers (everything that arrives through `spark.read.format /
+  * SnapshotCatalog`) and the object API's reads and prior-state reads
+  * ([[SnapshotTable.resolvedRead]] sends its delta-bearing buckets
+  * here) all see resolved content through it. The "reader supports
+  * format-v2 deletes" step, in Iceberg terms.
   *
   * Plan shape:
   *   - buckets WITHOUT deltas plan exactly like [[SnapshotScan]]: the
@@ -54,8 +55,8 @@ import org.apache.spark.sql.types.StructType
   * column and are split per file, and each replay partition drains its
   * buckets' recorded `(file-suffix, row_index)` pairs into a dead-set
   * consulted BEFORE event replay — a position-tombstoned delta row
-  * contributes no event, mirroring [[SnapshotTable.resolvedRead]]'s
-  * anti-join-then-replay order. Buckets whose only deltas are
+  * contributes no event (its key's superseded versions were tombstoned
+  * by the same delete commit). Buckets whose only deltas are
   * positional still pay the replay-partition shape here (empty event
   * side, dead-set only); a table with NO event deltas routes to the
   * cheaper [[SnapshotPosScan]] instead. */
@@ -454,8 +455,9 @@ private[graft] class MorPartitionReader(part: MorInputPartition,
 }
 
 /** Resolution-aware DSv2 scan for snapshots whose ONLY deltas are
-  * positional (deletion-vector) — the connector half of the
-  * `kind = "pos"` replay in [[SnapshotTable.resolvedRead]]: a row lives
+  * positional (deletion-vector) — the one `kind = "pos"` replay of the
+  * format, for SQL readers and [[SnapshotTable.resolvedRead]] alike,
+  * and the source of the row-identity columns: a row lives
   * unless some retained pos delta recorded its physical
   * `(file-suffix, row_index)`. Keyless tables always land here; KEYED
   * tables land here when no event deltas are pending (the common

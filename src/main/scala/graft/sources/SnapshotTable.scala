@@ -106,7 +106,7 @@ object SnapshotTable {
     * rows (`kind = "rows"`, the upsert-mor batch) or of key-only
     * tombstones (`kind = "tomb"`, the delete-mor batch), stamped with
     * the version (`seq`) of the commit that wrote it — the event order
-    * read-side resolution replays ([[SnapshotTable.resolvedRead]]). */
+    * every reader replays, partition-locally ([[SnapshotMorScan]]). */
   final case class DeltaEntry(bucket: Int, seq: Long, kind: String,
       dir: String)
 
@@ -1726,16 +1726,6 @@ object SnapshotTable {
     }
   }
 
-  /** Commit version of the dir that produced a row, parsed from the
-    * END-ANCHORED `c{v}-{uuid}/_gb={b}[/_zs={k}]/file` tail of
-    * `input_file_name()` — anchoring at the end makes a user root that
-    * happens to contain a `c<digits>-` segment harmless, and scheme
-    * qualification (file:/ vs bare) can't break a suffix match. */
-  private def fileCommitVersion =
-    regexp_extract(input_file_name(),
-      s"c(\\d+)-[^/]+/$BucketCol=\\d+(?:/[^/]+=[^/]+)*/[^/]+$$", 1)
-      .cast("long")
-
   /** Stable file identity for positional tombstones: the path suffix
     * from the commit-dir segment on, so scheme qualification
     * (`file:///` vs bare) of `_metadata.file_path` can never split the
@@ -1780,171 +1770,86 @@ object SnapshotTable {
           col("_metadata.row_index").as(PosPosCol)): _*)
   }
 
-  /** Resolved content of a pos-delta-bearing (keyless) snapshot WITH
-    * the position identity columns — what [[deleteWhere]] matches new
-    * tombstones against, so re-deleting an already-deleted position is
-    * impossible by construction. */
+  /** `snap` through the snapshot connector, as SQL readers see it: one
+    * `DataSourceV2Relation` over a [[SnapshotV2Table]] pinned to `snap`.
+    * [[SnapshotScanBuilder]] routes a snapshot with key-event deltas to
+    * [[SnapshotMorScan]] and one with only positional deltas (or a read
+    * of the row-identity columns) to [[SnapshotPosScan]], so every
+    * merge-on-read replay runs partition-locally in those readers. */
+  private def connectorRead(spark: SparkSession, snap: Snapshot): DataFrame =
+    org.apache.spark.sql.GraftSqlBridge.ofRows(spark,
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+        .create(new SnapshotV2Table("", snap), None, None))
+
+  /** Resolved content of a keyless snapshot WITH the position identity
+    * columns that [[SnapshotPosScan]] synthesizes — what [[deleteWhere]]
+    * matches new tombstones against, so re-deleting an already-deleted
+    * position is impossible by construction. */
   private def resolvedReadWithPos(spark: SparkSession,
-      snap: Snapshot): DataFrame = {
-    val base = readEntriesWithPos(spark, snap.schemaDdl, snap.colMap,
-      snap.entries.map(_._2), snap.existsDefaults, snap.dirFiles)
-    val posDs = snap.deltas.filter(_.kind == "pos")
-    if (posDs.isEmpty) base
-    else base.join(
-      parquetDirs(spark, posTombSchema, posDs.map(_.dir), snap.dirFiles),
-      Seq(PosFileCol, PosPosCol), "left_anti")
-  }
+      snap: Snapshot): DataFrame =
+    connectorRead(spark, snap).select((StructType.fromDDL(snap.schemaDdl)
+      .fieldNames :+ PosFileCol :+ PosPosCol).map(col).toIndexedSeq: _*)
 
   /** Resolution-aware read of a snapshot restricted to `buckets` (None =
-    * whole table): merge-on-read deltas are replayed per key in commit
-    * order, exactly reproducing what the merge-on-write spelling of the
-    * same commits would have produced.
+    * whole table) under the schema `ddl` (the snapshot's own, or a
+    * commit schema that adds columns to it, which read as null).
     *
-    * Replay rule — a row (base file row or delta replacement row) from
-    * commit seq `s` survives iff its key has NO delta event with seq
-    * greater than `s`. That one rule covers every interleaving: a
-    * tombstone kills everything older and nothing newer; a replacement
-    * row shadows all older rows of its key (including multiple base
-    * copies a blind append left behind) but coexists with a LATER blind
-    * append of the same key, which is precisely what merge-on-write
-    * produces for upsert-then-append.
+    * Buckets WITHOUT deltas of any kind stream straight through a
+    * parquet scan of their dirs with zero added work. Buckets holding
+    * any delta (`rows`, `tomb` or `pos`) — with every entry that covers
+    * one of them, historical layouts included — are read through the
+    * connector ([[connectorRead]]) over the snapshot narrowed to just
+    * those entries and deltas, so their replay is the one the SQL
+    * readers run: per bucket, inside the partition, never a shuffle or
+    * a join ([[SnapshotMorScan]] for key events, [[SnapshotPosScan]] for
+    * positions). A row from commit `s` survives iff no delta event of
+    * its key is newer than `s` and no positional tombstone names it: a
+    * tombstone kills every older copy of its key and nothing newer, a
+    * replacement row shadows the blind-append copies before it and
+    * coexists with those after it — exactly what the merge-on-write
+    * spelling of the same commits would have produced.
     *
-    * Cost shape (the 100 TB audit): buckets WITHOUT deltas stream
-    * straight through with zero added work; delta-bearing buckets pay
-    * one aggregation over the DELTA rows only (small: the un-compacted
-    * batches) plus two joins of base against that small per-key event
-    * table — the broadcast-join cost profile of Delta's deletion-vector
-    * reads, never a shuffle of the base data by key. Compaction
-    * ([[compact]]) restores the zero-overhead path. */
+    * Clean buckets stay on the plain file scan because the connector
+    * plans one keyed partition per bucket: on a compacted 16-bucket
+    * table that is 16 tasks where the file scan packs 4, about 1.7×
+    * the read time. Compaction ([[compact]]) returns every bucket to
+    * the clean path. */
   private def resolvedRead(spark: SparkSession, snap: Snapshot,
       buckets: Option[Set[Int]], ddl: String): DataFrame = {
-    // positional (deletion-vector) deltas: a row lives unless some
-    // retained pos delta recorded its (file, pos). Physical identities
-    // are immutable and set-like (ordering between pos commits is
-    // irrelevant; duplicates are idempotent), so replay is one anti-join
-    // of the physical reads against the SMALL tombstone side — the
-    // Delta deletion-vector read shape, never a shuffle of the base by
-    // key. Keyless tables carry ONLY pos deltas; keyed tables may mix
-    // pos with rows/tomb event kinds ([[deleteWhere]] merge-on-read
-    // layered over pending upserts), in which case the anti-join runs
-    // BEFORE event replay on every physical read — base groups and
-    // rows-delta frames alike — so a tombstoned delta winner's event
-    // dies with it (its superseded versions are tombstoned by the same
-    // commit; see the keyed deleteWhere harvest).
-    val posDs = snap.deltas.filter(_.kind == "pos")
-    if (posDs.nonEmpty && snap.keys.isEmpty) {
-      require(posDs.size == snap.deltas.size,
-        s"corrupt manifest: keyed delta kinds on a keyless table " +
-          s"(kinds=${snap.deltas.map(_.kind).distinct})")
-      val sel = buckets match {
-        case Some(st) => snap.entries.filter(e => snap.entryHit(e, st))
-        case None => snap.entries
-      }
-      val outCols = StructType.fromDDL(ddl).fieldNames.map(col).toIndexedSeq
-      return readEntriesWithPos(spark, ddl, snap.colMap, sel.map(_._2),
-          snap.existsDefaults, snap.dirFiles)
-        .join(parquetDirs(spark, posTombSchema, posDs.map(_.dir),
-            snap.dirFiles),
-          Seq(PosFileCol, PosPosCol), "left_anti")
-        .select(outCols: _*)
-    }
-    // keyed physical read: with pos tombstones present every data read
-    // (base dirs and rows-delta dirs) anti-joins them away first. The
-    // commit-version column (when a caller needs it for replay) is
-    // derived BEFORE the anti-join — from the already-projected
-    // [[PosFileCol]] suffix on the pos path, because input_file_name()
-    // is undefined on the far side of an exchange.
-    val outCols0 = StructType.fromDDL(ddl).fieldNames.map(col).toIndexedSeq
-    def readData(dirs: Seq[String], seqCol: Option[String]): DataFrame =
-      if (posDs.isEmpty) {
-        val df = readEntries(spark, ddl, snap.colMap, dirs,
-          snap.existsDefaults, snap.dirFiles)
-        seqCol.fold(df)(c => df.withColumn(c, fileCommitVersion))
-      } else {
-        val withPos = readEntriesWithPos(spark, ddl, snap.colMap, dirs,
-          snap.existsDefaults, snap.dirFiles)
-        val stamped = seqCol.fold(withPos)(c => withPos.withColumn(c,
-          regexp_extract(col(PosFileCol), "^c(\\d+)-", 1).cast("long")))
-        stamped.join(parquetDirs(spark, posTombSchema, posDs.map(_.dir),
-            snap.dirFiles),
-            Seq(PosFileCol, PosPosCol), "left_anti")
-          .select(outCols0 ++ seqCol.map(col).toSeq: _*)
-      }
-    val sel: Int => Boolean = b => buckets.forall(_.contains(b))
-    // selection and row filtering are in CURRENT-layout bucket space;
-    // entries written under a historical layout (post-rescale, before
-    // migration) are selected when they can HOLD a selected bucket's
-    // keys and their surplus rows (old-bucket siblings outside the
-    // selection) are filtered out exactly, so resolvedRead(S) returns
-    // precisely the rows whose current bucket is in S at any layout mix
+    val schema = StructType.fromDDL(ddl)
+    // selection is in CURRENT-layout bucket space; entries written
+    // under a historical layout (post-rescale, before migration) are
+    // selected when they can HOLD a selected bucket's keys, and their
+    // surplus rows (old-bucket siblings outside the selection) are
+    // filtered out exactly, so resolvedRead(S) returns precisely the
+    // rows whose current bucket is in S at any layout mix
+    val selected = buckets.fold(snap.entries)(s =>
+      snap.entries.filter(e => snap.entryHit(e, s)))
     val exactFilter: Option[org.apache.spark.sql.Column] = buckets
       .filter(_ => snap.keys.nonEmpty && snap.mixedLayout)
       .map(s => bucketOf(snap.keys, snap.buckets).isin(s.toSeq: _*))
-    val SeqCol = "_mor_seq"
-    val MaxCol = "_mor_max"
-    def readGroups(es: Seq[(Int, String)],
-        seqCol: Option[String] = None): DataFrame = {
-      val groups = es.groupBy(e => snap.layoutOf(e._2)).toSeq.sortBy(_._1)
-      if (groups.isEmpty)
-        emptyDf(spark, seqCol.foldLeft(StructType.fromDDL(ddl))(
-          (s, c) => s.add(c, org.apache.spark.sql.types.LongType)))
-      else groups.map { case (l, ge) =>
-        val df = readData(ge.map(_._2), seqCol)
-        if (l == snap.buckets) df
-        else exactFilter.fold(df)(df.filter)
-      }.reduce(_.unionByName(_))
-    }
-    // pos deltas never force the event replay: buckets whose only
-    // deltas are positional stay on the clean path (the anti-join in
-    // readData already resolved them)
-    val dirty = snap.deltas.iterator.filter(_.kind != "pos")
-      .map(_.bucket).filter(sel).toSet
+    val dirty = snap.deltas.iterator.map(_.bucket)
+      .filter(b => buckets.forall(_.contains(b))).toSet
     // an old-layout entry is dirty when ANY current bucket it covers
-    // carries deltas: its rows route through the replay join (a no-op
-    // for event-free keys), never past a tombstone
-    def entryDirty(e: (Int, String)): Boolean = snap.entryHit(e, dirty)
-    val selected = buckets match {
-      case Some(s) => snap.entries.filter(e => snap.entryHit(e, s))
-      case None => snap.entries
-    }
-    val clean = readGroups(selected.filterNot(entryDirty))
-    if (dirty.isEmpty) return clean
-    val schema = StructType.fromDDL(ddl)
-    val keySchema = StructType(
-      schema.fields.filter(f => snap.keys.contains(f.name)))
-    val keyCols = snap.keys.map(col)
-    val ds = snap.deltas.filter(d => d.kind != "pos" && dirty(d.bucket))
-    // one frame per (kind, seq): the union width is the number of
-    // RETAINED merge-on-read commits, bounded by the compaction cadence
-    val rowFrames = ds.filter(_.kind == "rows").groupBy(_.seq).toSeq
-      .sortBy(_._1).map { case (s, es) =>
-        readData(es.map(_.dir), None).withColumn(SeqCol, lit(s))
+    // carries deltas: its rows go through that bucket's replay
+    val (dirtyEntries, clean) = selected.partition(e => snap.entryHit(e, dirty))
+    val cleanFrames = clean.groupBy(e => snap.layoutOf(e._2)).toSeq
+      .sortBy(_._1).map { case (l, ge) =>
+        val df = readEntries(spark, ddl, snap.colMap, ge.map(_._2),
+          snap.existsDefaults, snap.dirFiles)
+        if (l == snap.buckets) df else exactFilter.fold(df)(df.filter)
       }
-    // key columns are never renameable, so the tombstone key schema is
-    // physical == logical
-    val tombEvents = ds.filter(_.kind == "tomb").groupBy(_.seq).toSeq
-      .sortBy(_._1).map { case (s, es) =>
-        parquetDirs(spark, keySchema, es.map(_.dir), snap.dirFiles)
-          .withColumn(SeqCol, lit(s))
-      }
-    val events = (rowFrames.map(_.select(keyCols :+ col(SeqCol): _*)) ++
-      tombEvents).reduce(_.unionByName(_))
-    // per-key newest event — delta keys only, so this side stays small
-    // and the joins below broadcast
-    val maxEvents = events.groupBy(keyCols: _*)
-      .agg(max(col(SeqCol)).as(MaxCol))
-    val outCols = schema.fieldNames.map(col).toIndexedSeq
-    val base = readGroups(selected.filter(entryDirty), Some(SeqCol))
-    val liveBase = base.join(maxEvents, snap.keys, "left")
-      .filter(col(MaxCol).isNull || col(MaxCol) < col(SeqCol))
-      .select(outCols: _*)
-    val liveDelta = rowFrames.reduceOption(_.unionByName(_)).map { rf =>
-      rf.join(maxEvents, snap.keys, "inner")
-        .filter(col(SeqCol) === col(MaxCol))
-        .select(outCols: _*)
+    val dirtyFrame = Option.when(dirty.nonEmpty) {
+      val narrowed = snap.copy(entries = dirtyEntries,
+        deltas = snap.deltas.filter(d => dirty(d.bucket)))
+      val own = StructType.fromDDL(snap.schemaDdl).fieldNames.toSet
+      val df = connectorRead(spark, narrowed).select(schema.fields.map(f =>
+        if (own(f.name)) col(f.name)
+        else lit(null).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
+      if (narrowed.mixedLayout) exactFilter.fold(df)(df.filter) else df
     }
-    clean.unionByName(
-      liveDelta.fold(liveBase)(liveBase.unionByName(_)))
+    (cleanFrames ++ dirtyFrame).reduceOption(_.unionByName(_))
+      .getOrElse(emptyDf(spark, schema))
   }
 
   /** Test seam: [[resolvedRead]] of an explicit snapshot value (lets a
@@ -3422,7 +3327,7 @@ object SnapshotTable {
     *     defers the merge to readers ([[resolvedRead]]) until
     *     [[compact]] folds it in. The high-commit-rate shape: write
     *     amplification is 1 instead of bucketBytes/batchBytes, at the
-    *     price of a small per-read join until compaction.
+    *     price of a per-bucket replay on every read until compaction.
     *
     * The batch is materialized once (`mat`) before any of the guard
     * probe / hit-set derivation / merge write run, so all three see
@@ -3617,14 +3522,15 @@ object SnapshotTable {
     *     deletion-vector shape, key-agnostic like Delta/Iceberg DVs):
     *     the commit writes ONLY the doomed rows' physical positions
     *     (`(file-suffix, row_index)` pairs from the parquet reader's
-    *     file metadata) as a `pos` delta layer; reads anti-join the
-    *     physical data against that small side until [[compact]] folds
-    *     it in. O(matched) data written, zero existing bytes rewritten.
+    *     file metadata) as a `pos` delta layer; readers drop the
+    *     recorded positions as they stream the data files
+    *     ([[SnapshotPosScan]]) until [[compact]] folds the layer in.
+    *     O(matched) data written, zero existing bytes rewritten.
     *     Keyless tables tombstone exactly the matched positions; KEYED
     *     tables additionally tombstone the superseded versions of each
     *     matched key ([[deleteWherePosKeyed]]) so event replay can
     *     never resurrect them — and their reads then pay the cheap
-    *     anti-join instead of the keyed replay joins.
+    *     positional filter instead of the keyed event replay.
     *
     * Change feed: the pinned copy-on-write commit records its deleted
     * rows as commit-time change data (reading only the dropped/boundary
@@ -3679,7 +3585,7 @@ object SnapshotTable {
   /** Positional (deletion-vector) predicate DELETE on a KEYED table —
     * the key-agnostic Delta/Iceberg DV shape, so a keyed table's
     * predicate delete is O(matched) written bytes and its subsequent
-    * reads pay one broadcast anti-join instead of keyed-replay joins.
+    * reads pay the positional filter instead of the keyed event replay.
     *
     * The tombstone set is exactly the physical rows a copy-on-write
     * `overwrite(resolvedRead.filter(!cond))` would drop:
@@ -3694,6 +3600,10 @@ object SnapshotTable {
     *     never touches its other (independent, live) copies.
     * Keyed tombstone EVENT dirs (`kind = "tomb"`) hold no data rows and
     * are never position-tombstoned; their events keep shadowing.
+    *
+    * It keeps its own join-based replay rather than reading through
+    * [[resolvedRead]]: it needs the SHADOWED physical rows with their
+    * positions, and the connector scans emit only the survivors.
     *
     * Cost shape at 100 TB: one resolved scan of the table (any
     * predicate delete pays that), with the event table and the matched

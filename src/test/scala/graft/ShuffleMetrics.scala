@@ -14,7 +14,7 @@ object ShuffleMetrics {
   /** Deliver every queued listener event before a measuring listener is
     * added: the bus hands a new listener the events still queued, so
     * the task ends of an earlier action would count as this one's. */
-  private def drainBus(spark: SparkSession): Unit = {
+  def drainBus(spark: SparkSession): Unit = {
     val sc = spark.sparkContext
     val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
     bus.getClass.getMethod("waitUntilEmpty", java.lang.Long.TYPE)

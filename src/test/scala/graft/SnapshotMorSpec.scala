@@ -269,17 +269,28 @@ class SnapshotMorSpec extends AnyFunSuite {
       .as[(Long, String, Long, Option[String])].collect().toSet === got)
   }
 
-  test("connector resolves deltas: point-lookup pushdown, column " +
-      "pruning, filters on shadowed values, and count(*) all match the " +
-      "object API") {
-    val root = freshRoot("cn")
+  /** A 40-row, 8-bucket table with one merge-on-read upsert (row 6
+    * replaced, row 41 added) and one merge-on-read delete (row 8), and
+    * its literal resolved content — the object API replays through the
+    * connector too, so neither can serve as the other's oracle. */
+  private def deltaTable(tag: String): (String, Set[(Long, String, Long)]) = {
+    val root = freshRoot(tag)
     SnapshotTable.create(rows(0 until 40, "a"), root, Seq("id"), 8)
     SnapshotTable.upsert(Seq((6L, "NEW", 66L), (41L, "INS", 1L))
       .toDF("id", "tag", "v"), root, mergeOnRead = true)
     SnapshotTable.delete(Seq(8L).toDF("id"), root, mergeOnRead = true)
-    val oracle = asSet(SnapshotTable.read(spark, root))
+    (root, asSet(rows(0 until 40, "a"))
+      .filterNot(r => r._1 == 6L || r._1 == 8L) ++
+      Set((6L, "NEW", 66L), (41L, "INS", 1L)))
+  }
+
+  test("connector resolves deltas: point-lookup pushdown, column " +
+      "pruning, filters on shadowed values, and count(*) all match the " +
+      "object API") {
+    val (root, oracle) = deltaTable("cn")
     val v2 = spark.read.format("graft-snapshot").load(root)
     assert(asSet(v2) === oracle)
+    assert(asSet(SnapshotTable.read(spark, root)) === oracle)
     // key point lookups (pushed → delta buckets pruned alongside base)
     assert(asSet(v2.filter(col("id").isin(6L, 8L, 9L, 41L))) ===
       oracle.filter(r => Set(6L, 8L, 9L, 41L)(r._1)))
@@ -301,6 +312,66 @@ class SnapshotMorSpec extends AnyFunSuite {
       spark.sql("UPDATE mor_t.tbl SET v = 0 WHERE id = 6")
     }
     assert(err.getMessage.contains("merge-on-read"))
+  }
+
+  /** `action`'s result and the (nodeName, simpleString) of every
+    * physical node, per SQL execution it starts — the plan as Spark
+    * posts it (AQE's initial plan included), writes and collects
+    * alike. */
+  private def executedPlans[A](action: => A)
+      : (A, Seq[Seq[(String, String)]]) = {
+    import org.apache.spark.sql.execution.SparkPlanInfo
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlanInfo]
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(
+          e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          plans.add(s.sparkPlanInfo)
+        case _ => ()
+      }
+    }
+    ShuffleMetrics.drainBus(spark)
+    spark.sparkContext.addSparkListener(l)
+    val a = try { val a = action; ShuffleMetrics.drainBus(spark); a }
+      finally spark.sparkContext.removeSparkListener(l)
+    def nodes(p: SparkPlanInfo): Seq[(String, String)] =
+      (p.nodeName, p.simpleString) +: p.children.toSeq.flatMap(nodes)
+    (a, plans.toArray(Array.empty[SparkPlanInfo]).toSeq.map(nodes))
+  }
+
+  test("one replay for every reader: a delta-bearing read and compact's " +
+      "prior read plan the partition-local merge-on-read scan with no " +
+      "exchange and no join; a keyless positional read plans the " +
+      "positional scan") {
+    val (root, expected) = deltaTable("plan")
+    def isJoin(n: (String, String)) = n._1.contains("Join")
+    def isExchange(n: (String, String)) = n._1.contains("Exchange")
+    def replaying(plans: Seq[Seq[(String, String)]], scan: String) =
+      plans.filter(_.exists(_._2.contains(scan)))
+    val (got, readPlans) = executedPlans(asSet(SnapshotTable.read(spark, root)))
+    val reads = replaying(readPlans, "merge-on-read (")
+    assert(got === expected)
+    assert(reads.size === 1, reads)
+    assert(!reads.head.exists(n => isJoin(n) || isExchange(n)), reads.head)
+    // compact's prior read: the write plan's only exchange is the
+    // commit's own repartition on the bucket column
+    val compacts = replaying(
+      executedPlans(SnapshotTable.compact(spark, root))._2, "merge-on-read (")
+    assert(compacts.size === 1, compacts)
+    assert(!compacts.head.exists(isJoin), compacts.head)
+    val exchanges = compacts.head.filter(isExchange)
+    assert(exchanges.size === 1 &&
+      exchanges.head._2.contains("hashpartitioning(_gb"), compacts.head)
+    assert(asSet(SnapshotTable.read(spark, root)) === expected)
+    // keyless: positions only, through the positional scan
+    val kl = freshRoot("planpos")
+    SnapshotTable.create(rows(0 until 20, "a"), kl, Seq.empty, 1)
+    SnapshotTable.deleteWhere(spark, kl, col("id") < 5L, mergeOnRead = true)
+    val (posGot, posPlans) = executedPlans(asSet(SnapshotTable.read(spark, kl)))
+    val pos = replaying(posPlans, "positional merge-on-read (")
+    assert(posGot === asSet(rows(5 until 20, "a")))
+    assert(pos.size === 1, pos)
+    assert(!pos.head.exists(n => isJoin(n) || isExchange(n)), pos.head)
   }
 
   test("mor ops refuse a keyless table") {

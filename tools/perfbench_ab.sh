@@ -8,7 +8,12 @@
 # side's median host_steal_share; then, for rows_per_s and op_p50_s, each
 # side's median and quartiles, the pairs B won (ties count for neither)
 # and whether B's gain passes the claim rule: B wins at least 9/10 of the
-# pairs and the medians differ by more than A's q3-q1. Env: FIRST_SEED (default 1200),
+# pairs and the medians differ by more than A's q3-q1. Then, from each run's
+# `op <kind>: n=… p50=…` lines, the A and B medians of every operation
+# kind's p50; and each side's `steps=` values (workload cycles per run) in
+# seed order, with a warning naming every pair whose two runs ran a
+# different number of cycles: a second, warm cycle lowers every median, so
+# such a pair compares cycle counts, not code. Env: FIRST_SEED (default 1200),
 # SECONDS_PER_RUN (default 8), TRACE (0 = end-to-end metrics, 1 = per
 # layer; default 0), OUT_DIR (keeps every run's output; default a temp
 # dir). Each tree builds itself on its first run.
@@ -78,5 +83,35 @@ for n, higher in (("rows_per_s", True), ("op_p50_s", False)):
     met = won * 10 >= 9 * len(seeds) and gain > qa3 - qa1
     print(f"{n:12s} {f'{ma:.4g} [{qa1:.4g}-{qa3:.4g}]':>28s} {f'{mb:.4g} [{qb1:.4g}-{qb3:.4g}]':>28s} "
           f"{f'{won}/{len(seeds)}':>7s}  {'met' if met else 'not met'}")
+
+# per operation kind: the median over runs of each run's p50
+kinds = {"A": {}, "B": {}}
+steps = {"A": {}, "B": {}}
+for side in kinds:
+    for f in glob.glob(f"{out}/{side}.*.txt"):
+        seed = f.rsplit(".", 2)[-2]
+        for line in open(f):
+            p = line.split()
+            if len(p) >= 4 and p[0] == "op" and p[1].endswith(":") and p[3].startswith("p50="):
+                kinds[side].setdefault(p[1][:-1], []).append(float(p[3][4:]))
+            elif line.startswith("== "):
+                for w in p:
+                    if w.startswith("steps="):
+                        steps[side][seed] = int(w[6:])
+print()
+print(f"{'op kind p50 (s)':34s} {'median A':>14s} {'median B':>14s} {'B/A-1':>8s}   n")
+for k in sorted(set(kinds["A"]) & set(kinds["B"])):
+    a, b = statistics.median(kinds["A"][k]), statistics.median(kinds["B"][k])
+    ch = f"{(b / a - 1) * 100:+.1f}%" if a else "n/a"
+    print(f"{k:34s} {a:14.6g} {b:14.6g} {ch:>8s}   {len(kinds['A'][k])}/{len(kinds['B'][k])}")
+print()
+for side in steps:
+    print(f"steps {side}: {[steps[side][s] for s in sorted(steps[side])]}")
+odd = [s for s in sorted(set(steps["A"]) & set(steps["B"]))
+       if steps["A"][s] != steps["B"][s]]
+if odd:
+    print(f"WARNING: cycle counts differ in {len(odd)} pair(s): " +
+          ", ".join(f"seed {s} A={steps['A'][s]} B={steps['B'][s]}" for s in odd) +
+          "; those pairs compare cycle counts, not code")
 print(f"runs kept in {out}")
 EOF
