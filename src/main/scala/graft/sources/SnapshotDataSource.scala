@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{GraftCatalystFilterScanBuilder, GraftParquetBridge, SparkSession}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder}
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.sources.{EqualNullSafe, EqualTo, Filter, In}
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -461,7 +461,7 @@ private[graft] class SnapshotScanBuilder(snap: SnapshotTable.Snapshot,
         val hashes = tuples.map(t =>
           SnapshotTable.keyHashOfLiterals(t, keyTypes))
         val fsys = LocalFs.resolve(new org.apache.hadoop.fs.Path(root),
-          SparkSession.active.sessionState.newHadoopConf())
+          SparkSession.active.sparkContext.hadoopConfiguration)
         cur.filter(e => SnapshotTable.bloomMayContain(fsys, e._2, hashes))
       case _ => cur
     }
@@ -814,15 +814,7 @@ private[graft] class SnapshotScan(snap: SnapshotTable.Snapshot,
     if (snap.colMap.isEmpty) st
     else StructType(st.fields.map(f =>
       f.copy(name = snap.colMap.getOrElse(f.name, f.name))))
-  private def physFilters(
-      es: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : Seq[org.apache.spark.sql.catalyst.expressions.Expression] =
-    if (snap.colMap.isEmpty) es
-    else es.map(_.transform {
-      case a: org.apache.spark.sql.catalyst.expressions.AttributeReference
-          if snap.colMap.contains(a.name) =>
-        a.withName(snap.colMap(a.name))
-    })
+  private val physFilters = SnapshotTable.physFilters(snap, catalystFilters)
 
   /** The MANIFEST's frozen existence defaults in physical-name space —
     * the only default metadata allowed to reach the parquet plane:
@@ -833,13 +825,9 @@ private[graft] class SnapshotScan(snap: SnapshotTable.Snapshot,
   private def metaFor(st: StructType): StructType =
     SnapshotTable.readSchemaMetaPhys(snap, physSchema(st))
 
-  private def inner(paths: Seq[String]): Scan = {
-    val b = SnapshotTable.scanBuilderOf(paths, snap.dirFiles,
-      metaFor(tableSchema))
-    GraftParquetBridge.pushCatalystFilters(b, physFilters(catalystFilters))
-    GraftParquetBridge.pruneColumns(b, metaFor(required))
-    GraftParquetBridge.buildScan(b)
-  }
+  private def inner(paths: Seq[String]): Scan =
+    SnapshotTable.parquetScanOf(paths, snap.dirFiles, metaFor(tableSchema),
+      metaFor(required), physFilters)
 
   /** Schema does not depend on the file list, so it must not freeze
     * one: `readSchema` is asked BEFORE runtime filters arrive, and a
@@ -881,24 +869,45 @@ private[graft] class SnapshotScan(snap: SnapshotTable.Snapshot,
       entries.map(_._1).distinct.size)
   }
 
-  override def toBatch: org.apache.spark.sql.connector.read.Batch = {
-    import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory}
-    if (snap.keys.isEmpty || snap.mixedLayout)
-      inner(entries.map(_._2)).toBatch
-    else new Batch {
-      // per-bucket planning so each partition carries its bucket id;
-      // multiple partitions may share a key — Spark groups them
-      override def planInputPartitions(): Array[InputPartition] =
-        entries.groupBy(_._1).toSeq.sortBy(_._1).flatMap { case (b, es) =>
-          inner(es.map(_._2)).toBatch.planInputPartitions()
-            .map(p => KeyedInputPartition(
-              org.apache.spark.sql.catalyst.InternalRow(b), p))
-        }.toArray
-      override def createReaderFactory(): PartitionReaderFactory =
-        new KeyedReaderFactory(
-          inner(Seq.empty).toBatch.createReaderFactory())
+  /** The plan of the current [[entries]], made once per entry list
+    * (runtime filtering replaces the list, and Spark asks a re-filtered
+    * scan for its partitions again): ONE [[SnapshotTable.planRole]] over
+    * every dir, its splits packed back into FilePartitions per bucket so
+    * each partition carries its bucket id and a small bucket stays one
+    * task. Multiple partitions may share a key — Spark groups them. */
+  private var plannedFor: Option[(Seq[(Int, String)],
+      Array[InputPartition], SnapshotTable.PlannedRole)] = None
+
+  private def planned: (Array[InputPartition], SnapshotTable.PlannedRole) =
+    synchronized {
+      plannedFor.filter(_._1 == entries).map(p => (p._2, p._3)).getOrElse {
+        val r = SnapshotTable.planRole(entries.map(_._2), snap.dirFiles,
+          metaFor(tableSchema), metaFor(required), physFilters)
+        val parts: Array[InputPartition] =
+          if (snap.keys.isEmpty || snap.mixedLayout) r.parts.toArray
+          else entries.groupBy(_._1).toSeq.sortBy(_._1).flatMap {
+            case (b, es) => r.packed(es.map(_._2)).map(p =>
+              KeyedInputPartition(
+                org.apache.spark.sql.catalyst.InternalRow(b), p))
+          }.toArray
+        plannedFor = Some((entries, parts, r))
+        (parts, r)
+      }
     }
+
+  /** The reader factory depends on schema and filters, never on the
+    * file list: one per scan. */
+  private lazy val readerFactory: PartitionReaderFactory = {
+    val f = planned._2.factory
+    if (snap.keys.isEmpty || snap.mixedLayout) f else new KeyedReaderFactory(f)
   }
+
+  override def toBatch: org.apache.spark.sql.connector.read.Batch =
+    new org.apache.spark.sql.connector.read.Batch {
+      override def planInputPartitions(): Array[InputPartition] = planned._1
+      override def createReaderFactory(): PartitionReaderFactory =
+        readerFactory
+    }
 
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =

@@ -16,13 +16,18 @@ import org.apache.spark.sql.types.StructType
   * here) all see resolved content through it. The "reader supports
   * format-v2 deletes" step, in Iceberg terms.
   *
-  * Plan shape:
+  * Plan shape — planned ONCE per scan, one reader role at a time
+  * ([[SnapshotTable.planRole]]: clean base, dirty base, delta rows,
+  * keyed tombstones, positional tombstones), each over the union of its
+  * dirs with one file index and one parquet ScanBuilder, its splits
+  * routed back per dir, bucket and seq:
   *   - buckets WITHOUT deltas plan exactly like [[SnapshotScan]]: the
   *     delegated vectorized ParquetScan over their pruned dirs, pushed
-  *     filters and all — the clean path pays ZERO resolution cost;
+  *     filters and all, packed back into one keyed partition per small
+  *     bucket — the clean path pays ZERO resolution cost;
   *   - each delta-bearing bucket becomes ONE [[MorInputPartition]]
-  *     bundling its base file partitions (each stamped with its
-  *     commit's version) plus its delta-row and tombstone partitions
+  *     bundling its base file splits (each stamped with its
+  *     commit's version) plus its delta-row and tombstone splits
   *     (stamped with their event seq). The partition reader first
   *     drains the SMALL delta side into an in-memory per-key
   *     newest-event table, then streams the base files, dropping rows
@@ -110,32 +115,20 @@ private[graft] class SnapshotMorScan(snap: SnapshotTable.Snapshot,
     st.fields :+ org.apache.spark.sql.types.StructField(idxCol,
       org.apache.spark.sql.types.LongType))
 
-  private def innerScan(paths: Seq[String], schema: StructType,
-      pushFilters: Boolean, withIdx: Boolean = false): Scan = {
+  private val physFilters = SnapshotTable.physFilters(snap, catalystFilters)
+
+  /** One reader role over `dirs` ([[SnapshotTable.planRole]]): base and
+    * delta-row roles read `schema` (plus the row index under positional
+    * tombstones); only base roles take the pushed filters. */
+  private def role(dirs: Seq[String], schema: StructType,
+      pushFilters: Boolean, withIdx: Boolean = false)
+      : SnapshotTable.PlannedRole = {
     val tbl = metaFor(physSchema(tableSchema))
     val sch = metaFor(physSchema(schema))
-    val b = SnapshotTable.scanBuilderOf(paths, snap.dirFiles,
-      if (withIdx) plusIdx(tbl) else tbl)
-    if (pushFilters) GraftParquetBridge.pushCatalystFilters(b,
-      if (snap.colMap.isEmpty) catalystFilters
-      else catalystFilters.map(_.transform {
-        case a: org.apache.spark.sql.catalyst.expressions.AttributeReference
-            if snap.colMap.contains(a.name) =>
-          a.withName(snap.colMap(a.name))
-      }))
-    GraftParquetBridge.pruneColumns(b, if (withIdx) plusIdx(sch) else sch)
-    GraftParquetBridge.buildScan(b)
-  }
-
-  /** Raw scan over positional tombstone dirs: their files carry key
-    * columns (bucket routing) plus the `(file-suffix, row_index)` pair;
-    * readers project just the pair. Never filter-pushed, never
-    * column-mapped (tombstone columns are reserved names). */
-  private def posTombScan(paths: Seq[String]): Scan = {
-    val b = SnapshotTable.scanBuilderOf(paths, snap.dirFiles,
-      SnapshotTable.posTombSchema)
-    GraftParquetBridge.pruneColumns(b, SnapshotTable.posTombSchema)
-    GraftParquetBridge.buildScan(b)
+    SnapshotTable.planRole(dirs, snap.dirFiles,
+      if (withIdx) plusIdx(tbl) else tbl,
+      if (withIdx) plusIdx(sch) else sch,
+      if (pushFilters) physFilters else Nil)
   }
 
   override def readSchema(): StructType = required
@@ -185,96 +178,93 @@ private[graft] class SnapshotMorScan(snap: SnapshotTable.Snapshot,
     }
   }
 
-  override def toBatch: Batch = new Batch {
-    override def planInputPartitions(): Array[InputPartition] = {
-      val dirty = (deltas.map(_.bucket) ++ posDeltas.map(_.bucket)).toSet
-      // layout-aware split: an entry replays when ANY current bucket it
-      // covers carries deltas (a historical-layout dir spans several
-      // current buckets until migration)
-      val (dirtyEntries, clean) =
-        baseEntries.partition(e => snap.entryHit(e, dirty))
-      val cleanParts = clean.groupBy(_._1).toSeq.sortBy(_._1).flatMap {
-        case (b, es) =>
-          innerScan(es.map(_._2), required, pushFilters = true)
-            .toBatch.planInputPartitions()
-            .map(p => KeyedInputPartition(InternalRow(b), p))
-      }
-      // with positional tombstones the splits are re-grouped per FILE
-      // (each tagged with its file's tombstone suffix); without, one
-      // empty tag per split — same driver cost either way
-      def perDir(dirs: Seq[(Long, String)], schema: StructType,
-          push: Boolean): Seq[(Long, String, InputPartition)] =
-        dirs.flatMap { case (seq, d) =>
-          val parts = innerScan(Seq(d), schema, push, withIdx = hasPos)
-            .toBatch.planInputPartitions()
-          if (!hasPos) parts.toSeq.map(p => (seq, "", p))
-          else GraftParquetBridge.splitPartitionsByFile(parts)
-            .map { case (f, p) => (seq, SnapshotTable.suffixOf(f), p) }
-        }
-      def perDirKeys(dirs: Seq[(Long, String)]): Seq[(Long, InputPartition)] =
-        dirs.flatMap { case (seq, d) =>
-          innerScan(Seq(d), keySchema, pushFilters = false).toBatch
-            .planInputPartitions().map(seq -> _)
-        }
-      val deltaBy = deltas.groupBy(_.bucket)
-      val posBy = posDeltas.groupBy(_.bucket)
-      // REPLAY CLASSES: a historical-layout dir's rows span every
-      // current bucket it covers, so those buckets' events must sit in
-      // the same reader as the dir — union-find merges dirty buckets
-      // linked by a shared old dir. On a uniform-layout table every
-      // class is one bucket and this is exactly the per-bucket plan.
-      val parent = scala.collection.mutable.Map(
-        dirty.toSeq.map(b => b -> b): _*)
-      def find(b: Int): Int = {
-        var x = b; while (parent(x) != x) x = parent(x); x
-      }
-      def union(a: Int, b: Int): Unit = {
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val entryHome = dirtyEntries.map { e =>
-        val covered = snap.coveredBuckets(e).filter(dirty)
-        covered.tail.foreach(union(covered.head, _))
-        e -> covered.head
-      }
-      val dirtyParts = dirty.groupBy(find).toSeq.sortBy(_._1).map {
-        case (cls, bs) =>
-          val es = entryHome.collect {
-            case (e, home) if find(home) == cls => e
-          }
-          val ds = bs.toSeq.sorted.flatMap(b => deltaBy.getOrElse(b, Nil))
-          val ps = bs.toSeq.sorted.flatMap(b => posBy.getOrElse(b, Nil))
-          MorInputPartition(cls,
-            perDir(es.map { case (_, d) => seqOfDir(d) -> d }, withKeys,
-              push = true),
-            perDir(ds.filter(_.kind == "rows").map(d => d.seq -> d.dir),
-              withKeys, push = false),
-            perDirKeys(ds.filter(_.kind == "tomb").map(d => d.seq -> d.dir)),
-            if (ps.isEmpty) Seq.empty
-            else posTombScan(ps.map(_.dir)).toBatch
-              .planInputPartitions().toSeq)
-      }
-      (cleanParts ++ dirtyParts).toArray
+  /** The scan's one plan (it reads one pinned snapshot, so planning
+    * once per scan is planning once per query, however often Spark asks):
+    * one [[SnapshotTable.planRole]] per reader role over every dir of
+    * that role, its splits routed back per dir and bucket. */
+  private lazy val planned: (Array[InputPartition], PartitionReaderFactory) = {
+    val dirty = (deltas.map(_.bucket) ++ posDeltas.map(_.bucket)).toSet
+    // layout-aware split: an entry replays when ANY current bucket it
+    // covers carries deltas (a historical-layout dir spans several
+    // current buckets until migration)
+    val (dirtyEntries, clean) =
+      baseEntries.partition(e => snap.entryHit(e, dirty))
+    val rowDeltas = deltas.filter(_.kind == "rows")
+    val tombDeltas = deltas.filter(_.kind == "tomb")
+    val cleanR = role(clean.map(_._2), required, pushFilters = true)
+    val baseR = role(dirtyEntries.map(_._2), withKeys, pushFilters = true,
+      withIdx = hasPos)
+    val rowsR = role(rowDeltas.map(_.dir), withKeys, pushFilters = false,
+      withIdx = hasPos)
+    val tombR = role(tombDeltas.map(_.dir), keySchema, pushFilters = false)
+    // positional tombstone files carry key columns (bucket routing) plus
+    // the (file-suffix, row_index) pair; readers project just the pair,
+    // never filter-pushed or column-mapped (reserved names)
+    val posR = SnapshotTable.planRole(posDeltas.map(_.dir), snap.dirFiles,
+      SnapshotTable.posTombSchema, SnapshotTable.posTombSchema, Nil)
+    val cleanParts = clean.groupBy(_._1).toSeq.sortBy(_._1).flatMap {
+      case (b, es) => cleanR.packed(es.map(_._2))
+        .map(p => KeyedInputPartition(InternalRow(b), p))
     }
-
-    override def createReaderFactory(): PartitionReaderFactory =
-      new MorReaderFactory(
-        innerScan(Seq.empty, required, pushFilters = true)
-          .toBatch.createReaderFactory(),
-        innerScan(Seq.empty, withKeys, pushFilters = true,
-          withIdx = hasPos).toBatch.createReaderFactory(),
-        innerScan(Seq.empty, withKeys, pushFilters = false,
-          withIdx = hasPos).toBatch.createReaderFactory(),
-        innerScan(Seq.empty, keySchema, pushFilters = false)
-          .toBatch.createReaderFactory(),
-        posTombScan(Seq.empty).toBatch.createReaderFactory(),
+    // with positional tombstones every split carries its file's
+    // tombstone suffix; without, an empty tag
+    def tagged(r: SnapshotTable.PlannedRole, dirs: Seq[(Long, String)])
+        : Seq[(Long, String, InputPartition)] =
+      dirs.flatMap { case (seq, d) =>
+        r.splitsOf(d).map { case (f, p) =>
+          (seq, if (hasPos) SnapshotTable.suffixOf(f) else "", p)
+        }
+      }
+    val deltaBy = deltas.groupBy(_.bucket)
+    val posBy = posDeltas.groupBy(_.bucket)
+    // REPLAY CLASSES: a historical-layout dir's rows span every
+    // current bucket it covers, so those buckets' events must sit in
+    // the same reader as the dir — union-find merges dirty buckets
+    // linked by a shared old dir. On a uniform-layout table every
+    // class is one bucket and this is exactly the per-bucket plan.
+    val parent = scala.collection.mutable.Map(
+      dirty.toSeq.map(b => b -> b): _*)
+    def find(b: Int): Int = {
+      var x = b; while (parent(x) != x) x = parent(x); x
+    }
+    def union(a: Int, b: Int): Unit = {
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    val entryHome = dirtyEntries.map { e =>
+      val covered = snap.coveredBuckets(e).filter(dirty)
+      covered.tail.foreach(union(covered.head, _))
+      e -> covered.head
+    }
+    val dirtyParts = dirty.groupBy(find).toSeq.sortBy(_._1).map {
+      case (cls, bs) =>
+        val es = entryHome.collect {
+          case (e, home) if find(home) == cls => e
+        }
+        val ds = bs.toSeq.sorted.flatMap(b => deltaBy.getOrElse(b, Nil))
+        val ps = bs.toSeq.sorted.flatMap(b => posBy.getOrElse(b, Nil))
+        MorInputPartition(cls,
+          tagged(baseR, es.map { case (_, d) => seqOfDir(d) -> d }),
+          tagged(rowsR, ds.filter(_.kind == "rows").map(d => d.seq -> d.dir)),
+          ds.filter(_.kind == "tomb").flatMap(d =>
+            tombR.splitsOf(d.dir).map(s => d.seq -> s._2)),
+          ps.flatMap(d => posR.splitsOf(d.dir).map(_._2)))
+    }
+    ((cleanParts ++ dirtyParts).toArray,
+      new MorReaderFactory(cleanR.factory, baseR.factory, rowsR.factory,
+        tombR.factory, posR.factory,
         (if (hasPos) plusIdx(withKeys) else withKeys)
           .fields.map(_.dataType),
         keySchema.fields.map(_.dataType),
         snap.keys.map(k => withKeys.fieldIndex(k)).toArray,
         required.fieldNames.map(withKeys.fieldIndex),
         // row-index ordinal in base/delta rows; -1 = no positional layer
-        if (hasPos) withKeys.length else -1)
+        if (hasPos) withKeys.length else -1))
+  }
+
+  override def toBatch: Batch = new Batch {
+    override def planInputPartitions(): Array[InputPartition] = planned._1
+    override def createReaderFactory(): PartitionReaderFactory = planned._2
   }
 
   /** Streaming reads keep [[SnapshotScan]]'s exact contract: the stream
@@ -284,7 +274,9 @@ private[graft] class SnapshotMorScan(snap: SnapshotTable.Snapshot,
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     new SnapshotMicroBatchStream(root,
-      paths => innerScan(paths, required, pushFilters = true),
+      paths => SnapshotTable.parquetScanOf(paths, snap.dirFiles,
+        metaFor(physSchema(tableSchema)), metaFor(physSchema(required)),
+        physFilters),
       ignoreChanges, streamOpts)
 }
 
@@ -468,8 +460,10 @@ private[graft] class MorPartitionReader(part: MorInputPartition,
   * resume after compaction, mixed-kind snapshots use
   * [[SnapshotMorScan]].
   *
-  * Plan shape: base FILES are listed driver-side (O(files), the same
-  * listing the manifest writer paid) and round-robined into at most
+  * Plan shape: base FILES are planned through ONE base role over every
+  * base dir ([[SnapshotTable.planRole]], the helper every snapshot
+  * connector scan plans through — never one ScanBuilder per file or
+  * dir), their splits re-grouped per file and round-robined into at most
   * ~2×defaultParallelism partitions; each partition bundles its files'
   * parquet splits — every split tagged with its file's stable path
   * suffix — plus the (small) tombstone partitions. The reader drains
@@ -551,20 +545,7 @@ private[graft] class SnapshotPosScan(snap: SnapshotTable.Snapshot,
   private def metaFor(st: StructType): StructType =
     SnapshotTable.readSchemaMetaPhys(snap, st)
 
-  private def innerScan(paths: Seq[String], schema: StructType,
-      tblSchema: StructType, pushFilters: Boolean): Scan = {
-    val b = SnapshotTable.scanBuilderOf(paths, snap.dirFiles,
-      metaFor(tblSchema))
-    if (pushFilters) GraftParquetBridge.pushCatalystFilters(b,
-      if (snap.colMap.isEmpty) pushableFilters
-      else pushableFilters.map(_.transform {
-        case a: org.apache.spark.sql.catalyst.expressions.AttributeReference
-            if snap.colMap.contains(a.name) =>
-          a.withName(snap.colMap(a.name))
-      }))
-    GraftParquetBridge.pruneColumns(b, metaFor(schema))
-    GraftParquetBridge.buildScan(b)
-  }
+  private val physPushable = SnapshotTable.physFilters(snap, pushableFilters)
 
   /** Table schema the base inner scans are built under: physical table
     * columns plus the row-index column, so pruning to [[withIdx]] is a
@@ -595,39 +576,34 @@ private[graft] class SnapshotPosScan(snap: SnapshotTable.Snapshot,
     }
   }
 
-  override def toBatch: Batch = new Batch {
-    override def planInputPartitions(): Array[InputPartition] = {
-      val spark = SparkSession.active
-      // ONE inner scan over every base dir (one driver file-index
-      // listing, one plan), then re-group its planned splits per FILE
-      // so each split carries its file's tombstone suffix — never one
-      // ScanBuilder per file, which was an O(files) driver hotspot at
-      // crawl scale
-      val perFile = GraftParquetBridge.splitPartitionsByFile(
-        innerScan(baseEntries.map(_._2).distinct, withIdx, baseTblSchema,
-          pushFilters = true).toBatch.planInputPartitions())
-      if (perFile.isEmpty) return Array.empty
-      val tomb = SnapshotTable.posTombSchema
-      val tombParts = innerScan(posDeltas.map(_.dir), tomb, tomb,
-        pushFilters = false).toBatch.planInputPartitions()
-      val groups = math.max(1, math.min(perFile.size,
-        spark.sparkContext.defaultParallelism * 2))
-      perFile.zipWithIndex.groupBy(_._2 % groups).toSeq.sortBy(_._1)
-        .map { case (_, fs) =>
-          PosInputPartition(
-            fs.map { case ((f, p), _) => SnapshotTable.suffixOf(f) -> p },
-            tombParts.toSeq): InputPartition
-        }.toArray
-    }
+  /** The scan's one plan (one pinned snapshot, so once per query): ONE
+    * base role over every base dir ([[SnapshotTable.planRole]]), its
+    * splits re-grouped per FILE so each carries its file's tombstone
+    * suffix, and one tombstone role. */
+  private lazy val planned: (Array[InputPartition], PartitionReaderFactory) = {
+    val spark = SparkSession.active
+    val baseR = SnapshotTable.planRole(baseEntries.map(_._2), snap.dirFiles,
+      metaFor(baseTblSchema), metaFor(withIdx), physPushable)
+    val perFile = baseR.splits
+    val tombR =
+      if (perFile.isEmpty) SnapshotTable.PlannedRole.empty
+      else SnapshotTable.planRole(posDeltas.map(_.dir), snap.dirFiles,
+        SnapshotTable.posTombSchema, SnapshotTable.posTombSchema, Nil)
+    val groups = math.max(1, math.min(perFile.size,
+      spark.sparkContext.defaultParallelism * 2))
+    (perFile.zipWithIndex.groupBy(_._2 % groups).toSeq.sortBy(_._1)
+      .map { case (_, fs) =>
+        PosInputPartition(
+          fs.map { case ((f, p), _) => SnapshotTable.suffixOf(f) -> p },
+          tombR.parts): InputPartition
+      }.toArray,
+      new PosReaderFactory(baseR.factory, tombR.factory, joinedTypes,
+        outBinds))
+  }
 
-    override def createReaderFactory(): PartitionReaderFactory =
-      new PosReaderFactory(
-        innerScan(Seq.empty, withIdx, baseTblSchema, pushFilters = true)
-          .toBatch.createReaderFactory(),
-        innerScan(Seq.empty, SnapshotTable.posTombSchema,
-          SnapshotTable.posTombSchema, pushFilters = false)
-          .toBatch.createReaderFactory(),
-        joinedTypes, outBinds)
+  override def toBatch: Batch = new Batch {
+    override def planInputPartitions(): Array[InputPartition] = planned._1
+    override def createReaderFactory(): PartitionReaderFactory = planned._2
   }
 
   /** Same streaming contract as [[SnapshotMorScan]]: tail APPEND
@@ -639,8 +615,9 @@ private[graft] class SnapshotPosScan(snap: SnapshotTable.Snapshot,
       "row-identity metadata columns are a batch-read surface; " +
         "streaming reads cannot synthesize them")
     new SnapshotMicroBatchStream(root,
-      paths => innerScan(paths, physSchema(required),
-        physSchema(tableSchema), pushFilters = true),
+      paths => SnapshotTable.parquetScanOf(paths, snap.dirFiles,
+        metaFor(physSchema(tableSchema)), metaFor(physSchema(required)),
+        physPushable),
       ignoreChanges, streamOpts)
   }
 }

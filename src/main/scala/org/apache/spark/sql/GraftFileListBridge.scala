@@ -26,15 +26,22 @@ object GraftFileListBridge {
     * walk of immutable dirs, so split planning sees exact sizes.
     * Paths are QUALIFIED at construction (pure string work, no IO) —
     * `allFiles()` qualifies each root before its map lookup, so
-    * scheme-less manifest paths would otherwise never match. */
+    * scheme-less manifest paths would otherwise never match. Qualifying
+    * needs only a filesystem's scheme and working dir, so it resolves
+    * through the context's Hadoop conf, as the library's own manifest
+    * I/O does, not through a copy of the session's (a 1k-entry copy per
+    * index dominated snapshot scan planning). */
   final class StaticFileIndex(spark: SparkSession, files0: Seq[FileStatus])
       extends PartitioningAwareFileIndex(spark, Map.empty, None, NoopCache) {
     private val files: Seq[FileStatus] = {
-      val conf = spark.asInstanceOf[classic.SparkSession]
-        .sessionState.newHadoopConf()
+      val conf = spark.sparkContext.hadoopConfiguration
+      val fsOf = scala.collection.mutable.HashMap
+        .empty[(String, String), org.apache.hadoop.fs.FileSystem]
       files0.map { f =>
         val p = f.getPath
-        val q = p.getFileSystem(conf).makeQualified(p)
+        val q = fsOf.getOrElseUpdate(
+          (p.toUri.getScheme, p.toUri.getAuthority),
+          p.getFileSystem(conf)).makeQualified(p)
         if (q == p) f
         else new FileStatus(f.getLen, false, f.getReplication,
           f.getBlockSize, f.getModificationTime, q)
@@ -48,6 +55,9 @@ object GraftFileListBridge {
       files.foreach(f => m.put(f.getPath, f))
       m
     }
+    /** Each file's qualified path as its planned splits spell it
+      * (`PartitionedFile.filePath`), in the order the files were given. */
+    def paths: Seq[String] = files.map(_.getPath.toString)
     override val rootPaths: Seq[Path] = byDir.keys.toSeq
     override def leafFiles
         : scala.collection.mutable.LinkedHashMap[Path, FileStatus] = lf
@@ -81,4 +91,15 @@ object GraftFileListBridge {
     ParquetScanBuilder(spark, new StaticFileIndex(spark, statuses(files)),
       schema, schema,
       new CaseInsensitiveStringMap(java.util.Collections.emptyMap()))
+
+  /** [[StaticFileIndex.paths]] of a [[parquetScanBuilderFiles]] builder:
+    * the key that routes each planned split back to the file list entry
+    * it came from. */
+  def plannedPaths(b: ScanBuilder): Seq[String] = b match {
+    case p: ParquetScanBuilder => p.fileIndex match {
+      case s: StaticFileIndex => s.paths
+      case other => sys.error(s"not a file-list index: $other")
+    }
+    case other => sys.error(s"not a file-list parquet builder: $other")
+  }
 }

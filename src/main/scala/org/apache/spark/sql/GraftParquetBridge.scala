@@ -78,6 +78,33 @@ object GraftParquetBridge {
     }
   }
 
+  /** The split size Spark's file scan plans files of these `lengths`
+    * with (`FilePartition.maxSplitBytes`: each file costs its length plus
+    * `openCostInBytes`). */
+  def maxSplitBytes(spark: SparkSession, lengths: Seq[Long]): Long = {
+    import org.apache.spark.sql.execution.datasources.FilePartition
+    val open = spark.asInstanceOf[classic.SparkSession].sessionState.conf
+      .filesOpenCostInBytes
+    FilePartition.maxSplitBytes(spark.asInstanceOf[classic.SparkSession],
+      lengths.map(_ + open).sum)
+  }
+
+  /** Pack file splits (FilePartitions from [[splitPartitionsByFile]])
+    * into FilePartitions the way Spark's file scan packs one scan's
+    * splits: largest first, up to `maxSplitBytes` each. */
+  def packFilePartitions(spark: SparkSession,
+      splits: Seq[org.apache.spark.sql.connector.read.InputPartition],
+      maxSplitBytes: Long)
+      : Seq[org.apache.spark.sql.connector.read.InputPartition] = {
+    import org.apache.spark.sql.execution.datasources.FilePartition
+    val files = splits.flatMap {
+      case fp: FilePartition => fp.files.toSeq
+      case other => sys.error(s"not a file split: $other")
+    }.sortBy(-_.length)
+    FilePartition.getFilePartitions(spark.asInstanceOf[classic.SparkSession],
+      files, maxSplitBytes)
+  }
+
   /** V1 filters → V2 predicates, for `pushedFilters()` reporting. */
   def toV2Predicates(fs: Array[sources.Filter]): Array[Predicate] =
     fs.map(_.toV2)

@@ -683,4 +683,175 @@ class SnapshotMorSpec extends AnyFunSuite {
     run(feed = true)
     run(feed = false)
   }
+
+  // ---- planning: one inner parquet builder per reader role, once ----
+
+  private def triples(rs: Array[org.apache.spark.sql.Row]) =
+    rs.map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
+
+  /** `df`'s rows, and the inner parquet builders made by physical
+    * planning (`sparkPlan`), by `executedPlan` after it, and by the
+    * collect after that. */
+  private def planCounts(df: org.apache.spark.sql.DataFrame)
+      : (Set[(Long, String, Long)], Seq[Long]) = {
+    val qe = df.queryExecution
+    qe.optimizedPlan
+    def now = SnapshotTable.scanBuilders.get
+    val b0 = now
+    qe.sparkPlan
+    val b1 = now
+    qe.executedPlan
+    val b2 = now
+    val got = triples(df.collect())
+    (got, Seq(b1 - b0, now - b1, b2 - b1))
+  }
+
+  test("snapshot connector scans plan once: one inner parquet builder " +
+      "per reader role, the same on 4 and 16 buckets, and none when " +
+      "executedPlan re-plans sparkPlan or the collect runs") {
+    // every key the merge-on-read commits touch hashes to ONE bucket
+    // under 16 buckets, hence to one under 4; the lookup also probes two
+    // keys of buckets that stay clean under both layouts
+    val bucket16 = spark.range(0, 400)
+      .select(col("id"), pmod(hash(col("id")), lit(16)))
+      .as[(Long, Int)].collect().toMap
+    val b0 = bucket16(3L)
+    val touched = bucket16.keys.toSeq.sorted.filter(bucket16(_) == b0)
+    val cleanKeys = bucket16.keys.toSeq.sorted
+      .filter(k => bucket16(k) % 4 != b0 % 4).take(2)
+    val probe = touched.take(7) ++ cleanKeys
+    def counts(buckets: Int): Seq[Seq[Long]] = {
+      val root = freshRoot(s"plan$buckets")
+      SnapshotTable.create(rows(0 until 400, "a"), root, Seq("id"), buckets)
+      SnapshotTable.append(rows(400 until 440, "b"), root)
+      SnapshotTable.upsert(touched.take(3).map(i => (i, "U1", 1L))
+        .toDF("id", "tag", "v"), root, mergeOnRead = true)
+      SnapshotTable.upsert(touched.slice(2, 5).map(i => (i, "U2", 2L))
+        .toDF("id", "tag", "v"), root, mergeOnRead = true)
+      SnapshotTable.delete(touched.slice(5, 7).toDF("id"), root,
+        mergeOnRead = true)
+      val upd = touched.take(2).map(i => i -> ((i, "U1", 1L))).toMap ++
+        touched.slice(2, 5).map(i => i -> ((i, "U2", 2L)))
+      val live = (rows(0 until 400, "a").as[(Long, String, Long)].collect()
+        .toSeq ++ rows(400 until 440, "b").as[(Long, String, Long)]
+        .collect().toSeq)
+        .filterNot(r => upd.contains(r._1) || touched.slice(5, 7)
+          .contains(r._1)).toSet ++ upd.values
+      // full read: replay roles base, delta rows, keyed tombstones
+      val (read, readC) = planCounts(SnapshotTable.read(spark, root))
+      assert(read === live)
+      // lookup: the clean buckets' role too
+      val (hit, hitC) = planCounts(spark.read.format("graft-snapshot")
+        .load(root).filter(col("id").isin(probe: _*)))
+      assert(hit === live.filter(r => probe.contains(r._1)))
+      // compacted: the clean scan's one role
+      SnapshotTable.compact(spark, root)
+      val (clean, cleanC) =
+        planCounts(spark.read.format("graft-snapshot").load(root))
+      assert(clean === live)
+      // keyed positional delete: positional base and tombstone roles
+      SnapshotTable.deleteWhere(spark, root, col("id") === cleanKeys.head,
+        mergeOnRead = true)
+      val (pos, posC) = planCounts(SnapshotTable.read(spark, root))
+      assert(pos === live.filter(_._1 != cleanKeys.head))
+      Seq(readC, hitC, cleanC, posC)
+    }
+    val four = counts(4)
+    val sixteen = counts(16)
+    assert(four.map(_.head) === Seq(3L, 4L, 1L, 2L), four)
+    assert(four.forall(_.tail === Seq(0L, 0L)), four)
+    assert(sixteen === four)
+  }
+
+  test("splits regroup exactly: with tiny split sizes, keyed " +
+      "merge-on-read, keyless and keyed positional reads return literal " +
+      "rows, and a clean 16-bucket scan plans one key group and, at " +
+      "default split sizes, one partition per bucket") {
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    import org.apache.spark.sql.catalyst.plans.physical.KeyGroupedPartitioning
+    def scans(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.executedPlan.collect { case b: BatchScanExec => b }
+    val tiny = Seq("spark.sql.files.maxPartitionBytes" -> "4096",
+      "spark.sql.files.openCostInBytes" -> "1024",
+      // several row groups per data file, so splits really cut files
+      "parquet.block.size" -> "2048",
+      "spark.sql.sources.v2.bucketing.enabled" -> "true")
+    val saved = tiny.map { case (k, _) =>
+      k -> scala.util.Try(spark.conf.get(k)).toOption.filter(_ != null) }
+    val all = (0 until 2000).map(i => (i.toLong, "a", i * 10L)).toSet
+    try {
+      tiny.foreach { case (k, v) => spark.conf.set(k, v) }
+      // keyed merge-on-read: replacements, an insert and tombstones
+      val mor = freshRoot("splitmor")
+      SnapshotTable.create(rows(0 until 2000, "a"), mor, Seq("id"), 4)
+      SnapshotTable.upsert(Seq((5L, "U", 1L), (1500L, "U", 2L),
+        (2500L, "NEW", 3L)).toDF("id", "tag", "v"), mor, mergeOnRead = true)
+      SnapshotTable.delete(Seq(6L, 1501L).toDF("id"), mor,
+        mergeOnRead = true)
+      val morRows = all.filterNot(r => Set(5L, 6L, 1500L, 1501L)(r._1)) ++
+        Set((5L, "U", 1L), (1500L, "U", 2L), (2500L, "NEW", 3L))
+      val connector = spark.read.format("graft-snapshot").load(mor)
+      val morSplits = scans(connector).flatMap(_.inputPartitions).map {
+        case m: graft.sources.MorInputPartition => m.base.size
+        case _ => 0
+      }.sum
+      val morFiles = snapAt(mor, 1L).dirFiles.values.map(_.size).sum
+      assert(morSplits > morFiles, s"$morSplits splits of $morFiles files")
+      assert(triples(connector.collect()) === morRows)
+      assert(asSet(SnapshotTable.read(spark, mor)) === morRows)
+      // keyless positional: row indexes name rows across splits
+      val kl = freshRoot("splitkl")
+      SnapshotTable.create(rows(0 until 2000, "a"), kl, Seq.empty, 1)
+      SnapshotTable.deleteWhere(spark, kl, col("id") % 7L === 0L,
+        mergeOnRead = true)
+      assert(asSet(SnapshotTable.read(spark, kl)) === all.filter(_._1 % 7 != 0))
+      val ids = spark.read.format("graft-snapshot").load(kl)
+        .select("_sdv_file", "_sdv_pos")
+        .as[(String, Long)].collect()
+      assert(ids.length === all.count(_._1 % 7 != 0) &&
+        ids.distinct.length === ids.length)
+      // keyed positional deleteWhere, stacked twice
+      val kp = freshRoot("splitkp")
+      SnapshotTable.create(rows(0 until 2000, "a"), kp, Seq("id"), 4)
+      SnapshotTable.deleteWhere(spark, kp, col("id") % 9L === 0L,
+        mergeOnRead = true)
+      SnapshotTable.deleteWhere(spark, kp, col("v") >= 19000L,
+        mergeOnRead = true)
+      assert(asSet(SnapshotTable.read(spark, kp)) ===
+        all.filter(r => r._1 % 9 != 0 && r._3 < 19000L))
+      // a clean 16-bucket scan (through a catalog, which resolves the
+      // bucket transform): one key group per bucket however the files
+      // split
+      val clean = freshRoot("split16")
+      SnapshotTable.create(rows(0 until 8000, "a"), clean, Seq("id"), 16)
+      spark.conf.set("spark.sql.catalog.splitcat",
+        "graft.sources.SnapshotCatalog")
+      spark.conf.set("spark.sql.catalog.splitcat.warehouse",
+        new java.io.File(clean).getParent)
+      val cleanScan = spark.table("splitcat.tbl")
+      scans(cleanScan) match {
+        case Seq(b) => b.outputPartitioning match {
+          case k: KeyGroupedPartitioning =>
+            assert(k.partitionValues.size === 16)
+            assert(b.inputPartitions.size > 16, "files did not split")
+          case other => fail(s"expected key-grouped partitioning: $other")
+        }
+        case other => fail(s"expected one scan: $other")
+      }
+      assert(triples(cleanScan.collect()) ===
+        (0 until 8000).map(i => (i.toLong, "a", i * 10L)).toSet)
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+    // default split sizes: two appends give every bucket three small
+    // files, and the scan packs each bucket's files into one partition
+    val packed = freshRoot("packed16")
+    SnapshotTable.create(rows(0 until 2000, "a"), packed, Seq("id"), 16)
+    SnapshotTable.append(rows(2000 until 2400, "b"), packed)
+    SnapshotTable.append(rows(2400 until 2800, "c"), packed)
+    val packedScan = spark.read.format("graft-snapshot").load(packed)
+    assert(scans(packedScan).map(_.inputPartitions.size) === Seq(16))
+    assert(packedScan.count() === 2800L)
+  }
 }

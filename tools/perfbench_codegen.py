@@ -9,8 +9,12 @@ log4j2 configuration that logs Spark's `CodeGenerator` at INFO, with
 millisecond timestamps, to a file of its own, and prints:
 
 - for every operation kind (`op.<kind>` spans, traced half only): spans,
-  compiles and compile milliseconds per operation, and the jobs and SQL
-  executions that start inside them;
+  compiles and compile milliseconds per operation, the jobs and SQL
+  executions that start inside them, the L2 milliseconds per operation
+  (inside a SQL execution with no job running, by interval union as the
+  benchmark's `l2_plan.s`), and the milliseconds per operation its SQL
+  executions wait from their start to their first job (an execution
+  that runs no job counts none);
 - the compiles outside any traced operation (set-up and the untraced
   half), and the traced window's jobs and SQL executions per operation as
   the result file reports them (they include the workload's checks);
@@ -23,6 +27,7 @@ tree's perfbench/run.py) with the log4j2 configuration swapped; nothing
 under perfbench/ changes. The log and the span trace stay in
 <tree>/.bench_work/codegen-<workload>-<seed>/.
 """
+import bisect
 import collections
 import re
 import sys
@@ -54,6 +59,40 @@ logger.codegen.appenderRef.codegen.ref = codegen
 """
 
 
+def union(ivs):
+    """Merged [start, end) intervals."""
+    out = []
+    for s, e in sorted(iv for iv in ivs if iv[1] > iv[0]):
+        if out and s <= out[-1][1]:
+            out[-1][1] = max(out[-1][1], e)
+        else:
+            out.append([s, e])
+    return out
+
+
+def covered(ivs, lo, hi):
+    """Milliseconds of [lo, hi) inside the merged intervals `ivs`."""
+    return sum(max(0, min(e, hi) - max(s, lo)) for s, e in ivs)
+
+
+def planning_ms(ops, trace):
+    """Per operation kind: the L2 milliseconds of its spans (inside a SQL
+    execution, no job running), and the milliseconds its SQL executions
+    wait from their start to their first job."""
+    jobs = [(j["start_ms"], j["end_ms"]) for j in trace["jobs"] if j["end_ms"] > 0]
+    execs = [(e["start_ms"], e["end_ms"]) for e in trace["sql_executions"] if e["end_ms"] > 0]
+    job_u, busy_u = union(jobs), union(jobs + execs)
+    job_starts = sorted(s for s, _ in jobs)
+    l2, wait = collections.Counter(), collections.Counter()
+    for lo, hi, kind in ops:
+        l2[kind] += covered(busy_u, lo, hi) - covered(job_u, lo, hi)
+        for s, e in execs:
+            i = bisect.bisect_left(job_starts, s)
+            if lo <= s <= hi and i < len(job_starts) and job_starts[i] <= e:
+                wait[kind] += job_starts[i] - s
+    return l2, wait
+
+
 def main() -> None:
     tree, workload, seed = perfbench_traced.args(__doc__)
 
@@ -83,16 +122,17 @@ def main() -> None:
         by_thread[(kind is not None, "executor" if executor else "driver")] += 1
     jobs = collections.Counter(op_at(j["start_ms"]) for j in trace["jobs"])
     execs = collections.Counter(op_at(e["start_ms"]) for e in trace["sql_executions"])
+    l2_ms, wait_ms = planning_ms(ops, trace)
 
     print(f"== {workload} seed={seed} tree={tree}: {len(ops)} traced operations, "
           f"failed {res['failed']}/{res['attempted']}")
-    print("compiles (CodeGenerator) per operation span")
+    print("per operation span: compiles (CodeGenerator), jobs, SQL executions, planning")
     print(f"  {'kind':20s} {'ops':>5s} {'compiles':>9s} {'per op':>8s} {'ms per op':>10s} "
-          f"{'jobs/op':>8s} {'sql/op':>7s}")
+          f"{'jobs/op':>8s} {'sql/op':>7s} {'L2 ms/op':>9s} {'pre-job ms/op':>14s}")
     for kind in sorted(n_ops):
         n = n_ops[kind]
         print(f"  {kind:20s} {n:5d} {compiles[kind]:9d} {compiles[kind] / n:8.1f} {ms[kind] / n:10.1f} "
-              f"{jobs[kind] / n:8.1f} {execs[kind] / n:7.1f}")
+              f"{jobs[kind] / n:8.1f} {execs[kind] / n:7.1f} {l2_ms[kind] / n:9.1f} {wait_ms[kind] / n:14.1f}")
     print(f"outside traced ops: {compiles[None]} compiles, {ms[None]:.0f} ms")
     layer = res["per_layer"]
     print(f"traced window per operation (result.json): l3_exec.jobs={layer['l3_exec.jobs']:.1f} "
