@@ -784,36 +784,16 @@ private[graft] class SnapshotScan(snap: SnapshotTable.Snapshot,
     * over the entries this scan will actually read (bucket- and
     * stats-pruned), not the whole table — a key point-lookup on a
     * 100 TB table reports ~1/buckets of its size, so AQE/CBO broadcast
-    * that side of a join instead of defaulting it to "unknown = huge".
-    * Rows are an upper bound under residual filters (Spark expects
-    * pre-filter scan stats). Absent manifest fields (pre-statistics
-    * history) report empty and Spark falls back to its defaults —
-    * never a guess. */
+    * that side of a join instead of defaulting it to "unknown = huge"
+    * ([[SnapshotTable.dirStatistics]]). */
   override def estimateStatistics()
-      : org.apache.spark.sql.connector.read.Statistics = {
-    val dirs = entries.map(_._2)
-    def total(m: Map[String, Long]): java.util.OptionalLong =
-      if (dirs.nonEmpty && dirs.forall(m.contains))
-        java.util.OptionalLong.of(dirs.iterator.map(m).sum)
-      else if (dirs.isEmpty) java.util.OptionalLong.of(0L)
-      else java.util.OptionalLong.empty()
-    val bytes = total(snap.dirBytes)
-    val rows = total(snap.dirRows)
-    new org.apache.spark.sql.connector.read.Statistics {
-      override def sizeInBytes(): java.util.OptionalLong = bytes
-      override def numRows(): java.util.OptionalLong = rows
-    }
-  }
+      : org.apache.spark.sql.connector.read.Statistics =
+    SnapshotTable.dirStatistics(snap, entries.map(_._2))
 
   /** Files store PHYSICAL column names (column mapping): the delegated
     * parquet plane reads the physicalized schema with attribute-renamed
-    * pushed filters, and [[readSchema]] relabels the pruned result back
-    * to the logical view — InternalRows are positional, so the data
-    * plane never copies. */
-  private def physSchema(st: StructType): StructType =
-    if (snap.colMap.isEmpty) st
-    else StructType(st.fields.map(f =>
-      f.copy(name = snap.colMap.getOrElse(f.name, f.name))))
+    * pushed filters, and its rows come back positional, so the data
+    * plane never copies and [[readSchema]] stays the logical view. */
   private val physFilters = SnapshotTable.physFilters(snap, catalystFilters)
 
   /** The MANIFEST's frozen existence defaults in physical-name space —
@@ -823,26 +803,9 @@ private[graft] class SnapshotScan(snap: SnapshotTable.Snapshot,
     * so time travel fills each version's truth and plain ADD COLUMN
     * (no DEFAULT) keeps the null contract. */
   private def metaFor(st: StructType): StructType =
-    SnapshotTable.readSchemaMetaPhys(snap, physSchema(st))
+    SnapshotTable.readSchemaMetaPhys(snap, st)
 
-  private def inner(paths: Seq[String]): Scan =
-    SnapshotTable.parquetScanOf(paths, snap.dirFiles, metaFor(tableSchema),
-      metaFor(required), physFilters)
-
-  /** Schema does not depend on the file list, so it must not freeze
-    * one: `readSchema` is asked BEFORE runtime filters arrive, and a
-    * cached file-bearing scan would plan the pre-filter entries. */
-  private lazy val schemaOnlyScan: Scan = inner(Seq.empty)
-
-  override def readSchema(): StructType = {
-    val raw = schemaOnlyScan.readSchema()
-    if (snap.colMap.isEmpty) raw
-    else {
-      val back = snap.logicalOf
-      StructType(raw.fields.map(f =>
-        f.copy(name = back.getOrElse(f.name, f.name))))
-    }
-  }
+  override def readSchema(): StructType = required
   override def description(): String =
     s"graft-snapshot v${snap.version} (${entries.size} dirs)"
 
@@ -911,7 +874,8 @@ private[graft] class SnapshotScan(snap: SnapshotTable.Snapshot,
 
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new SnapshotMicroBatchStream(root, inner, ignoreChanges, streamOpts)
+    SnapshotMicroBatchStream.of(snap, root, tableSchema, required,
+      physFilters, ignoreChanges, streamOpts)
 }
 
 /** A delegate input partition stamped with its key-hash bucket id —
@@ -1112,9 +1076,11 @@ private[graft] object StreamAdmission {
   *     Delta's documented `ignoreChanges` caveat.
   *
   * The version listing re-reads the manifest catalog each trigger
-  * (O(versions) driver metadata); partitions and the reader factory are
-  * delegated to per-range parquet scans, so executors stream the same
-  * vectorized path batch reads use.
+  * (O(versions) driver metadata). Each batch's dirs plan as ONE reader
+  * role (`plan`, [[SnapshotTable.planRole]], the path every snapshot
+  * scan plans through): its partitions, and its reader factory, so
+  * executors stream the same vectorized path batch reads use. A batch
+  * that serves no dir builds nothing.
   *
   * ADMISSION CONTROL ([[SupportsAdmissionControl]], the Delta source
   * shape): `maxFilesPerTrigger` / `maxBytesPerTrigger` /
@@ -1127,7 +1093,7 @@ private[graft] object StreamAdmission {
   * the head at query start, so `Trigger.AvailableNow` drains exactly
   * the backlog-at-start in bounded batches and stops. */
 private[graft] class SnapshotMicroBatchStream(root: String,
-    inner: Seq[String] => Scan, ignoreChanges: Boolean,
+    plan: Seq[String] => SnapshotTable.PlannedRole, ignoreChanges: Boolean,
     opts: SnapshotStreamOptions = SnapshotStreamOptions())
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl
@@ -1470,20 +1436,48 @@ private[graft] class SnapshotMicroBatchStream(root: String,
     }
   }
 
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val dirs = rangeDirs(start.asInstanceOf[SnapshotOffset],
-      end.asInstanceOf[SnapshotOffset])
-    if (dirs.isEmpty) Array.empty
-    else inner(dirs).toBatch.planInputPartitions()
+  /** The last planned batch `(start, end)` and its role: a batch is
+    * planned once however often Spark asks for its partitions. */
+  private var planned: Option[((Offset, Offset), SnapshotTable.PlannedRole)] =
+    None
+
+  override def planInputPartitions(start: Offset,
+      end: Offset): Array[InputPartition] = synchronized {
+    val r = planned.filter(_._1 == ((start, end))).map(_._2).getOrElse {
+      val r = plan(rangeDirs(start.asInstanceOf[SnapshotOffset],
+        end.asInstanceOf[SnapshotOffset]))
+      planned = Some(((start, end), r))
+      r
+    }
+    r.parts.toArray
   }
 
-  /** File-list independent (parquet reader factories carry schema+conf,
-    * partitions carry the files), so one factory serves every batch. */
+  /** The planned batch's role factory: a factory depends only on schema,
+    * filters and conf, and Spark asks a micro-batch scan for its
+    * partitions before its factory; a batch that planned no partition
+    * never makes a reader. */
   override def createReaderFactory(): PartitionReaderFactory =
-    inner(Seq.empty).toBatch.createReaderFactory()
+    synchronized(planned.fold[PartitionReaderFactory](
+      SnapshotTable.NoPartitionsReaderFactory)(_._2.factory))
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
+}
+
+private[graft] object SnapshotMicroBatchStream {
+  /** The stream of a connector scan over `snap`: each batch's dirs plan
+    * as one role under the scan's pruned schema and pushed filters. */
+  def of(snap: SnapshotTable.Snapshot, root: String, tableSchema: StructType,
+      required: StructType,
+      physFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
+      ignoreChanges: Boolean, opts: SnapshotStreamOptions)
+      : SnapshotMicroBatchStream = {
+    val (tbl, req) = (SnapshotTable.readSchemaMetaPhys(snap, tableSchema),
+      SnapshotTable.readSchemaMetaPhys(snap, required))
+    new SnapshotMicroBatchStream(root,
+      SnapshotTable.planRole(_, snap.dirFiles, tbl, req, physFilters),
+      ignoreChanges, opts)
+  }
 }
 
 // ---- change-data-feed reads (`option("readChangeFeed", "true")`) ----
@@ -1546,6 +1540,12 @@ private[graft] class SnapshotCdfScanBuilder(snap: SnapshotTable.Snapshot,
   *     full-table diff; run [[SnapshotTable.readChanges]] as a batch
   *     job for those.
   *
+  * A range (the batch's `[startingVersion, endingVersion]`, or one
+  * micro-batch) plans as two reader roles through
+  * [[SnapshotTable.planRole]], the path every snapshot scan plans
+  * through: all of its commits' fresh data dirs, and all of its `_cdc`
+  * dirs — two parquet builders per range, never one per commit.
+  *
   * Streaming offsets are manifest versions (the
   * [[SnapshotMicroBatchStream]] discipline), so checkpointed restarts
   * resume exactly after the last served commit; `startingVersion` (its
@@ -1555,11 +1555,11 @@ private[graft] class SnapshotCdfScanBuilder(snap: SnapshotTable.Snapshot,
 private[graft] object SnapshotCdfScan {
   /** Why commit `s` can NEVER serve a change feed, or None when it can —
     * the ONE source of truth shared by plan-time refusal
-    * ([[SnapshotCdfScan.commitPartitions]]) and the STREAM's admission
+    * ([[SnapshotCdfScan.commitDirs]]) and the STREAM's admission
     * walk ([[SnapshotCdfMicroBatchStream.latestOffset]], which must
     * refuse BEFORE Spark logs an offset covering the commit; refused
     * only at plan time, the logged batch would replay into the same
-    * error forever). Keep in lockstep with commitPartitions' match. */
+    * error forever). Keep in lockstep with commitDirs' match. */
   def unservableOp(root: String, s: SnapshotTable.Snapshot): Option[String] =
     s.op match {
       // a clone's v1 IS its table's initial content (served as inserts,
@@ -1602,8 +1602,7 @@ private[graft] class SnapshotCdfScan(snap: SnapshotTable.Snapshot,
   // an ADD COLUMN … DEFAULT serves pre-add commits' rows with the
   // frozen fill — the same value a table read of those rows returns
   // (per-file footer truth, post-add files verbatim)
-  private val physTable = SnapshotTable.readSchemaMetaPhys(snap,
-    snap.physicalSchema(snap.schemaDdl))
+  private val physTable = SnapshotTable.readSchemaMetaPhys(snap, tableSchema)
   private val cdcFileSchema = physTable
     .add(SnapshotTable.ChangeTypeCol, "string")
 
@@ -1615,87 +1614,88 @@ private[graft] class SnapshotCdfScan(snap: SnapshotTable.Snapshot,
 
   private def spark = SparkSession.active
 
-  private def rawInner(paths: Seq[String],
-      files: Map[String, Seq[(String, Long)]] = Map.empty): Scan = {
-    val b = SnapshotTable.scanBuilderOf(paths, files, physTable)
-    GraftParquetBridge.pruneColumns(b, physTable)
-    GraftParquetBridge.buildScan(b)
-  }
-  private def cdcInner(paths: Seq[String],
-      files: Map[String, Seq[(String, Long)]] = Map.empty): Scan = {
-    val b = SnapshotTable.scanBuilderOf(paths, files, cdcFileSchema)
-    GraftParquetBridge.pruneColumns(b, cdcFileSchema)
-    GraftParquetBridge.buildScan(b)
-  }
-
-  private[sources] def readerFactory: PartitionReaderFactory =
-    new CdfReaderFactory(rawInner(Seq.empty).toBatch.createReaderFactory(),
-      cdcInner(Seq.empty).toBatch.createReaderFactory())
-
-  /** Partitions for ONE commit's changes (`next` against its
-    * predecessor `prev`). Unservable commits refuse with
-    * [[SnapshotCdfScan.unservableOp]]'s reason — the SAME check the
-    * streaming admission path runs BEFORE logging an offset, so the
-    * plan-time error here only ever fires on batch reads (a stream
-    * never logs past an unservable commit). */
-  private[sources] def commitPartitions(prev: Option[SnapshotTable.Snapshot],
-      next: SnapshotTable.Snapshot): Array[InputPartition] = {
+  /** ONE commit's change dirs (`next` against its predecessor `prev`):
+    * data dirs read verbatim as inserts, and the recorded `_cdc` dir.
+    * Unservable commits refuse with [[SnapshotCdfScan.unservableOp]]'s
+    * reason — the SAME check the streaming admission path runs BEFORE
+    * logging an offset, so the plan-time error here only ever fires on
+    * batch reads (a stream never logs past an unservable commit). */
+  private def commitDirs(prev: Option[SnapshotTable.Snapshot],
+      next: SnapshotTable.Snapshot): (Seq[String], Option[String]) = {
     SnapshotCdfScan.unservableOp(root, next).foreach(sys.error)
-    def raw(dirs: Seq[String]): Array[InputPartition] =
-      if (dirs.isEmpty) Array.empty
-      else rawInner(dirs, next.dirFiles).toBatch.planInputPartitions()
-        .map(p =>
-          CdfInputPartition(p, fromCdc = false, "insert", next.version))
     next.op match {
-      case "create" | "clone" => raw(next.entries.map(_._2))
+      case "create" | "clone" => (next.entries.map(_._2), None)
       case "append" =>
-        raw(next.entries.map(_._2).diff(
+        (next.entries.map(_._2).diff(
           prev.getOrElse(sys.error(s"change feed needs version " +
-            s"${next.version - 1} at $root (vacuumed?)")).entries.map(_._2)))
+            s"${next.version - 1} at $root (vacuumed?)")).entries.map(_._2)),
+          None)
       case "upsert" | "delete" | "delete-pos" if next.cdc.isDefined =>
-        cdcInner(Seq(next.cdc.get), next.dirFiles).toBatch
-          .planInputPartitions().map(p =>
-            CdfInputPartition(p, fromCdc = true, null, next.version))
-      case "widen-column" =>
-        Array.empty // pure-metadata commit: zero row changes
-      case "zorder" | "compact" => Array.empty // content-neutral rewrites
-      case "rescale" | "rename-column" | "drop-column" |
-           "set-constraint" | "drop-constraint" | "repartition-spec" |
-           "set-default" | "add-column" =>
-        Array.empty // pure-metadata commits: zero row changes
+        (Nil, next.cdc)
+      // content-neutral rewrites and pure-metadata commits: no changes
+      case "zorder" | "compact" | "widen-column" | "rescale" |
+           "rename-column" | "drop-column" | "set-constraint" |
+           "drop-constraint" | "repartition-spec" | "set-default" |
+           "add-column" => (Nil, None)
       case other => sys.error( // unreachable: unservableOp covers it
         s"change feed hit commit v${next.version} (op=$other) at $root " +
           "with no recorded change data")
     }
   }
 
-  /** Partitions for every commit in `[fromV, toV]`, against the LIVE
+  /** The plan of every commit in `[fromV, toV]`, against the LIVE
     * manifest catalog (streaming sees commits newer than the pinned
-    * snapshot). */
-  private[sources] def rangePartitions(fromV: Long,
-      toV: Long): Array[InputPartition] = {
-    if (toV < fromV) return Array.empty
-    val byV = SnapshotTable.versionWindow(spark, root,
-      math.max(1L, fromV - 1), toV)
-    (fromV to toV).toArray.flatMap { v =>
+    * snapshot): the range plans as TWO reader roles
+    * ([[SnapshotTable.planRole]]) — every commit's raw data dirs, and
+    * every `_cdc` dir — over the union of the range's `files=` lists,
+    * and each commit's splits come back packed per commit, tagged with
+    * its version. */
+  private[sources] def rangePlan(fromV: Long, toV: Long)
+      : (Array[InputPartition], PartitionReaderFactory) = {
+    val byV =
+      if (toV < fromV) Map.empty[Long, SnapshotTable.Snapshot]
+      else SnapshotTable.versionWindow(spark, root,
+        math.max(1L, fromV - 1), toV)
+    val commits = (fromV to toV).map { v =>
       val next = byV.getOrElse(v, sys.error(
         s"change-feed version $v vanished from $root (vacuumed?)"))
-      commitPartitions(byV.get(v - 1), next)
+      v -> commitDirs(byV.get(v - 1), next)
     }
+    val files = byV.values.flatMap(_.dirFiles).toMap
+    def role(dirs: Seq[String], schema: StructType) =
+      SnapshotTable.planRole(dirs, files, schema, schema, Nil)
+    val rawR = role(commits.flatMap(_._2._1), physTable)
+    val cdcR = role(commits.flatMap(_._2._2), cdcFileSchema)
+    (commits.flatMap { case (v, (raw, cdc)) =>
+      rawR.packed(raw).map(
+        CdfInputPartition(_, fromCdc = false, "insert", v)) ++
+        cdcR.packed(cdc.toSeq).map(
+          CdfInputPartition(_, fromCdc = true, null, v))
+    }.toArray[InputPartition],
+      new CdfReaderFactory(rawR.factory, cdcR.factory))
   }
 
-  override def toBatch: Batch = {
+  private lazy val batchRange: (Long, Long) = {
     val s = startingVersion.getOrElse(sys.error(
       "batch change-feed reads need option startingVersion (streaming " +
         "reads may omit it: they default to changes after the load)"))
     val e = endingVersion.getOrElse(snap.version)
     require(s >= 1 && s <= e,
       s"bad change-feed range [$s, $e] (have versions up to ${snap.version})")
+    (s, e)
+  }
+
+  /** The batch range's one plan, on the scan: `executedPlan` plans a
+    * clone of `sparkPlan` whose scan node asks for a new [[Batch]]. */
+  private lazy val batchPlan = rangePlan(batchRange._1, batchRange._2)
+
+  override def toBatch: Batch = {
+    batchRange
     new Batch {
       override def planInputPartitions(): Array[InputPartition] =
-        rangePartitions(s, e)
+        batchPlan._1
       override def createReaderFactory(): PartitionReaderFactory =
-        readerFactory
+        batchPlan._2
     }
   }
 
@@ -1751,7 +1751,7 @@ private[graft] class CdfReaderFactory(
 
 /** Micro-batch stream over the change feed: offsets are manifest
   * versions, batch `(start, end]` serves each commit's recorded changes
-  * ([[SnapshotCdfScan.rangePartitions]]) — exactly-once across restarts
+  * ([[SnapshotCdfScan.rangePlan]]) — exactly-once across restarts
   * by the same offset discipline as the append-tailing source.
   *
   * ADMISSION CONTROL (`maxFilesPerTrigger` / `maxBytesPerTrigger` /
@@ -1784,7 +1784,7 @@ private[graft] class SnapshotCdfMicroBatchStream(root: String,
     availableNowCap = Some(head())
 
   /** A delta-bearing clone's v1 can never serve a change feed
-    * (commitPartitions refuses it — base entries alone are
+    * (commitDirs refuses it — base entries alone are
     * change-incomplete). Refuse BEFORE any offset covering v1 is
     * logged: thrown at plan time the refusal would wedge the
     * checkpoint (the logged batch replays into the same error
@@ -1894,14 +1894,28 @@ private[graft] class SnapshotCdfMicroBatchStream(root: String,
     }
   }
 
-  override def planInputPartitions(start: Offset,
-      end: Offset): Array[InputPartition] =
-    scan.rangePartitions(
-      start.asInstanceOf[SnapshotOffset].version + 1,
-      end.asInstanceOf[SnapshotOffset].version)
+  /** The last planned range `(start, end]` and its plan
+    * ([[SnapshotCdfScan.rangePlan]]): a batch is planned once however
+    * often Spark asks for its partitions. */
+  private var planned: Option[((Long, Long),
+    (Array[InputPartition], PartitionReaderFactory))] = None
 
+  override def planInputPartitions(start: Offset,
+      end: Offset): Array[InputPartition] = synchronized {
+    val range = (start.asInstanceOf[SnapshotOffset].version + 1,
+      end.asInstanceOf[SnapshotOffset].version)
+    planned.filter(_._1 == range).map(_._2).getOrElse {
+      val p = scan.rangePlan(range._1, range._2)
+      planned = Some(range -> p)
+      p
+    }._1
+  }
+
+  /** The planned range's factory: Spark asks a micro-batch scan for its
+    * partitions before its factory. */
   override def createReaderFactory(): PartitionReaderFactory =
-    scan.readerFactory
+    synchronized(planned.fold[PartitionReaderFactory](
+      SnapshotTable.NoPartitionsReaderFactory)(_._2._2))
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()

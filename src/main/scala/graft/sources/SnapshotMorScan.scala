@@ -93,27 +93,14 @@ private[graft] class SnapshotMorScan(snap: SnapshotTable.Snapshot,
     StructType(tableSchema.fields.filter(f => snap.keys.contains(f.name)))
 
   /** Files store PHYSICAL names (column mapping): the delegated scans
-    * read physicalized schemas with renamed pushed filters; output rows
-    * are positional, so the replay projections bind unchanged. */
-  private def physSchema(st: StructType): StructType =
-    if (snap.colMap.isEmpty) st
-    else StructType(st.fields.map(f =>
-      f.copy(name = snap.colMap.getOrElse(f.name, f.name))))
-
-  /** Manifest existence defaults in physical-name space — the only
-    * default metadata allowed to reach the parquet plane: pre-add
-    * base/delta files fill the frozen ADD COLUMN value per footer
-    * truth ([[SnapshotTable.readSchemaMetaPhys]]). */
+    * read physicalized schemas with renamed pushed filters and the
+    * manifest's existence defaults — the only default metadata allowed
+    * to reach the parquet plane: pre-add base/delta files fill the
+    * frozen ADD COLUMN value per footer truth
+    * ([[SnapshotTable.readSchemaMetaPhys]]). Output rows are positional,
+    * so the replay projections bind unchanged. */
   private def metaFor(st: StructType): StructType =
     SnapshotTable.readSchemaMetaPhys(snap, st)
-
-  /** Parquet row-index generated column — appended LAST to base/delta
-    * read schemas when positional tombstones are present, so every
-    * prefix-bound projection (keys, required) is position-stable. */
-  private val idxCol = GraftParquetBridge.rowIndexTempColumn
-  private def plusIdx(st: StructType): StructType = StructType(
-    st.fields :+ org.apache.spark.sql.types.StructField(idxCol,
-      org.apache.spark.sql.types.LongType))
 
   private val physFilters = SnapshotTable.physFilters(snap, catalystFilters)
 
@@ -123,12 +110,12 @@ private[graft] class SnapshotMorScan(snap: SnapshotTable.Snapshot,
   private def role(dirs: Seq[String], schema: StructType,
       pushFilters: Boolean, withIdx: Boolean = false)
       : SnapshotTable.PlannedRole = {
-    val tbl = metaFor(physSchema(tableSchema))
-    val sch = metaFor(physSchema(schema))
-    SnapshotTable.planRole(dirs, snap.dirFiles,
-      if (withIdx) plusIdx(tbl) else tbl,
-      if (withIdx) plusIdx(sch) else sch,
-      if (pushFilters) physFilters else Nil)
+    // the parquet row index rides LAST when positional tombstones are
+    // present, so every prefix-bound projection is position-stable
+    def read(st: StructType) =
+      metaFor(if (withIdx) GraftParquetBridge.withRowIndex(st) else st)
+    SnapshotTable.planRole(dirs, snap.dirFiles, read(tableSchema),
+      read(schema), if (pushFilters) physFilters else Nil)
   }
 
   override def readSchema(): StructType = required
@@ -161,22 +148,12 @@ private[graft] class SnapshotMorScan(snap: SnapshotTable.Snapshot,
       Array(Expressions.bucket(snap.buckets, snap.keys: _*)), buckets.size)
   }
 
+  /** Upper bounds: tombstones subtract and replacements shadow at
+    * read, which planner statistics may legitimately overestimate. */
   override def estimateStatistics()
-      : org.apache.spark.sql.connector.read.Statistics = {
-    val dirs = baseEntries.map(_._2) ++ deltas.map(_.dir)
-    val bytes = dirs.flatMap(snap.dirBytes.get)
-    val rows = dirs.flatMap(snap.dirRows.get)
-    new org.apache.spark.sql.connector.read.Statistics {
-      // upper bounds: tombstones subtract and replacements shadow at
-      // read, which planner statistics may legitimately overestimate
-      override def sizeInBytes(): java.util.OptionalLong =
-        if (bytes.size == dirs.size) java.util.OptionalLong.of(bytes.sum)
-        else java.util.OptionalLong.empty()
-      override def numRows(): java.util.OptionalLong =
-        if (rows.size == dirs.size) java.util.OptionalLong.of(rows.sum)
-        else java.util.OptionalLong.empty()
-    }
-  }
+      : org.apache.spark.sql.connector.read.Statistics =
+    SnapshotTable.dirStatistics(snap,
+      baseEntries.map(_._2) ++ deltas.map(_.dir))
 
   /** The scan's one plan (it reads one pinned snapshot, so planning
     * once per scan is planning once per query, however often Spark asks):
@@ -253,7 +230,7 @@ private[graft] class SnapshotMorScan(snap: SnapshotTable.Snapshot,
     ((cleanParts ++ dirtyParts).toArray,
       new MorReaderFactory(cleanR.factory, baseR.factory, rowsR.factory,
         tombR.factory, posR.factory,
-        (if (hasPos) plusIdx(withKeys) else withKeys)
+        (if (hasPos) GraftParquetBridge.withRowIndex(withKeys) else withKeys)
           .fields.map(_.dataType),
         keySchema.fields.map(_.dataType),
         snap.keys.map(k => withKeys.fieldIndex(k)).toArray,
@@ -273,11 +250,8 @@ private[graft] class SnapshotMorScan(snap: SnapshotTable.Snapshot,
     * `ignoreChanges`, the documented under-delivery caveat). */
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new SnapshotMicroBatchStream(root,
-      paths => SnapshotTable.parquetScanOf(paths, snap.dirFiles,
-        metaFor(physSchema(tableSchema)), metaFor(physSchema(required)),
-        physFilters),
-      ignoreChanges, streamOpts)
+    SnapshotMicroBatchStream.of(snap, root, tableSchema, required,
+      physFilters, ignoreChanges, streamOpts)
 }
 
 /** One delta-bearing bucket class: base and delta-row file partitions
@@ -346,18 +320,7 @@ private[graft] class MorPartitionReader(part: MorInputPartition,
   private val maxEvent = new mutable.HashMap[UnsafeRow, Long]
   private val bufferedDeltas = mutable.ArrayBuffer.empty[(Long, UnsafeRow, UnsafeRow)]
 
-  /** (file suffix → recorded positions); O(class' tombstones) memory —
-    * the deletion-vector residency bound. */
-  private val dead = new mutable.HashMap[String, java.util.HashSet[java.lang.Long]]
-  part.posTombs.foreach { tp =>
-    val r = posF.createReader(tp)
-    try while (r.next()) {
-      val row = r.get()
-      if (!row.isNullAt(0) && !row.isNullAt(1))
-        dead.getOrElseUpdate(row.getUTF8String(0).toString,
-          new java.util.HashSet[java.lang.Long]()).add(row.getLong(1))
-    } finally r.close()
-  }
+  private val dead = PosPartitionReader.deadSet(part.posTombs, posF)
 
   private def isDead(suffix: String, row: InternalRow): Boolean =
     posIdx >= 0 && {
@@ -489,11 +452,6 @@ private[graft] class SnapshotPosScan(snap: SnapshotTable.Snapshot,
     "SnapshotPosScan serves pos-only delta sets; event kinds replay " +
       "through SnapshotMorScan")
 
-  private def physSchema(st: StructType): StructType =
-    if (snap.colMap.isEmpty) st
-    else StructType(st.fields.map(f =>
-      f.copy(name = snap.colMap.getOrElse(f.name, f.name))))
-
   /** The scan can SYNTHESIZE the row-identity metadata columns
     * (`_sdv_file`, `_sdv_pos`) when the required schema asks for them —
     * the surface Spark's delta-based row-level operations bind their
@@ -509,14 +467,9 @@ private[graft] class SnapshotPosScan(snap: SnapshotTable.Snapshot,
   private val dataRequired: StructType = StructType(
     required.fields.filterNot(f => IdentityNames(f.name)))
 
-  /** Base read schema: the physicalized data columns plus the parquet
-    * readers' row-index generated column (always LAST, so data-column
-    * ordinals are stable). */
-  private val idxCol = org.apache.spark.sql.GraftParquetBridge.rowIndexTempColumn
-  private val withIdx: StructType = StructType(
-    physSchema(dataRequired).fields :+
-      org.apache.spark.sql.types.StructField(idxCol,
-        org.apache.spark.sql.types.LongType))
+  /** Base read schema: the data columns plus the parquet readers'
+    * row-index generated column. */
+  private val withIdx: StructType = GraftParquetBridge.withRowIndex(dataRequired)
 
   /** Reader-side row layout is JoinedRow([data..., rowIdx], [suffix]);
     * one bind per required output field. */
@@ -538,43 +491,24 @@ private[graft] class SnapshotPosScan(snap: SnapshotTable.Snapshot,
     catalystFilters.filterNot(_.references.exists(
       a => IdentityNames(a.name)))
 
-  /** Manifest existence defaults in physical-name space — the only
+  /** Physical names with the manifest's existence defaults — the only
     * default metadata allowed to reach the parquet plane: pre-add
-    * base/delta files fill the frozen ADD COLUMN value per footer
-    * truth ([[SnapshotTable.readSchemaMetaPhys]]). */
+    * base files fill the frozen ADD COLUMN value per footer truth
+    * ([[SnapshotTable.readSchemaMetaPhys]]). */
   private def metaFor(st: StructType): StructType =
     SnapshotTable.readSchemaMetaPhys(snap, st)
 
   private val physPushable = SnapshotTable.physFilters(snap, pushableFilters)
-
-  /** Table schema the base inner scans are built under: physical table
-    * columns plus the row-index column, so pruning to [[withIdx]] is a
-    * legal subset. */
-  private val baseTblSchema: StructType = StructType(
-    physSchema(tableSchema).fields :+
-      org.apache.spark.sql.types.StructField(idxCol,
-        org.apache.spark.sql.types.LongType))
 
   override def readSchema(): StructType = required
   override def description(): String =
     s"graft-snapshot v${snap.version} positional merge-on-read " +
       s"(${baseEntries.size} base dirs, ${posDeltas.size} tombstone dirs)"
 
+  /** Upper bounds: tombstoned rows subtract at read. */
   override def estimateStatistics()
-      : org.apache.spark.sql.connector.read.Statistics = {
-    val dirs = baseEntries.map(_._2)
-    val bytes = dirs.flatMap(snap.dirBytes.get)
-    val rows = dirs.flatMap(snap.dirRows.get)
-    new org.apache.spark.sql.connector.read.Statistics {
-      // upper bounds: tombstoned rows subtract at read
-      override def sizeInBytes(): java.util.OptionalLong =
-        if (bytes.size == dirs.size) java.util.OptionalLong.of(bytes.sum)
-        else java.util.OptionalLong.empty()
-      override def numRows(): java.util.OptionalLong =
-        if (rows.size == dirs.size) java.util.OptionalLong.of(rows.sum)
-        else java.util.OptionalLong.empty()
-    }
-  }
+      : org.apache.spark.sql.connector.read.Statistics =
+    SnapshotTable.dirStatistics(snap, baseEntries.map(_._2))
 
   /** The scan's one plan (one pinned snapshot, so once per query): ONE
     * base role over every base dir ([[SnapshotTable.planRole]]), its
@@ -583,7 +517,8 @@ private[graft] class SnapshotPosScan(snap: SnapshotTable.Snapshot,
   private lazy val planned: (Array[InputPartition], PartitionReaderFactory) = {
     val spark = SparkSession.active
     val baseR = SnapshotTable.planRole(baseEntries.map(_._2), snap.dirFiles,
-      metaFor(baseTblSchema), metaFor(withIdx), physPushable)
+      metaFor(GraftParquetBridge.withRowIndex(tableSchema)), metaFor(withIdx),
+      physPushable)
     val perFile = baseR.splits
     val tombR =
       if (perFile.isEmpty) SnapshotTable.PlannedRole.empty
@@ -614,11 +549,8 @@ private[graft] class SnapshotPosScan(snap: SnapshotTable.Snapshot,
     require(dataRequired.length == required.length,
       "row-identity metadata columns are a batch-read surface; " +
         "streaming reads cannot synthesize them")
-    new SnapshotMicroBatchStream(root,
-      paths => SnapshotTable.parquetScanOf(paths, snap.dirFiles,
-        metaFor(physSchema(tableSchema)), metaFor(physSchema(required)),
-        physPushable),
-      ignoreChanges, streamOpts)
+    SnapshotMicroBatchStream.of(snap, root, tableSchema, required,
+      physPushable, ignoreChanges, streamOpts)
   }
 }
 
@@ -662,17 +594,7 @@ private[graft] class PosPartitionReader(part: PosInputPartition,
   private val joined =
     new org.apache.spark.sql.catalyst.expressions.JoinedRow()
 
-  // (file suffix → recorded positions); O(retained tombstones) memory
-  private val dead = new mutable.HashMap[String, java.util.HashSet[java.lang.Long]]
-  part.tombs.foreach { tp =>
-    val r = tombF.createReader(tp)
-    try while (r.next()) {
-      val row = r.get()
-      if (!row.isNullAt(0) && !row.isNullAt(1))
-        dead.getOrElseUpdate(row.getUTF8String(0).toString,
-          new java.util.HashSet[java.lang.Long]()).add(row.getLong(1))
-    } finally r.close()
-  }
+  private val dead = PosPartitionReader.deadSet(part.tombs, tombF)
 
   private val basePartsIt = part.base.iterator
   private var baseReader: PartitionReader[InternalRow] = _
@@ -705,4 +627,24 @@ private[graft] class PosPartitionReader(part: PosInputPartition,
 
   override def close(): Unit =
     if (baseReader != null) { baseReader.close(); baseReader = null }
+}
+
+private[graft] object PosPartitionReader {
+  /** Positional tombstone partitions drained into (file suffix →
+    * recorded positions): O(retained tombstones) memory, the
+    * deletion-vector residency bound. */
+  def deadSet(tombs: Seq[InputPartition], f: PartitionReaderFactory)
+      : mutable.HashMap[String, java.util.HashSet[java.lang.Long]] = {
+    val dead = new mutable.HashMap[String, java.util.HashSet[java.lang.Long]]
+    tombs.foreach { tp =>
+      val r = f.createReader(tp)
+      try while (r.next()) {
+        val row = r.get()
+        if (!row.isNullAt(0) && !row.isNullAt(1))
+          dead.getOrElseUpdate(row.getUTF8String(0).toString,
+            new java.util.HashSet[java.lang.Long]()).add(row.getLong(1))
+      } finally r.close()
+    }
+    dead
+  }
 }

@@ -220,8 +220,10 @@ object SnapshotTable {
     /** `schema` with every field renamed to its physical name — the
       * schema data files are written and read under. */
     def physicalSchema(ddl: String): StructType =
-      StructType(StructType.fromDDL(ddl).fields.map(f =>
-        f.copy(name = physicalOf(f.name))))
+      physicalSchema(StructType.fromDDL(ddl))
+
+    def physicalSchema(st: StructType): StructType =
+      StructType(st.fields.map(f => f.copy(name = physicalOf(f.name))))
 
     /** Bucket layout a data dir was WRITTEN under. `buckets` is the
       * CURRENT layout (what new commits hash into); after a
@@ -1382,13 +1384,32 @@ object SnapshotTable {
         a.withName(snap.colMap(a.name))
     })
 
-  /** [[readSchemaMeta]] with the snapshot's exists map relabeled to
-    * PHYSICAL names — the one spelling all three scan planes
-    * (SnapshotScan, the MOR scans) hand the delegated parquet layer. */
+  /** The logical schema `st` in PHYSICAL names ([[Snapshot.physicalSchema]])
+    * with the snapshot's existence defaults attached ([[readSchemaMeta]]):
+    * the read schema every snapshot scan (batch, stream, change feed)
+    * hands the delegated parquet layer. */
   private[sources] def readSchemaMetaPhys(snap: Snapshot,
       st: StructType): StructType =
-    readSchemaMeta(st, snap.existsDefaults.map { case (c, d) =>
-      snap.physicalOf(c) -> d })
+    readSchemaMeta(snap.physicalSchema(st), snap.existsDefaults.map {
+      case (c, d) => snap.physicalOf(c) -> d })
+
+  /** Planner statistics of a connector scan reading `dirs` of `snap`:
+    * the sum of their manifest-recorded bytes and rows when every dir
+    * records them, else unknown (pre-statistics history) and Spark falls
+    * back to its defaults — never a guess. Upper bounds under residual
+    * filters and merge-on-read deltas, as Spark expects pre-filter scan
+    * statistics. */
+  private[sources] def dirStatistics(snap: Snapshot, dirs: Seq[String])
+      : org.apache.spark.sql.connector.read.Statistics = {
+    def total(m: Map[String, Long]): java.util.OptionalLong =
+      if (dirs.forall(m.contains)) java.util.OptionalLong.of(dirs.map(m).sum)
+      else java.util.OptionalLong.empty()
+    val (bytes, rows) = (total(snap.dirBytes), total(snap.dirRows))
+    new org.apache.spark.sql.connector.read.Statistics {
+      override def sizeInBytes(): java.util.OptionalLong = bytes
+      override def numRows(): java.util.OptionalLong = rows
+    }
+  }
 
   /** Attach the MANIFEST's frozen existence defaults ([[addColumns]],
     * logical names) to a read schema as `EXISTS_DEFAULT` field
@@ -1685,9 +1706,10 @@ object SnapshotTable {
     * manifest-recorded list (`files=`, [[Snapshot.dirFiles]]) where the
     * writing commit left one, else one driver listing of the dir — a
     * malformed `files=` line, a manifest from before file lists, or a
-    * name [[fileListSafe]] keeps out of a list. Every snapshot scan
-    * plans from this list ([[org.apache.spark.sql.GraftFileListBridge]]),
-    * so a recorded dir costs zero filesystem listings. */
+    * name [[fileListSafe]] keeps out of a list. Every snapshot read
+    * plans from this list: the V1 clean-bucket scan ([[parquetDirs]])
+    * and every connector scan — batch, stream and change feed — through
+    * [[planRole]], so a recorded dir costs zero filesystem listings. */
   private[graft] def filesOf(spark: SparkSession, dirs: Seq[String],
       files: Map[String, Seq[(String, Long)]]): Seq[(String, Long)] =
     dirs.distinct.flatMap { d =>
@@ -1697,17 +1719,11 @@ object SnapshotTable {
       }).map { case (n, len) => (d + "/" + n, len) }
     }
 
-  /** DSv2 parquet `ScanBuilder` over `dirs`' files ([[filesOf]]) under
-    * an explicit schema — what every snapshot connector scan delegates
-    * its data plane to. */
-  private[sources] def scanBuilderOf(dirs: Seq[String],
-      files: Map[String, Seq[(String, Long)]], schema: StructType)
-      : org.apache.spark.sql.connector.read.ScanBuilder =
-    scanBuilderOver(filesOf(SparkSession.active, dirs, files), schema)
-
-  /** Inner parquet ScanBuilders made so far (every one copies the
-    * session's Hadoop configuration, so this is the planning cost a
-    * spec can count); read by specs, never by the program. */
+  /** Inner parquet ScanBuilders made so far, all by [[planRole]], the
+    * one path every snapshot connector scan (batch, stream, change feed)
+    * plans through. Each copies the session's Hadoop configuration, so
+    * this is the planning cost a spec can count; read by specs, never by
+    * the program. */
   private[graft] val scanBuilders = new java.util.concurrent.atomic.AtomicLong
 
   private def scanBuilderOver(listed: Seq[(String, Long)], schema: StructType)
@@ -1717,33 +1733,14 @@ object SnapshotTable {
       SparkSession.active, listed, schema)
   }
 
-  private def built(b: org.apache.spark.sql.connector.read.ScanBuilder,
-      schema: StructType,
-      filters: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : org.apache.spark.sql.connector.read.Scan = {
-    import org.apache.spark.sql.GraftParquetBridge
-    GraftParquetBridge.pushCatalystFilters(b, filters)
-    GraftParquetBridge.pruneColumns(b, schema)
-    GraftParquetBridge.buildScan(b)
-  }
-
-  /** The delegated parquet scan over `dirs`' files, `filters` pushed and
-    * `schema` pruned from `tableSchema`, unplanned: what a stream plans
-    * each micro-batch's dirs through. */
-  private[sources] def parquetScanOf(dirs: Seq[String],
-      files: Map[String, Seq[(String, Long)]], tableSchema: StructType,
-      schema: StructType,
-      filters: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : org.apache.spark.sql.connector.read.Scan =
-    built(scanBuilderOf(dirs, files, tableSchema), schema, filters)
-
   /** One reader role of a snapshot connector scan (clean or dirty base
-    * files, delta rows, keyed or positional tombstones), planned ONCE
+    * files, delta rows, keyed or positional tombstones, a micro-batch's
+    * dirs, a change-feed range's data or `_cdc` dirs), planned ONCE
     * over the union of the role's dirs: one file index, one parquet
     * ScanBuilder (`filters` pushed, `schema` pruned from `tableSchema`),
-    * one split plan. Never one per bucket or dir: each builder copies
-    * the session's Hadoop configuration, which dominated planning when
-    * every dir had its own. Empty `dirs` build nothing. */
+    * one split plan. Never one per bucket, dir or commit: each builder
+    * copies the session's Hadoop configuration, which dominated planning
+    * when every dir had its own. Empty `dirs` build nothing. */
   private[sources] def planRole(dirs: Seq[String],
       files: Map[String, Seq[(String, Long)]], tableSchema: StructType,
       schema: StructType,
@@ -1756,7 +1753,9 @@ object SnapshotTable {
       val perDir = dirs.distinct.map(d => d -> filesOf(spark, Seq(d), files))
       val listed = perDir.flatMap(_._2)
       val b = scanBuilderOver(listed, tableSchema)
-      val scan = built(b, schema, filters)
+      GraftParquetBridge.pushCatalystFilters(b, filters)
+      GraftParquetBridge.pruneColumns(b, schema)
+      val scan = b.build()
       val dirOf = GraftFileListBridge.plannedPaths(b)
         .zip(perDir.flatMap { case (d, fs) => fs.map(_ => d) }).toMap
       new PlannedRole(Some(scan), scan.toBatch.planInputPartitions().toSeq,

@@ -2,7 +2,7 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.connector.expressions.filter.Predicate
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownRequiredColumns}
+import org.apache.spark.sql.connector.read.{ScanBuilder, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.execution.datasources.DataSourceStrategy
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
@@ -37,16 +37,16 @@ object GraftParquetBridge {
       case _ => ()
     }
 
-  def buildScan(builder: ScanBuilder): Scan = builder.build()
-
-  /** The parquet readers' magic column name: a `LongType` field with
+  /** `st` plus, LAST (so every other field's ordinal is stable), the
+    * parquet readers' magic row-index column: a `LongType` field with
     * this name in the read schema is POPULATED WITH FILE ROW INDEXES by
     * both the vectorized and row-based readers (exact under splits,
     * pushed filters, and row-group skipping) — the mechanism behind
     * `_metadata.row_index`, reachable here for V2 delegated scans that
     * need per-row physical positions (deletion-vector replay). */
-  def rowIndexTempColumn: String =
-    ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME
+  def withRowIndex(st: StructType): StructType =
+    st.add(ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME,
+      org.apache.spark.sql.types.LongType)
 
   /** Catalyst predicate → V1 `sources.Filter` (None when untranslatable)
     * — the connector's bucket-pruning analysis runs on the stable V1

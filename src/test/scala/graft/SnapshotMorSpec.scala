@@ -689,21 +689,26 @@ class SnapshotMorSpec extends AnyFunSuite {
   private def triples(rs: Array[org.apache.spark.sql.Row]) =
     rs.map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
 
-  /** `df`'s rows, and the inner parquet builders made by physical
-    * planning (`sparkPlan`), by `executedPlan` after it, and by the
-    * collect after that. */
-  private def planCounts(df: org.apache.spark.sql.DataFrame)
-      : (Set[(Long, String, Long)], Seq[Long]) = {
+  /** `df`'s rows, and the inner parquet builders made by optimization
+    * and physical planning (`sparkPlan`), by `executedPlan` and the
+    * collect after it, and by `executedPlan` alone. */
+  private def builderCounts(df: org.apache.spark.sql.DataFrame)
+      : (Array[org.apache.spark.sql.Row], Seq[Long]) = {
     val qe = df.queryExecution
-    qe.optimizedPlan
     def now = SnapshotTable.scanBuilders.get
     val b0 = now
     qe.sparkPlan
     val b1 = now
     qe.executedPlan
     val b2 = now
-    val got = triples(df.collect())
+    val got = df.collect()
     (got, Seq(b1 - b0, now - b1, b2 - b1))
+  }
+
+  private def planCounts(df: org.apache.spark.sql.DataFrame)
+      : (Set[(Long, String, Long)], Seq[Long]) = {
+    val (got, counts) = builderCounts(df)
+    (triples(got), counts)
   }
 
   test("snapshot connector scans plan once: one inner parquet builder " +
@@ -761,6 +766,80 @@ class SnapshotMorSpec extends AnyFunSuite {
     assert(four.map(_.head) === Seq(3L, 4L, 1L, 2L), four)
     assert(four.forall(_.tail === Seq(0L, 0L)), four)
     assert(sixteen === four)
+  }
+
+  test("a batch change-feed read plans its range as two reader roles: " +
+      "at most 2 inner parquet builders over appends and feed upserts, " +
+      "none when executedPlan re-plans sparkPlan or the collect runs") {
+    val root = freshRoot("cdfplan")
+    SnapshotTable.create(rows(0 until 40, "a"), root, Seq("id"), 4,
+      changeFeed = true)
+    SnapshotTable.append(rows(40 until 50, "b"), root)
+    SnapshotTable.upsert(rows(0 until 5, "u"), root)
+    SnapshotTable.append(rows(50 until 60, "c"), root)
+    SnapshotTable.upsert(rows(45 until 55, "w"), root)
+    val (got, counts) = builderCounts(spark.read.format("graft-snapshot")
+      .option("readChangeFeed", "true").option("startingVersion", 1)
+      .option("endingVersion", 5).load(root)
+      .select("_change_type", "_commit_version", "id", "tag", "v"))
+    def feed(kind: String, v: Long, ids: Range, tag: String) =
+      ids.map(i => (kind, v, i.toLong, tag, i * 10L))
+    val expected = feed("insert", 1, 0 until 40, "a") ++
+      feed("insert", 2, 40 until 50, "b") ++
+      feed("insert", 3, 0 until 5, "u") ++ feed("delete", 3, 0 until 5, "a") ++
+      feed("insert", 4, 50 until 60, "c") ++
+      feed("insert", 5, 45 until 55, "w") ++
+      feed("delete", 5, 45 until 50, "b") ++ feed("delete", 5, 50 until 55, "c")
+    assert(got.map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+      r.getString(3), r.getLong(4))).toSeq.sorted === expected.sorted)
+    assert(counts.head <= 2L && counts.tail === Seq(0L, 0L), counts)
+  }
+
+  test("the snapshot source plans each micro-batch as one reader role: " +
+      "AvailableNow runs whose batches include an empty one serve every " +
+      "row once, with one inner parquet builder per non-empty batch") {
+    import org.apache.spark.sql.streaming.Trigger
+    val root = freshRoot("streamplan")
+    val ckpt = java.nio.file.Files
+      .createTempDirectory("graft_mor_streamplan_ckpt").toString
+    SnapshotTable.create(rows(0 until 16, "a"), root, Seq("id"), 2)
+    /** One AvailableNow drain: (served rows, per-batch row counts, inner
+      * parquet builders made). */
+    def drain(): (Seq[(Long, String, Long)], Seq[Int], Long) = {
+      val served = new java.util.concurrent.ConcurrentLinkedQueue[
+        (Long, String, Long)]()
+      val sizes = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+      val b0 = SnapshotTable.scanBuilders.get
+      spark.readStream.format("graft-snapshot")
+        .option("maxFilesPerTrigger", "1").load(root)
+        .writeStream
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+          val got = b.collect()
+          sizes.add(got.length)
+          got.foreach(r => served.add((r.getLong(0), r.getString(1),
+            r.getLong(2))))
+        }
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+      import scala.jdk.CollectionConverters._
+      (served.asScala.toSeq, sizes.asScala.toSeq,
+        SnapshotTable.scanBuilders.get - b0)
+    }
+    val (initial, initSizes, initBuilders) = drain()
+    assert(initial.sorted === triples(rows(0 until 16, "a").collect())
+      .toSeq.sorted)
+    assert(initBuilders === initSizes.count(_ > 0).toLong, initSizes)
+    // two appends of one dir per bucket, then a content-neutral compact:
+    // one file per batch, and the compact's batch serves no dir
+    SnapshotTable.append(rows(16 until 24, "b"), root)
+    SnapshotTable.append(rows(24 until 32, "c"), root)
+    SnapshotTable.compact(spark, root)
+    val (tail, tailSizes, tailBuilders) = drain()
+    assert(tail.sorted === (triples(rows(16 until 24, "b").collect()) ++
+      triples(rows(24 until 32, "c").collect())).toSeq.sorted)
+    assert(tailSizes.count(_ == 0) >= 1 && tailSizes.count(_ > 0) > 1,
+      tailSizes)
+    assert(tailBuilders === tailSizes.count(_ > 0).toLong, tailSizes)
   }
 
   test("splits regroup exactly: with tiny split sizes, keyed " +

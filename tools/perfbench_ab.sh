@@ -16,7 +16,12 @@
 # such a pair compares cycle counts, not code. Env: FIRST_SEED (default 1200),
 # SECONDS_PER_RUN (default 8), TRACE (0 = end-to-end metrics, 1 = per
 # layer; default 0), OUT_DIR (keeps every run's output; default a temp
-# dir). Each tree builds itself on its first run.
+# dir). Each tree builds itself on its first run. Each run's work dir
+# (<tree>/.bench_work/<workload>-<seed>-<trace>) is deleted once its output
+# is saved, because kept run dirs slow later runs of the tree that holds
+# them: an A/A read of op_p50_s moved -22% with ~550 MB kept on one side.
+# Both trees' .bench_work/ sizes are printed before the first pair and after
+# the last.
 set -euo pipefail
 if [ $# -ne 4 ]; then
   echo "usage: $0 <treeA> <treeB> <workload> <runs>" >&2
@@ -32,14 +37,24 @@ run() { # <tag> <tree> <seed>
   (cd "$2" && python3 perfbench/run.py --workload "$W" --seed "$3" \
     --seconds "$SECS" --trace "$TRACE") > "$f" 2> "$f.err" || {
     echo "run $1 seed $3 failed; see $f.err" >&2; exit 1; }
+  rm -rf "$2/.bench_work/$W-$3-$TRACE"
   echo "$1 seed=$3 $(grep -E '^metric (rows_per_s|op_p50_s|host_steal_share) ' "$f" | awk '{printf "%s=%s ", $2, $4}')"
 }
 
+work_sizes() { # <when>
+  local a b
+  a="$(du -sh "$A/.bench_work" 2>/dev/null | cut -f1 || true)"
+  b="$(du -sh "$B/.bench_work" 2>/dev/null | cut -f1 || true)"
+  echo "$1: .bench_work A ${a:-absent} B ${b:-absent}"
+}
+
+work_sizes "before the first pair"
 for ((i = 0; i < RUNS; i++)); do
   s=$((SEED0 + i))
   if ((i % 2 == 0)); then run A "$A" "$s"; run B "$B" "$s"
   else run B "$B" "$s"; run A "$A" "$s"; fi
 done
+work_sizes "after the last pair"
 
 python3 - "$OUT" <<'EOF'
 import glob, statistics, sys
