@@ -1483,10 +1483,10 @@ object SourceQueries {
         col("n_chars"))
     // phase 3: KEYED positional delete — a pending upsert-mor layer
     // (winners shadow the base versions), then deleteWhere(mergeOnRead)
-    // tombstones matched winners AND their shadowed versions by
-    // position; the connector serves the mixed rows+pos snapshot
-    // through the replaying scan, and a fresh append of a new key
-    // rides over the tombstones untouched
+    // tombstones just the matched live rows by position (a tombstoned
+    // winner keeps shadowing its base version); the connector serves
+    // the mixed rows+pos snapshot through the replaying scan, and a
+    // fresh append of a new key rides over the tombstones untouched
     val kpath = scratch("snapposk", dir)
     rmTree(kpath)
     SnapshotTable.create(d, kpath, Seq("doc_id"), 4)

@@ -679,12 +679,6 @@ private[graft] class SnapshotScanBuilder(snap: SnapshotTable.Snapshot,
           reprune(snap.entries, v1Filters.toSeq), snap.deltas, root,
           ignoreChanges, streamOpts)
       else {
-        require(!needsIdentity(),
-          s"row-identity metadata columns on snapshot v${snap.version} " +
-            s"with unresolved EVENT delta dirs (kinds " +
-            s"${snap.deltas.map(_.kind).distinct.mkString(",")}) — " +
-            "positions are undefined under key-event replay; compact " +
-            "the table first")
         val hit = prunedBuckets(v1Filters.toSeq)
         val (pos, events) = snap.deltas.partition(_.kind == "pos")
         new SnapshotMorScan(snap, tableSchema, required, catalystFilters,
@@ -708,8 +702,7 @@ private[graft] class SnapshotScanBuilder(snap: SnapshotTable.Snapshot,
   }
 
   private def needsIdentity(): Boolean =
-    required.fieldNames.exists(n =>
-      n == SnapshotTable.PosFileCol || n == SnapshotTable.PosPosCol)
+    required.fieldNames.exists(SnapshotTable.IdentityCols)
 }
 
 /** The built scan: batch reads delegate to Spark's vectorized
@@ -1214,21 +1207,14 @@ private[graft] class SnapshotMicroBatchStream(root: String,
     s.entries.map(_._2)
   }
 
-  /** Fresh dirs of commit `next` over its predecessor's entries, under
-    * append-tail semantics. Rescale and column renames/drops are pure
-    * metadata (identical dirs, zero new rows; file columns are
-    * physically stable), so the append-tailing contract is undisturbed.
-    * `compact`/`zorder` commits REWRITE dirs but are content-neutral by
-    * construction, so the stream SKIPS them entirely (the Delta
-    * `dataChange = false` semantics) — table maintenance and tailing
-    * readers coexist, no re-emits, no restart. Any other non-append
-    * data commit fails loudly unless `ignoreChanges` streams its
-    * rewritten dirs verbatim. */
   /** Why commit `next` can NEVER tail-serve, or None when it can —
     * checked by the admission walk BEFORE an offset covering the
     * commit is logged (thrown only at plan time, the refusal would
     * wedge the checkpoint: the logged batch replays into the same
-    * error forever) and enforced again by [[freshDirs]]. */
+    * error forever) and enforced again by [[freshDirs]]. Inserting and
+    * no-data-change commits ([[SnapshotTable.commitKind]]) serve; any
+    * other commit refuses unless `ignoreChanges` streams its rewritten
+    * dirs verbatim. */
   private def tailRefusal(next: SnapshotTable.Snapshot): Option[String] = {
     // a clone commit serves its entries as pure inserts — unsound if it
     // carried unresolved deltas (tombstoned/shadowed rows would emit);
@@ -1240,23 +1226,26 @@ private[graft] class SnapshotMicroBatchStream(root: String,
         "unresolved merge-on-read delta dir(s). Stream the " +
         "consolidated snapshot instead (no startingVersion, after a " +
         "compact), or re-clone from a compacted source")
-    else if (next.op != "append" && next.op != "create" &&
-        next.op != "clone" && next.op != "rescale" &&
-        next.op != "compact" && next.op != "zorder" &&
-        next.op != "widen-column" &&
-        next.op != "rename-column" && next.op != "drop-column" &&
-        next.op != "set-constraint" && next.op != "drop-constraint" &&
-        next.op != "repartition-spec" && next.op != "set-default" &&
-        next.op != "add-column" &&
-        !ignoreChanges)
-      Some(s"snapshot stream at $root hit a '${next.op}' commit " +
-        s"(v${next.version}): its dirs consolidate existing rows, not " +
-        "just new ones. Restart from scratch, or set " +
+    else if (ignoreChanges) None
+    else SnapshotTable.commitKind(next.op) match {
+      case SnapshotTable.CommitKind.Inserts |
+           SnapshotTable.CommitKind.NoDataChange => None
+      case _ => Some(s"snapshot stream at $root hit a '${next.op}' " +
+        s"commit (v${next.version}): its dirs consolidate existing rows, " +
+        "not just new ones. Restart from scratch, or set " +
         "ignoreChanges=true to stream rewritten dirs verbatim " +
         "(re-emits rewritten rows, the Delta ignoreChanges caveat)")
-    else None
+    }
   }
 
+  /** Fresh dirs of commit `next` over its predecessor's entries, under
+    * append-tail semantics. Rescale, column renames/drops and the other
+    * pure-metadata commits keep identical dirs (zero new rows; file
+    * columns are physically stable), so the append-tailing contract is
+    * undisturbed. `compact`/`zorder` commits REWRITE dirs but are
+    * content-neutral by construction, so the stream SKIPS them entirely
+    * (the Delta `dataChange = false` semantics) — table maintenance and
+    * tailing readers coexist, no re-emits, no restart. */
   private def freshDirs(next: SnapshotTable.Snapshot,
       prev: Option[SnapshotTable.Snapshot]): Seq[String] = {
     tailRefusal(next).foreach(sys.error)
@@ -1472,6 +1461,9 @@ private[graft] object SnapshotMicroBatchStream {
       physFilters: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
       ignoreChanges: Boolean, opts: SnapshotStreamOptions)
       : SnapshotMicroBatchStream = {
+    require(!required.fieldNames.exists(SnapshotTable.IdentityCols),
+      "row-identity metadata columns are a batch-read surface; " +
+        "streaming reads cannot synthesize them")
     val (tbl, req) = (SnapshotTable.readSchemaMetaPhys(snap, tableSchema),
       SnapshotTable.readSchemaMetaPhys(snap, required))
     new SnapshotMicroBatchStream(root,
@@ -1559,31 +1551,32 @@ private[graft] object SnapshotCdfScan {
     * walk ([[SnapshotCdfMicroBatchStream.latestOffset]], which must
     * refuse BEFORE Spark logs an offset covering the commit; refused
     * only at plan time, the logged batch would replay into the same
-    * error forever). Keep in lockstep with commitDirs' match. */
-  def unservableOp(root: String, s: SnapshotTable.Snapshot): Option[String] =
-    s.op match {
+    * error forever). Inserting and no-data-change commits serve, and
+    * change-file ones when they recorded it
+    * ([[SnapshotTable.commitKind]]). */
+  def unservableOp(root: String, s: SnapshotTable.Snapshot): Option[String] = {
+    import SnapshotTable.CommitKind._
+    (s.op, SnapshotTable.commitKind(s.op)) match {
       // a clone's v1 IS its table's initial content (served as inserts,
       // like create) — UNLESS it carries unresolved merge-on-read
       // deltas: base entries alone would include tombstoned/shadowed
       // rows, change-incomplete forever (v1 manifests are immutable)
-      case "clone" if s.deltas.nonEmpty => Some(
+      case ("clone", _) if s.deltas.nonEmpty => Some(
         s"change feed at $root: clone commit v${s.version} immutably " +
           s"carries ${s.deltas.size} unresolved merge-on-read delta " +
           "dir(s) — its feed can never serve v1; start the feed after " +
           "a compact (startingVersion >= the compact commit), or " +
           "re-clone from a compacted source")
-      case "create" | "clone" | "append" | "widen-column" | "zorder" |
-           "compact" | "rescale" | "rename-column" | "drop-column" |
-           "set-constraint" | "drop-constraint" | "repartition-spec" |
-           "set-default" | "add-column" => None
-      case "upsert" | "delete" | "delete-pos" if s.cdc.isDefined => None
-      case other => Some(
+      case (_, Inserts | NoDataChange) => None
+      case (_, ChangeFile) if s.cdc.isDefined => None
+      case (other, _) => Some(
         s"change feed hit commit v${s.version} (op=$other) at $root " +
           "with no recorded change data — enable changeFeed at create " +
           "for upsert/delete commits, and read overwrites/restores/" +
           "row-level rewrites with the batch SnapshotTable.readChanges " +
           "diff instead")
     }
+  }
 }
 
 private[graft] class SnapshotCdfScan(snap: SnapshotTable.Snapshot,
@@ -1623,23 +1616,16 @@ private[graft] class SnapshotCdfScan(snap: SnapshotTable.Snapshot,
   private def commitDirs(prev: Option[SnapshotTable.Snapshot],
       next: SnapshotTable.Snapshot): (Seq[String], Option[String]) = {
     SnapshotCdfScan.unservableOp(root, next).foreach(sys.error)
-    next.op match {
-      case "create" | "clone" => (next.entries.map(_._2), None)
-      case "append" =>
-        (next.entries.map(_._2).diff(
-          prev.getOrElse(sys.error(s"change feed needs version " +
-            s"${next.version - 1} at $root (vacuumed?)")).entries.map(_._2)),
-          None)
-      case "upsert" | "delete" | "delete-pos" if next.cdc.isDefined =>
-        (Nil, next.cdc)
+    SnapshotTable.commitKind(next.op) match {
+      case SnapshotTable.CommitKind.Inserts =>
+        val before = if (next.version == 1L) Nil
+          else prev.getOrElse(sys.error(s"change feed needs version " +
+            s"${next.version - 1} at $root (vacuumed?)")).entries
+        (next.entries.map(_._2).diff(before.map(_._2)), None)
       // content-neutral rewrites and pure-metadata commits: no changes
-      case "zorder" | "compact" | "widen-column" | "rescale" |
-           "rename-column" | "drop-column" | "set-constraint" |
-           "drop-constraint" | "repartition-spec" | "set-default" |
-           "add-column" => (Nil, None)
-      case other => sys.error( // unreachable: unservableOp covers it
-        s"change feed hit commit v${next.version} (op=$other) at $root " +
-          "with no recorded change data")
+      case SnapshotTable.CommitKind.NoDataChange => (Nil, None)
+      // unservableOp admits the rest only with a recorded change file
+      case _ => (Nil, next.cdc)
     }
   }
 
@@ -1841,32 +1827,25 @@ private[graft] class SnapshotCdfMicroBatchStream(root: String,
             else sys.error(reason)
           case None =>
             // commit cost in (files, bytes, rows); None = free metadata
-            val cost: Option[(Long, Long, Long)] = next.op match {
-              case "create" | "clone" =>
-                val dirs = next.entries.map(_._2)
-                Some((dirs.size.toLong,
-                  satSum(dirs.map(d =>
-                    next.dirBytes.getOrElse(d, Long.MaxValue))),
-                  satSum(dirs.map(d =>
-                    next.dirRows.getOrElse(d, Long.MaxValue)))))
-              case "append" =>
-                val prev = if (v == 1L) Seq.empty
-                  else at(v - 1).entries.map(_._2)
-                val fresh = next.entries.map(_._2).diff(prev)
-                Some((fresh.size.toLong,
-                  satSum(fresh.map(d =>
-                    next.dirBytes.getOrElse(d, Long.MaxValue))),
-                  satSum(fresh.map(d =>
-                    next.dirRows.getOrElse(d, Long.MaxValue)))))
-              case _ if next.cdc.isDefined =>
-                // commit-recorded change-file bytes (round-14
-                // manifests); legacy manifests without them fill the
-                // byte budget whole
-                Some((1L,
+            val cost: Option[(Long, Long, Long)] =
+              SnapshotTable.commitKind(next.op) match {
+                case SnapshotTable.CommitKind.Inserts =>
+                  val prev = if (v == 1L) Seq.empty
+                    else at(v - 1).entries.map(_._2)
+                  val fresh = next.entries.map(_._2).diff(prev)
+                  Some((fresh.size.toLong,
+                    satSum(fresh.map(d =>
+                      next.dirBytes.getOrElse(d, Long.MaxValue))),
+                    satSum(fresh.map(d =>
+                      next.dirRows.getOrElse(d, Long.MaxValue)))))
+                case SnapshotTable.CommitKind.NoDataChange => None
+                // a recorded change file (unservableOp admits no other):
+                // its commit-recorded bytes (round-14 manifests); legacy
+                // manifests without them fill the byte budget whole
+                case _ => Some((1L,
                   next.dirBytes.getOrElse(next.cdc.get, Long.MaxValue),
                   Long.MaxValue))
-              case _ => None // metadata / content-neutral: free
-            }
+              }
             cost match {
               case None => endV = v
               case Some((cf, cb, cr)) =>

@@ -39,11 +39,13 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * (each physical copy dies or survives individually — equality-style
   * key tombstones could not say that).
   *
-  * Scan-side requirements: positions are defined on base files only,
-  * so the operation's scan serves snapshots whose pending deltas are
-  * all positional (the previous MOR DML's own output — consecutive
-  * merge-on-read statements compose) and refuses key-EVENT layers
-  * (compact first), [[SnapshotScanBuilder]]'s identity gate.
+  * Scan-side requirements: none beyond row identity, which every
+  * snapshot serves. Consecutive merge-on-read statements compose over
+  * each other's positional layers ([[SnapshotPosScan]]), and over
+  * pending key-EVENT layers too: [[SnapshotMorScan]] stamps each live
+  * row — a surviving delta row included — with its own file's
+  * position, and a tombstoned delta row keeps shadowing its key's
+  * older versions, so tombstoning the live row is the whole delete.
   *
   * Concurrency: positions pin the scanned snapshot's files, so the
   * commit is optimistic — the base version must still be current at

@@ -54,17 +54,25 @@ import org.apache.spark.sql.types.StructType
   * bucket's partition contains ALL rows of its keys), so the scan
   * reports the same `KeyGroupedPartitioning` as the clean scan.
   *
-  * POSITIONAL tombstones (`posDeltas`, the keyed `deleteWhere
-  * mergeOnRead` layer) may coexist with the event kinds: when present,
-  * base and delta-row reads additionally carry the parquet row-index
-  * column and are split per file, and each replay partition drains its
-  * buckets' recorded `(file-suffix, row_index)` pairs into a dead-set
-  * consulted BEFORE event replay — a position-tombstoned delta row
-  * contributes no event (its key's superseded versions were tombstoned
-  * by the same delete commit). Buckets whose only deltas are
-  * positional still pay the replay-partition shape here (empty event
-  * side, dead-set only); a table with NO event deltas routes to the
-  * cheaper [[SnapshotPosScan]] instead. */
+  * POSITIONAL tombstones (`posDeltas`, written by `deleteWhere
+  * mergeOnRead` and the delta-based SQL DML) may coexist with the event
+  * kinds: when present, base and delta-row reads additionally carry the
+  * parquet row-index column and are split per file, and each replay
+  * partition drains its buckets' recorded `(file-suffix, row_index)`
+  * pairs into a dead-set. A tombstone removes one physical row and
+  * nothing else, as a Delta deletion vector or an Iceberg position
+  * delete does: a dead base row is dropped; a dead delta row still
+  * records its key's event (the versions it shadowed stay shadowed) but
+  * is never emitted. Buckets whose only deltas are positional still pay
+  * the replay-partition shape here (empty event side, dead-set only); a
+  * table with NO event deltas routes to the cheaper [[SnapshotPosScan]].
+  *
+  * ROW IDENTITY: when `required` asks for `_sdv_file` / `_sdv_pos`
+  * (provenance, or the delta-based SQL DML's positional rowId), every
+  * bucket plans as a replay class (no clean keyed partitions), base and
+  * delta-row reads carry the row index, and each emitted row carries
+  * its own file's suffix and row index — a surviving delta row its
+  * delta file's. */
 private[graft] class SnapshotMorScan(snap: SnapshotTable.Snapshot,
     tableSchema: StructType, required: StructType,
     catalystFilters: Seq[Expression],
@@ -82,12 +90,28 @@ private[graft] class SnapshotMorScan(snap: SnapshotTable.Snapshot,
     "positional deltas ride the posDeltas parameter, event kinds in deltas")
 
   private val hasPos = posDeltas.nonEmpty
+  private val identity =
+    required.fieldNames.exists(SnapshotTable.IdentityCols)
+  /** Base and delta-row reads carry the parquet row index. */
+  private val readsIdx = hasPos || identity
 
-  /** Base/delta read schema: the required columns plus any key columns
-    * the projection pruned away (resolution needs them), in table-schema
-    * order so the executor-side projections bind by stable index. */
+  /** Base/delta read schema: the required data columns plus any key
+    * columns the projection pruned away (resolution needs them), in
+    * table-schema order so the executor-side projections bind by stable
+    * index. */
   private val withKeys: StructType = StructType(tableSchema.fields.filter(
     f => required.fieldNames.contains(f.name) || snap.keys.contains(f.name)))
+
+  /** Reader-side row layout: JoinedRow([withKeys..., row index when
+    * read], [file suffix]); one bind per required output field. */
+  private val rowTypes = (if (readsIdx)
+    GraftParquetBridge.withRowIndex(withKeys) else withKeys)
+    .fields.map(_.dataType) :+ org.apache.spark.sql.types.StringType
+  private val outBinds: Array[Int] = required.fieldNames.map {
+    case SnapshotTable.PosPosCol => withKeys.length
+    case SnapshotTable.PosFileCol => rowTypes.length - 1
+    case n => withKeys.fieldIndex(n)
+  }
 
   private val keySchema: StructType =
     StructType(tableSchema.fields.filter(f => snap.keys.contains(f.name)))
@@ -106,12 +130,13 @@ private[graft] class SnapshotMorScan(snap: SnapshotTable.Snapshot,
 
   /** One reader role over `dirs` ([[SnapshotTable.planRole]]): base and
     * delta-row roles read `schema` (plus the row index under positional
-    * tombstones); only base roles take the pushed filters. */
+    * tombstones or identity reads); only base roles take the pushed
+    * filters. */
   private def role(dirs: Seq[String], schema: StructType,
       pushFilters: Boolean, withIdx: Boolean = false)
       : SnapshotTable.PlannedRole = {
-    // the parquet row index rides LAST when positional tombstones are
-    // present, so every prefix-bound projection is position-stable
+    // the parquet row index rides LAST, so every prefix-bound
+    // projection is position-stable
     def read(st: StructType) =
       metaFor(if (withIdx) GraftParquetBridge.withRowIndex(st) else st)
     SnapshotTable.planRole(dirs, snap.dirFiles, read(tableSchema),
@@ -160,7 +185,11 @@ private[graft] class SnapshotMorScan(snap: SnapshotTable.Snapshot,
     * one [[SnapshotTable.planRole]] per reader role over every dir of
     * that role, its splits routed back per dir and bucket. */
   private lazy val planned: (Array[InputPartition], PartitionReaderFactory) = {
-    val dirty = (deltas.map(_.bucket) ++ posDeltas.map(_.bucket)).toSet
+    // identity reads replay every bucket: only the replaying reader
+    // stamps rows with their file suffix
+    val dirty = (deltas.map(_.bucket) ++ posDeltas.map(_.bucket) ++
+      (if (identity) baseEntries.flatMap(snap.coveredBuckets) else Nil)
+    ).toSet
     // layout-aware split: an entry replays when ANY current bucket it
     // covers carries deltas (a historical-layout dir spans several
     // current buckets until migration)
@@ -170,9 +199,9 @@ private[graft] class SnapshotMorScan(snap: SnapshotTable.Snapshot,
     val tombDeltas = deltas.filter(_.kind == "tomb")
     val cleanR = role(clean.map(_._2), required, pushFilters = true)
     val baseR = role(dirtyEntries.map(_._2), withKeys, pushFilters = true,
-      withIdx = hasPos)
+      withIdx = readsIdx)
     val rowsR = role(rowDeltas.map(_.dir), withKeys, pushFilters = false,
-      withIdx = hasPos)
+      withIdx = readsIdx)
     val tombR = role(tombDeltas.map(_.dir), keySchema, pushFilters = false)
     // positional tombstone files carry key columns (bucket routing) plus
     // the (file-suffix, row_index) pair; readers project just the pair,
@@ -183,13 +212,13 @@ private[graft] class SnapshotMorScan(snap: SnapshotTable.Snapshot,
       case (b, es) => cleanR.packed(es.map(_._2))
         .map(p => KeyedInputPartition(InternalRow(b), p))
     }
-    // with positional tombstones every split carries its file's
-    // tombstone suffix; without, an empty tag
+    // with the row index read every split carries its file's suffix;
+    // without, an empty tag
     def tagged(r: SnapshotTable.PlannedRole, dirs: Seq[(Long, String)])
         : Seq[(Long, String, InputPartition)] =
       dirs.flatMap { case (seq, d) =>
         r.splitsOf(d).map { case (f, p) =>
-          (seq, if (hasPos) SnapshotTable.suffixOf(f) else "", p)
+          (seq, if (readsIdx) SnapshotTable.suffixOf(f) else "", p)
         }
       }
     val deltaBy = deltas.groupBy(_.bucket)
@@ -229,14 +258,11 @@ private[graft] class SnapshotMorScan(snap: SnapshotTable.Snapshot,
     }
     ((cleanParts ++ dirtyParts).toArray,
       new MorReaderFactory(cleanR.factory, baseR.factory, rowsR.factory,
-        tombR.factory, posR.factory,
-        (if (hasPos) GraftParquetBridge.withRowIndex(withKeys) else withKeys)
-          .fields.map(_.dataType),
+        tombR.factory, posR.factory, rowTypes,
         keySchema.fields.map(_.dataType),
-        snap.keys.map(k => withKeys.fieldIndex(k)).toArray,
-        required.fieldNames.map(withKeys.fieldIndex),
-        // row-index ordinal in base/delta rows; -1 = no positional layer
-        if (hasPos) withKeys.length else -1))
+        snap.keys.map(k => withKeys.fieldIndex(k)).toArray, outBinds,
+        // row-index ordinal in base/delta rows; -1 = not read
+        if (readsIdx) withKeys.length else -1))
   }
 
   override def toBatch: Batch = new Batch {
@@ -255,8 +281,8 @@ private[graft] class SnapshotMorScan(snap: SnapshotTable.Snapshot,
 }
 
 /** One delta-bearing bucket class: base and delta-row file partitions
-  * stamped with their commit version / event seq plus (when positional
-  * tombstones exist) their file's tombstone suffix; keyed tombstone
+  * stamped with their commit version / event seq plus (when the row
+  * index is read) their file's suffix; keyed tombstone
   * partitions stamped with their seq; the class' positional tombstone
   * partitions. Keyed by bucket for storage-partitioned joins. */
 private[graft] case class MorInputPartition(bucket: Int,
@@ -277,9 +303,9 @@ private[graft] class MorReaderFactory(
     cleanF: PartitionReaderFactory, baseF: PartitionReaderFactory,
     deltaF: PartitionReaderFactory, tombF: PartitionReaderFactory,
     posF: PartitionReaderFactory,
-    withKeysTypes: Array[org.apache.spark.sql.types.DataType],
+    rowTypes: Array[org.apache.spark.sql.types.DataType],
     keyTypes: Array[org.apache.spark.sql.types.DataType],
-    keyIdx: Array[Int], requiredIdx: Array[Int], posIdx: Int)
+    keyIdx: Array[Int], outBinds: Array[Int], posIdx: Int)
     extends PartitionReaderFactory {
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
@@ -287,38 +313,46 @@ private[graft] class MorReaderFactory(
       case KeyedInputPartition(_, inner) => cleanF.createReader(inner)
       case m: MorInputPartition =>
         new MorPartitionReader(m, baseF, deltaF, tombF, posF,
-          withKeysTypes, keyTypes, keyIdx, requiredIdx, posIdx)
+          rowTypes, keyTypes, keyIdx, outBinds, posIdx)
       case other => cleanF.createReader(other)
     }
 }
 
 /** Per-bucket event replay (see [[SnapshotMorScan]]): drain the small
   * delta side into memory, stream the base side against it. Positional
-  * tombstones (when present) drain first into per-file dead sets
-  * consulted before any event logic — a dead delta row contributes no
-  * event and no survivor, a dead base row never reaches the replay
-  * check. */
+  * tombstones (when present) drain first into per-file dead sets: a
+  * dead delta row still records its key's event but is never a
+  * survivor, a dead base row never reaches the replay check. */
 private[graft] class MorPartitionReader(part: MorInputPartition,
     baseF: PartitionReaderFactory, deltaF: PartitionReaderFactory,
     tombF: PartitionReaderFactory, posF: PartitionReaderFactory,
-    withKeysTypes: Array[org.apache.spark.sql.types.DataType],
+    rowTypes: Array[org.apache.spark.sql.types.DataType],
     keyTypes: Array[org.apache.spark.sql.types.DataType],
-    keyIdx: Array[Int], requiredIdx: Array[Int], posIdx: Int)
+    keyIdx: Array[Int], outBinds: Array[Int], posIdx: Int)
     extends PartitionReader[InternalRow] {
 
   // key extracted from a withKeys-shaped row / from a keys-only row
   private val keyOfFull = UnsafeProjection.create(keyIdx.toIndexedSeq.map(
-    i => BoundReference(i, withKeysTypes(i), nullable = true): Expression))
+    i => BoundReference(i, rowTypes(i), nullable = true): Expression))
   private val keyOfTomb = UnsafeProjection.create(
     keyTypes.indices.map(
       i => BoundReference(i, keyTypes(i), nullable = true): Expression))
+  // output binds over JoinedRow(row, [file suffix])
   private val toRequired = UnsafeProjection.create(
-    requiredIdx.toIndexedSeq.map(
-      i => BoundReference(i, withKeysTypes(i), nullable = true): Expression))
+    outBinds.toIndexedSeq.map(
+      i => BoundReference(i, rowTypes(i), nullable = true): Expression))
+  private val suffixRow =
+    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(1)
+  private val joined =
+    new org.apache.spark.sql.catalyst.expressions.JoinedRow()
+
+  private def suffixIs(suffix: String): Unit = suffixRow.update(0,
+    org.apache.spark.unsafe.types.UTF8String.fromString(suffix))
 
   /** Newest event seq per key — the whole delta side of ONE bucket. */
   private val maxEvent = new mutable.HashMap[UnsafeRow, Long]
-  private val bufferedDeltas = mutable.ArrayBuffer.empty[(Long, UnsafeRow, UnsafeRow)]
+  private val bufferedDeltas =
+    mutable.ArrayBuffer.empty[(Long, UnsafeRow, String, UnsafeRow)]
 
   private val dead = PosPartitionReader.deadSet(part.posTombs, posF)
 
@@ -349,14 +383,13 @@ private[graft] class MorPartitionReader(part: MorInputPartition,
     val r = deltaF.createReader(p)
     try while (r.next()) {
       val row = r.get()
-      // position-tombstoned delta rows vanish BEFORE event building
-      // (their key's superseded versions were tombstoned by the same
-      // delete commit, so dropping the event resurrects nothing)
-      if (!isDead(suffix, row)) {
-        val key = keyOfFull(row).copy()
-        bump(key, seq)
-        bufferedDeltas += ((seq, key, row.asInstanceOf[UnsafeRow].copy()))
-      }
+      val key = keyOfFull(row).copy()
+      // a position-tombstoned delta row keeps its event: the versions
+      // it shadowed stay shadowed
+      bump(key, seq)
+      if (!isDead(suffix, row))
+        bufferedDeltas +=
+          ((seq, key, suffix, row.asInstanceOf[UnsafeRow].copy()))
     } finally r.close()
   }
 
@@ -364,8 +397,7 @@ private[graft] class MorPartitionReader(part: MorInputPartition,
     * this row (a same-commit tombstone can't coexist with a row for one
     * key — one commit is one kind per key). */
   private val survivors = bufferedDeltas.iterator
-    .filter { case (seq, key, _) => maxEvent(key) == seq }
-    .map { case (_, _, row) => row }
+    .filter { case (seq, key, _, _) => maxEvent(key) == seq }
 
   private val basePartsIt = part.base.iterator
   private var baseReader: PartitionReader[InternalRow] = _
@@ -382,6 +414,7 @@ private[graft] class MorPartitionReader(part: MorInputPartition,
           val (seq, suffix, p) = basePartsIt.next()
           baseSeq = seq
           baseSuffix = suffix
+          suffixIs(suffix)
           baseReader = baseF.createReader(p)
         }
       } else if (baseReader.next()) {
@@ -391,7 +424,7 @@ private[graft] class MorPartitionReader(part: MorInputPartition,
         // version with a base commit)
         if (!isDead(baseSuffix, row) &&
             maxEvent.getOrElse(keyOfFull(row), Long.MinValue) < baseSeq) {
-          currentRow = toRequired(row)
+          currentRow = toRequired(joined(row, suffixRow))
           return true
         }
       } else {
@@ -399,7 +432,9 @@ private[graft] class MorPartitionReader(part: MorInputPartition,
       }
     }
     if (survivors.hasNext) {
-      currentRow = toRequired(survivors.next()); true
+      val (_, _, suffix, row) = survivors.next()
+      suffixIs(suffix)
+      currentRow = toRequired(joined(row, suffixRow)); true
     } else false
   }
 
@@ -410,9 +445,10 @@ private[graft] class MorPartitionReader(part: MorInputPartition,
 }
 
 /** Resolution-aware DSv2 scan for snapshots whose ONLY deltas are
-  * positional (deletion-vector) — the one `kind = "pos"` replay of the
+  * positional (deletion-vector) — the `kind = "pos"` replay of the
   * format, for SQL readers and [[SnapshotTable.resolvedRead]] alike,
-  * and the source of the row-identity columns: a row lives
+  * and the source of the row-identity columns when no event deltas are
+  * pending ([[SnapshotMorScan]] serves them over events): a row lives
   * unless some retained pos delta recorded its physical
   * `(file-suffix, row_index)`. Keyless tables always land here; KEYED
   * tables land here when no event deltas are pending (the common
@@ -458,14 +494,10 @@ private[graft] class SnapshotPosScan(snap: SnapshotTable.Snapshot,
     * positional rowId to ([[SnapshotDeltaRowLevelOperation]]), and a
     * user-queryable provenance column besides. Identity values come
     * from the reader itself (split suffix + parquet row index), so
-    * data files never store them. */
-  private val IdentityNames: Set[String] =
-    Set(SnapshotTable.PosFileCol, SnapshotTable.PosPosCol)
-
-  /** Data columns the parquet readers must produce (identity columns
-    * are reader-synthesized). */
+    * data files never store them. Data columns the parquet readers
+    * must produce: */
   private val dataRequired: StructType = StructType(
-    required.fields.filterNot(f => IdentityNames(f.name)))
+    required.fields.filterNot(f => SnapshotTable.IdentityCols(f.name)))
 
   /** Base read schema: the data columns plus the parquet readers'
     * row-index generated column. */
@@ -484,13 +516,6 @@ private[graft] class SnapshotPosScan(snap: SnapshotTable.Snapshot,
     withIdx.fields.map(_.dataType) :+
       org.apache.spark.sql.types.StringType
 
-  /** Filters referencing identity columns can't reach the parquet
-    * plane (files don't store them); they stay residual above the scan
-    * (this connector never claims pushed filters as non-residual). */
-  private val pushableFilters: Seq[Expression] =
-    catalystFilters.filterNot(_.references.exists(
-      a => IdentityNames(a.name)))
-
   /** Physical names with the manifest's existence defaults — the only
     * default metadata allowed to reach the parquet plane: pre-add
     * base files fill the frozen ADD COLUMN value per footer truth
@@ -498,7 +523,7 @@ private[graft] class SnapshotPosScan(snap: SnapshotTable.Snapshot,
   private def metaFor(st: StructType): StructType =
     SnapshotTable.readSchemaMetaPhys(snap, st)
 
-  private val physPushable = SnapshotTable.physFilters(snap, pushableFilters)
+  private val physFilters = SnapshotTable.physFilters(snap, catalystFilters)
 
   override def readSchema(): StructType = required
   override def description(): String =
@@ -518,7 +543,7 @@ private[graft] class SnapshotPosScan(snap: SnapshotTable.Snapshot,
     val spark = SparkSession.active
     val baseR = SnapshotTable.planRole(baseEntries.map(_._2), snap.dirFiles,
       metaFor(GraftParquetBridge.withRowIndex(tableSchema)), metaFor(withIdx),
-      physPushable)
+      physFilters)
     val perFile = baseR.splits
     val tombR =
       if (perFile.isEmpty) SnapshotTable.PlannedRole.empty
@@ -545,13 +570,9 @@ private[graft] class SnapshotPosScan(snap: SnapshotTable.Snapshot,
     * commits by entry-diff; tombstone commits add no entries, so they
     * fail the non-append gate (or skip under `ignoreChanges`). */
   override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
-    require(dataRequired.length == required.length,
-      "row-identity metadata columns are a batch-read surface; " +
-        "streaming reads cannot synthesize them")
+      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     SnapshotMicroBatchStream.of(snap, root, tableSchema, required,
-      physPushable, ignoreChanges, streamOpts)
-  }
+      physFilters, ignoreChanges, streamOpts)
 }
 
 /** One group of base-file splits (each tagged with its file's stable

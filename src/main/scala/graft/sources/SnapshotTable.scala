@@ -110,6 +110,37 @@ object SnapshotTable {
   final case class DeltaEntry(bucket: Int, seq: Long, kind: String,
       dir: String)
 
+  /** What a commit does to the table's rows, by its `op` — the one
+    * classification the readers that tail commits (the snapshot stream
+    * and the change feed, batch and stream) go by. */
+  private[sources] sealed trait CommitKind
+  private[sources] object CommitKind {
+    /** `create`, `clone`, `append`: the fresh dirs hold new rows and
+      * nothing else. */
+    case object Inserts extends CommitKind
+    /** The same rows as the predecessor: content-neutral rewrites
+      * (`compact`, `zorder`, `rescale`) and pure-metadata commits. */
+    case object NoDataChange extends CommitKind
+    /** `upsert`, `delete`, `delete-pos`: changes existing rows, and
+      * records the change in the commit's `_cdc` dir when the table
+      * keeps a change feed. */
+    case object ChangeFile extends CommitKind
+    /** Every other op changes existing rows with no record of the
+      * change (overwrite, restore, row-level rewrites, merge-on-read
+      * event layers). */
+    case object Rewrite extends CommitKind
+  }
+
+  private[sources] def commitKind(op: String): CommitKind = op match {
+    case "create" | "clone" | "append" => CommitKind.Inserts
+    case "compact" | "zorder" | "rescale" | "widen-column" |
+         "rename-column" | "drop-column" | "add-column" |
+         "set-constraint" | "drop-constraint" | "repartition-spec" |
+         "set-default" | "set-prop" => CommitKind.NoDataChange
+    case "upsert" | "delete" | "delete-pos" => CommitKind.ChangeFile
+    case _ => CommitKind.Rewrite
+  }
+
   /** One published version: `entries` maps bucket id → data dirs
     * (absolute, spelled from the table root as the reader gave it;
     * [[SnapshotManifest]] records them relative to it), in commit
@@ -698,6 +729,9 @@ object SnapshotTable {
   private[sources] val PartPrefix = "_pt"
   private[sources] val PosFileCol = "_sdv_file"
   private[sources] val PosPosCol = "_sdv_pos"
+  /** The row-identity columns the replaying scans synthesize (split
+    * suffix, parquet row index); data files never store them. */
+  private[sources] val IdentityCols = Set(PosFileCol, PosPosCol)
   private[sources] val PartNullDir = "__HIVE_DEFAULT_PARTITION__"
 
   // ---- identity/date partition transforms ----
@@ -1373,16 +1407,20 @@ object SnapshotTable {
 
   /** Pushed predicates over `snap`'s PHYSICAL column names (column
     * mapping: files store physical names) — the filters all three scan
-    * planes hand the delegated parquet layer. */
+    * planes hand the delegated parquet layer. Filters on the
+    * row-identity columns stay residual: files never store them. */
   private[sources] def physFilters(snap: Snapshot,
       es: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : Seq[org.apache.spark.sql.catalyst.expressions.Expression] =
-    if (snap.colMap.isEmpty) es
-    else es.map(_.transform {
+      : Seq[org.apache.spark.sql.catalyst.expressions.Expression] = {
+    val onFiles =
+      es.filterNot(_.references.exists(a => IdentityCols(a.name)))
+    if (snap.colMap.isEmpty) onFiles
+    else onFiles.map(_.transform {
       case a: org.apache.spark.sql.catalyst.expressions.AttributeReference
           if snap.colMap.contains(a.name) =>
         a.withName(snap.colMap(a.name))
     })
+  }
 
   /** The logical schema `st` in PHYSICAL names ([[Snapshot.physicalSchema]])
     * with the snapshot's existence defaults attached ([[readSchemaMeta]]):
@@ -1844,17 +1882,14 @@ object SnapshotTable {
     }
   }
 
-  /** Stable file identity for positional tombstones: the path suffix
-    * from the commit-dir segment on, so scheme qualification
-    * (`file:///` vs bare) of `_metadata.file_path` can never split the
-    * identity of one physical file. */
-  private val PosSuffix = "(c\\d+-[^/]+/.*)$"
-  private def posFileOf: org.apache.spark.sql.Column =
-    regexp_extract(col("_metadata.file_path"), PosSuffix, 1)
-  private val PosSuffixRe = java.util.regex.Pattern.compile(PosSuffix)
+  private val PosSuffixRe = java.util.regex.Pattern.compile(
+    "(c\\d+-[^/]+/.*)$")
 
-  /** [[posFileOf]]'s driver twin: the identity a positional tombstone
-    * records for the file at `path`. */
+  /** Stable file identity for positional tombstones — the one a
+    * tombstone records for the file at `path` and the scans stamp
+    * `_sdv_file` with: the path suffix from the commit-dir segment on,
+    * so scheme qualification (`file:///` vs bare) can never split the
+    * identity of one physical file. */
   private[sources] def suffixOf(path: String): String = {
     val m = PosSuffixRe.matcher(path)
     require(m.find(), s"cannot derive a commit-relative suffix from $path")
@@ -1862,31 +1897,11 @@ object SnapshotTable {
   }
 
   /** Positional tombstone columns: `(file suffix, row index)`. Writers
-    * store just this pair (the keyed deleteWhere layer adds the key
+    * store this pair (a keyed table's deleteWhere layer adds the key
     * columns for routing); readers project just the pair. */
   private[sources] val posTombSchema: StructType = new StructType()
     .add(PosFileCol, org.apache.spark.sql.types.StringType)
     .add(PosPosCol, org.apache.spark.sql.types.LongType)
-
-  /** [[readEntries]] plus the row's physical position identity
-    * (`_sdv_file`, `_sdv_pos` from the parquet reader's file metadata —
-    * exact under splits, filters, and row-group skipping). */
-  private def readEntriesWithPos(spark: SparkSession, schemaDdl: String,
-      colMap: Map[String, String], dirs: Seq[String],
-      exists: Map[String, String] = Map.empty,
-      files: Map[String, Seq[(String, Long)]] = Map.empty): DataFrame = {
-    val logical = StructType.fromDDL(schemaDdl)
-    val out = StructType(logical.fields ++ posTombSchema.fields)
-    if (dirs.isEmpty) return emptyDf(spark, out)
-    val phys = StructType(logical.fields.map(f =>
-      f.copy(name = colMap.getOrElse(f.name, f.name))))
-    val physExists = exists.map { case (c, d) => colMap.getOrElse(c, c) -> d }
-    parquetDirs(spark, readSchemaMeta(phys, physExists), dirs, files)
-      .select(logical.fields.map(f =>
-        col(colMap.getOrElse(f.name, f.name)).as(f.name)).toIndexedSeq ++
-        Seq(posFileOf.as(PosFileCol),
-          col("_metadata.row_index").as(PosPosCol)): _*)
-  }
 
   /** `snap` through the snapshot connector, as SQL readers see it: one
     * `DataSourceV2Relation` over a [[SnapshotV2Table]] pinned to `snap`.
@@ -1899,8 +1914,9 @@ object SnapshotTable {
       org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
         .create(new SnapshotV2Table("", snap), None, None))
 
-  /** Resolved content of a keyless snapshot WITH the position identity
-    * columns that [[SnapshotPosScan]] synthesizes — what [[deleteWhere]]
+  /** Resolved content of a snapshot WITH the row-identity columns the
+    * connector scans synthesize ([[SnapshotPosScan]], or
+    * [[SnapshotMorScan]] under key events) — what [[deleteWhere]]
     * matches new tombstones against, so re-deleting an already-deleted
     * position is impossible by construction. */
   private def resolvedReadWithPos(spark: SparkSession,
@@ -2967,11 +2983,6 @@ object SnapshotTable {
       throw new ConcurrentCommitException(
         s"row-level $op read version ${base.version} but " +
           s"${cur.version} is now current at $root; retry the statement")
-    // the operation scan admits only positional pending deltas (its
-    // identity gate); an event layer here means the guard was bypassed
-    require(base.deltas.forall(_.kind == "pos"),
-      s"write-delta commit over event delta kinds " +
-        s"${base.deltas.map(_.kind).distinct}")
     if (dataDirs.isEmpty && posDirs.isEmpty) return cur.version
     val v = base.version + 1
     val dataF = dirFileLists(fsys, dataDirs)
@@ -3640,17 +3651,19 @@ object SnapshotTable {
     *     pending merge-on-read deltas) it degrades to the full rewrite.
     *   - POSITIONAL MERGE-ON-READ (`mergeOnRead = true` — the
     *     deletion-vector shape, key-agnostic like Delta/Iceberg DVs):
-    *     the commit writes ONLY the doomed rows' physical positions
-    *     (`(file-suffix, row_index)` pairs from the parquet reader's
-    *     file metadata) as a `pos` delta layer; readers drop the
+    *     the live rows are read through the connector with their
+    *     row identity (`_sdv_file`, `_sdv_pos`: file suffix and parquet
+    *     row index, [[resolvedReadWithPos]]) — the one merge-on-read
+    *     replay, so pending key events are resolved there — and the
+    *     commit writes ONLY the matched rows' positions as a `pos` delta
+    *     layer, keyed tables' tombstones carrying the key columns so
+    *     they route to the matched keys' buckets. Readers drop the
     *     recorded positions as they stream the data files
-    *     ([[SnapshotPosScan]]) until [[compact]] folds the layer in.
-    *     O(matched) data written, zero existing bytes rewritten.
-    *     Keyless tables tombstone exactly the matched positions; KEYED
-    *     tables additionally tombstone the superseded versions of each
-    *     matched key ([[deleteWherePosKeyed]]) so event replay can
-    *     never resurrect them — and their reads then pay the cheap
-    *     positional filter instead of the keyed event replay.
+    *     ([[SnapshotPosScan]], [[SnapshotMorScan]]) until [[compact]]
+    *     folds the layer in; a tombstoned delta row keeps shadowing
+    *     its key's older versions. O(matched) data written, zero
+    *     existing bytes rewritten; zero matches commit nothing and
+    *     return the current version.
     *
     * Change feed: the pinned copy-on-write commit records its deleted
     * rows as commit-time change data (reading only the dropped/boundary
@@ -3661,7 +3674,7 @@ object SnapshotTable {
     * publishes FAIL-FAST (an overwrite-shaped commit has no safe
     * rebase) — `retries` is refused there rather than silently
     * ignored; merge-on-read honors it (positions pin this snapshot's
-    * files; the hit-list guard covers the keyless single bucket). */
+    * files; the hit-list guard pins the tombstones' buckets). */
   def deleteWhere(spark: SparkSession, root: String,
       condition: org.apache.spark.sql.Column,
       mergeOnRead: Boolean = false,
@@ -3675,18 +3688,20 @@ object SnapshotTable {
           "meaningful with mergeOnRead = true")
       return deleteWhereCow(spark, root, cur, condition, branch)
     }
-    if (cur.keys.nonEmpty)
-      return deleteWherePosKeyed(spark, root, cur, condition, retries,
-        branch)
-    val (fsys, rootP) = fs(spark, root)
-    val v = cur.version + 1
-    val uuid = newUuid()
+    // `condition` may be nondeterministic: pin the matched rows once,
+    // before the tombstones and the change rows read them
     val matched = Materialize.Local(
       resolvedReadWithPos(spark, cur)
         .filter(coalesce(condition, lit(false))))
-    val tomb = matched.select(col(PosFileCol), col(PosPosCol))
-    val cd = writeCommitData(tomb, rootP, v, Seq.empty, cur.buckets,
-      uuid, fsys)
+    if (matched.isEmpty) return cur.version
+    val (fsys, rootP) = fs(spark, root)
+    val v = cur.version + 1
+    val uuid = newUuid()
+    // key columns ride in the tombstone files solely to bucket-route
+    // them ([[writeCommitData]]'s hash); readers project (file, pos)
+    val cd = writeCommitData(
+      matched.select((cur.keys :+ PosFileCol :+ PosPosCol).map(col): _*),
+      rootP, v, cur.keys, cur.buckets, uuid, fsys)
     val cdcDir =
       if (!cur.changeFeed) None
       else Some(writeChangeData(
@@ -3697,120 +3712,7 @@ object SnapshotTable {
     commitRebasing(spark, root, fsys, rootP, cur,
       Pending("delete-pos", cur.schemaDdl, uuid, v, cd.entries, cd.stats,
         cd.rows, cd.bytes ++ cdcF.bytes,
-        hit = Some(Set(0)), txn = None,
-        cdc = cdcDir, files = cd.files ++ cdcF.files,
-        layoutBuckets = cur.buckets), retries, branch)
-  }
-
-  /** Positional (deletion-vector) predicate DELETE on a KEYED table —
-    * the key-agnostic Delta/Iceberg DV shape, so a keyed table's
-    * predicate delete is O(matched) written bytes and its subsequent
-    * reads pay the positional filter instead of the keyed event replay.
-    *
-    * The tombstone set is exactly the physical rows a copy-on-write
-    * `overwrite(resolvedRead.filter(!cond))` would drop:
-    *   - every LIVE row matching `condition` (plain base rows and
-    *     rows-delta winners alike), by its own `(file, pos)`;
-    *   - every SHADOWED physical row of a matched key (blind-append
-    *     base copies and superseded delta versions): the winner's
-    *     shadowing event dies with the winner's physical row, and an
-    *     un-tombstoned superseded version would resurrect through
-    *     replay. Keys whose live rows are plain base rows have no
-    *     shadowed versions, so matching one blind-append copy of a key
-    *     never touches its other (independent, live) copies.
-    * Keyed tombstone EVENT dirs (`kind = "tomb"`) hold no data rows and
-    * are never position-tombstoned; their events keep shadowing.
-    *
-    * It keeps its own join-based replay rather than reading through
-    * [[resolvedRead]]: it needs the SHADOWED physical rows with their
-    * positions, and the connector scans emit only the survivors.
-    *
-    * Cost shape at 100 TB: one resolved scan of the table (any
-    * predicate delete pays that), with the event table and the matched
-    * key set on the broadcast side — the base is never shuffled by
-    * key. The commit's pos dirs are bucket-partitioned by the matched
-    * keys' hash, so targeted compaction folds them per bucket and the
-    * rebase guard pins only the hit buckets. Zero matches commit
-    * nothing and return the current version. */
-  private def deleteWherePosKeyed(spark: SparkSession, root: String,
-      cur: Snapshot, condition: org.apache.spark.sql.Column,
-      retries: Int, branch: Option[String]): Long = {
-    val (fsys, rootP) = fs(spark, root)
-    val ddl = cur.schemaDdl
-    val keyCols = cur.keys.map(col)
-    val posDs = cur.deltas.filter(_.kind == "pos")
-    val SeqCol = "_mor_seq"
-    val MaxCol = "_mor_max"
-    // physical rows (already-tombstoned positions excluded) with their
-    // position identity and commit version; seq parses from the
-    // projected file suffix (input_file_name() is unsafe post-join)
-    def physRead(dirs: Seq[String], seq: Option[Long]): DataFrame = {
-      val df = readEntriesWithPos(spark, ddl, cur.colMap, dirs,
-        cur.existsDefaults, cur.dirFiles)
-        .withColumn(SeqCol, seq.fold(
-          regexp_extract(col(PosFileCol), "^c(\\d+)-", 1)
-            .cast("long"))(lit(_)))
-      if (posDs.isEmpty) df
-      else df.join(parquetDirs(spark, posTombSchema, posDs.map(_.dir),
-          cur.dirFiles),
-        Seq(PosFileCol, PosPosCol), "left_anti")
-    }
-    val basePhys = physRead(cur.entries.map(_._2).distinct, None)
-    val rowDs = cur.deltas.filter(_.kind == "rows")
-    val rowPhys = rowDs.groupBy(_.seq).toSeq.sortBy(_._1).map {
-      case (s, es) => physRead(es.map(_.dir), Some(s))
-    }
-    val keySchema = StructType(StructType.fromDDL(ddl).fields
-      .filter(f => cur.keys.contains(f.name)))
-    val tombEvents = cur.deltas.filter(_.kind == "tomb")
-      .groupBy(_.seq).toSeq.sortBy(_._1).map { case (s, es) =>
-        parquetDirs(spark, keySchema, es.map(_.dir), cur.dirFiles)
-          .withColumn(SeqCol, lit(s))
-      }
-    val eventFrames = rowPhys.map(
-      _.select(keyCols :+ col(SeqCol): _*)) ++ tombEvents
-    // per-key newest event (delta keys only — small, broadcast side)
-    val maxEvents = eventFrames.reduceOption(_.unionByName(_))
-      .map(_.groupBy(keyCols: _*).agg(max(col(SeqCol)).as(MaxCol)))
-    val allPhys = rowPhys.foldLeft(basePhys)(_.unionByName(_))
-    val (live, shadowed) = maxEvents match {
-      case None => (basePhys, emptyDf(spark, basePhys.schema))
-      case Some(me) =>
-        val joined = allPhys.join(broadcast(me), cur.keys, "left")
-        (joined.filter(col(MaxCol).isNull || col(MaxCol) <= col(SeqCol))
-           .drop(MaxCol),
-         joined.filter(col(MaxCol) > col(SeqCol)).drop(MaxCol))
-    }
-    // `condition` may be nondeterministic: pin the matched rows once,
-    // before the key set, the tombstones, and the change rows read them
-    val matched = Materialize.Local(
-      live.filter(coalesce(condition, lit(false))))
-    if (matched.isEmpty) return cur.version
-    val matchedKeys = matched.select(keyCols: _*).distinct()
-    val posCols = Seq(col(PosFileCol), col(PosPosCol))
-    val tomb = matched.select(keyCols ++ posCols: _*)
-      .unionByName(shadowed
-        .join(broadcast(matchedKeys), cur.keys, "left_semi")
-        .select(keyCols ++ posCols: _*))
-    val v = cur.version + 1
-    val uuid = newUuid()
-    // key columns ride in the tombstone files solely to bucket-route
-    // them ([[writeCommitData]]'s hash); readers project (file, pos)
-    val cd = writeCommitData(tomb, rootP, v, cur.keys, cur.buckets,
-      uuid, fsys)
-    val cdcDir =
-      if (!cur.changeFeed) None
-      else Some(writeChangeData(
-        matched.select(StructType.fromDDL(ddl).fieldNames
-            .map(col).toIndexedSeq: _*)
-          .withColumn(ChangeTypeCol, lit("delete")),
-        rootP, v, uuid, cur.colMap))
-    val hit = cd.entries.map(_._1).toSet
-    val cdcF = cdcFiles(fsys, cdcDir)
-    commitRebasing(spark, root, fsys, rootP, cur,
-      Pending("delete-pos", ddl, uuid, v, cd.entries, cd.stats, cd.rows,
-        cd.bytes ++ cdcF.bytes,
-        hit = Some(hit), txn = None,
+        hit = Some(cd.entries.map(_._1).toSet), txn = None,
         cdc = cdcDir, files = cd.files ++ cdcF.files,
         layoutBuckets = cur.buckets), retries, branch)
   }

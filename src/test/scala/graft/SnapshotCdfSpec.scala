@@ -165,6 +165,45 @@ class SnapshotCdfSpec extends AnyFunSuite {
         del(3, Seq(9L), "U") ++ ins(4, Seq(5L), "b"))
   }
 
+  test("a table-property commit changes no data: the snapshot stream, " +
+      "the change-feed stream and the batch change feed serve the " +
+      "appends around it once") {
+    val root = freshRoot("setprop")
+    SnapshotTable.create(rows(0L to 1L, "a"), root, Seq("id"), 2,
+      changeFeed = true) // v1
+    val base = freshDir("setprop_io")
+    def drain(name: String, cdf: Boolean): Unit = {
+      val out = new java.io.File(base, name).getAbsolutePath
+      spark.readStream.format("graft-snapshot")
+        .option("readChangeFeed", cdf.toString).load(root)
+        .writeStream
+        .foreachBatch { (b: DataFrame, _: Long) =>
+          b.write.mode("append").parquet(out)
+        }
+        .option("checkpointLocation", s"$out-ckpt")
+        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    }
+    // both streams start at v1, so their next runs tail the commits
+    drain("snap", cdf = false)
+    drain("feed", cdf = true)
+    SnapshotTable.append(rows(Seq(2L), "b"), root) // v2
+    SnapshotTable.setTableProperty(spark, root, "owner", Some("etl")) // v3
+    SnapshotTable.append(rows(Seq(3L), "c"), root) // v4
+    drain("snap", cdf = false)
+    drain("feed", cdf = true)
+    assert(spark.read.parquet(new java.io.File(base, "snap").getAbsolutePath)
+      .select("id").as[Long].collect().sorted.toSeq === Seq(0L, 1L, 2L, 3L))
+    val appends = ins(2, Seq(2L), "b") ++ ins(4, Seq(3L), "c")
+    val fed = spark.read.parquet(new java.io.File(base, "feed").getAbsolutePath)
+    assert(fed.count() === 2L)
+    assert(changes(fed) === appends)
+    val batch = spark.read.format("graft-snapshot")
+      .option("readChangeFeed", "true").option("startingVersion", 2)
+      .load(root)
+    assert(batch.count() === 2L)
+    assert(changes(batch) === appends)
+  }
+
   test("the feed fails loudly on commits it cannot serve: overwrite, " +
       "and upsert on a table without changeFeed") {
     val root = freshRoot("loud")

@@ -56,7 +56,7 @@ class SnapshotDeltaRowLevelSpec extends AnyFunSuite {
   }
 
   test("identity metadata columns: SELECTable provenance, unique per " +
-      "row, stable under stats pruning, refused over event deltas") {
+      "row, stable under stats pruning, served over event deltas") {
     val (cat, wh) = freshCat()
     spark.sql(s"CREATE TABLE $cat.m (id BIGINT, v BIGINT) " +
       "PARTITIONED BY (bucket(2, id))")
@@ -70,13 +70,18 @@ class SnapshotDeltaRowLevelSpec extends AnyFunSuite {
     // filters on data columns still prune/evaluate around identity
     assert(spark.sql(s"SELECT _sdv_pos FROM $cat.m WHERE id = 7")
       .collect().length === 1)
-    // identity over a key-EVENT delta layer refuses (positions are
-    // undefined under replay)
+    // identity over a key-EVENT delta layer (v3): every live row once,
+    // each at its own position — the upserted key's at the winner's
     SnapshotTable.upsert(Seq((3L, 999L)).toDF("id", "v"), s"$wh/m",
       mergeOnRead = true)
-    val e = intercept[Exception](
-      spark.sql(s"SELECT _sdv_file FROM $cat.m").collect())
-    assert(e.getMessage.contains("compact"), e.getMessage)
+    val ev = spark.sql(
+      s"SELECT id, v, _sdv_file, _sdv_pos FROM $cat.m").collect()
+    assert(ev.map(_.getLong(0)).sorted.toSeq === (0L until 20L))
+    assert(ev.map(r => (r.getString(2), r.getLong(3)))
+      .distinct.length === 20)
+    val win = ev.filter(_.getLong(0) == 3L)
+    assert(win.map(_.getLong(1)).toSeq === Seq(999L))
+    assert(win.forall(_.getString(2).startsWith("c3-")))
   }
 
   test("MOR UPDATE/DELETE/MERGE: delta commits, O(matched) writes, " +
@@ -197,8 +202,8 @@ class SnapshotDeltaRowLevelSpec extends AnyFunSuite {
       .as[Long].head() === 0L)
   }
 
-  test("MOR DML refuses pending EVENT deltas loudly, composes over " +
-      "its own pos layers, and vacuum keeps live staged dirs") {
+  test("MOR DML composes over pending EVENT deltas and over its own " +
+      "pos layers, and vacuum keeps live staged dirs") {
     val (cat, wh) = freshCat()
     spark.sql(s"CREATE TABLE $cat.e (id BIGINT, v BIGINT) " +
       "PARTITIONED BY (bucket(2, id)) " +
@@ -216,12 +221,24 @@ class SnapshotDeltaRowLevelSpec extends AnyFunSuite {
     SnapshotTable.vacuum(spark, s"$wh/e", keepVersions = 1)
     assert(spark.sql(s"SELECT v FROM $cat.e WHERE id = 3")
       .as[Long].head() === 1103L)
-    // an event layer (API upsert-mor) blocks MOR DML until compaction
+    // over an event layer (API upsert-mor) MOR DML gives the table a
+    // copy-on-write twin of the same history has
     SnapshotTable.upsert(Seq((2L, 5L)).toDF("id", "v"), s"$wh/e",
       mergeOnRead = true)
-    val err = intercept[Exception](
-      spark.sql(s"UPDATE $cat.e SET v = 0 WHERE id = 9"))
-    assert(err.getMessage.contains("compact"), err.getMessage)
+    spark.sql(s"UPDATE $cat.e SET v = 0 WHERE id = 9")
+    assert(head(s"$wh/e").op === "update-delta")
+    assert(head(s"$wh/e").deltas.exists(_.kind == "rows"))
+    spark.sql(s"CREATE TABLE $cat.c (id BIGINT, v BIGINT) " +
+      "PARTITIONED BY (bucket(2, id))")
+    spark.sql(s"INSERT INTO $cat.c SELECT id, id FROM range(30)")
+    spark.sql(s"UPDATE $cat.c SET v = v + 100 WHERE id < 10")
+    spark.sql(s"UPDATE $cat.c SET v = v + 1000 WHERE id < 5")
+    SnapshotTable.upsert(Seq((2L, 5L)).toDF("id", "v"), s"$wh/c")
+    spark.sql(s"UPDATE $cat.c SET v = 0 WHERE id = 9")
+    def content(t: String): Seq[(Long, Long)] = spark.sql(
+      s"SELECT id, v FROM $cat.$t").as[(Long, Long)].collect().toSeq.sorted
+    assert(content("e") === content("c"))
+    assert(content("e").filter(_._1 == 2L) === Seq((2L, 5L)))
     SnapshotTable.compact(spark, s"$wh/e")
     spark.sql(s"UPDATE $cat.e SET v = 0 WHERE id = 9")
     assert(spark.sql(s"SELECT v FROM $cat.e WHERE id = 9")

@@ -14,9 +14,10 @@ import graft.sources.SnapshotTable
   * keys, keyed positional `deleteWhere`, compaction and bucket rescales
   * that leave mixed layouts) run against a keyed table and against an
   * in-memory multiset per version. After every step the latest read,
-  * a keyed lookup with absent probe keys, the `graft-snapshot` scan,
-  * time travel to every version and the change feed of the step must
-  * all equal the model. */
+  * a keyed lookup with absent probe keys, the `graft-snapshot` scan
+  * (plain, and with the row-identity columns, whose `(file, pos)`
+  * pairs must be distinct), time travel to every version and the
+  * change feed of the step must all equal the model. */
 class SnapshotMorModelSpec extends AnyFunSuite {
   import SnapshotMorModelSpec._
   private lazy val spark = TestSpark.spark
@@ -58,8 +59,10 @@ class SnapshotMorModelSpec extends AnyFunSuite {
     rs.map { case (k, t, v) => (k, t.orNull, v) }.toDF("id", "tag", "v")
 
   private def rowsOf(d: DataFrame): Seq[R] =
-    d.select("id", "tag", "v").collect().toSeq
-      .map(r => (r.getLong(0), Option(r.getString(1)), r.getLong(2)))
+    rowsOf(d.select("id", "tag", "v").collect().toSeq)
+
+  private def rowsOf(rs: Seq[org.apache.spark.sql.Row]): Seq[R] =
+    rs.map(r => (r.getLong(0), Option(r.getString(1)), r.getLong(2)))
 
   private def bag[T](xs: Seq[T]): Map[T, Int] =
     xs.groupBy(identity).map { case (k, v) => k -> v.size }
@@ -122,6 +125,12 @@ class SnapshotMorModelSpec extends AnyFunSuite {
       root)), model.filter(r => probe.contains(r._1)))
     same("graft-snapshot scan",
       rowsOf(spark.read.format("graft-snapshot").load(root)), model)
+    // the row-identity read: the same rows, each at its own position
+    val ident = spark.read.format("graft-snapshot").load(root)
+      .select("id", "tag", "v", "_sdv_file", "_sdv_pos").collect().toSeq
+    same("graft-snapshot identity scan", rowsOf(ident), model)
+    assert(ident.map(r => (r.getString(3), r.getLong(4))).distinct.size ===
+      ident.size, s"distinct (file, pos) pairs after $step")
     // every version in one job: each read tagged with its version
     val tt = (1L to v).map(u => SnapshotTable.read(spark, root, Some(u))
         .select(lit(u).as("_u"), col("id"), col("tag"), col("v")))

@@ -605,6 +605,34 @@ class SnapshotMorSpec extends AnyFunSuite {
       .filter(_._1 == 6L) === Set((6L, "WIN", 600L)))
   }
 
+  test("keyed positional delete over a pending merge-on-read winner " +
+      "tombstones exactly the matched rows and reads as its copy-on-" +
+      "write twin") {
+    def build(mor: Boolean): String = {
+      val root = freshRoot(if (mor) "kposwm" else "kposwc")
+      SnapshotTable.create(rows(0 until 20, "a"), root, Seq("id"), 4)
+      // delta winners for 6 and 8, each shadowing its base version
+      SnapshotTable.upsert(
+        Seq((6L, "WIN", 600L), (8L, "WIN", 800L)).toDF("id", "tag", "v"),
+        root, mergeOnRead = true)
+      // matches the winner of 6 and the plain base row of 12
+      SnapshotTable.deleteWhere(spark, root,
+        col("v") === 600L || col("id") === 12L, mergeOnRead = mor)
+      root
+    }
+    val mor = build(mor = true)
+    val snap = SnapshotTable.versions(spark, mor).last
+    assert(snap.op === "delete-pos")
+    // one tombstone per matched row: the shadowed base version of 6
+    // stays shadowed by the winner's event, so it needs none
+    assert(snap.deltas.filter(_.kind == "pos")
+      .map(d => snap.dirRows(d.dir)).sum === 2L)
+    val got = asSet(SnapshotTable.read(spark, mor))
+    assert(got === asSet(SnapshotTable.read(spark, build(mor = false))))
+    assert(!got.exists(r => r._1 == 6L || r._1 == 12L))
+    assert(got.filter(_._1 == 8L) === Set((8L, "WIN", 800L)))
+  }
+
   test("the connector serves keyed positional layers: pos-only via the " +
       "positional scan, mixed kinds via the replaying scan, pushdown " +
       "stays exact; compaction folds the layer away") {
