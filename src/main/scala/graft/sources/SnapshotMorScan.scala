@@ -337,17 +337,7 @@ private[graft] class MorPartitionReader(part: MorInputPartition,
   private val keyOfTomb = UnsafeProjection.create(
     keyTypes.indices.map(
       i => BoundReference(i, keyTypes(i), nullable = true): Expression))
-  // output binds over JoinedRow(row, [file suffix])
-  private val toRequired = UnsafeProjection.create(
-    outBinds.toIndexedSeq.map(
-      i => BoundReference(i, rowTypes(i), nullable = true): Expression))
-  private val suffixRow =
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(1)
-  private val joined =
-    new org.apache.spark.sql.catalyst.expressions.JoinedRow()
-
-  private def suffixIs(suffix: String): Unit = suffixRow.update(0,
-    org.apache.spark.unsafe.types.UTF8String.fromString(suffix))
+  private val toRequired = new StampingProjection(rowTypes, outBinds)
 
   /** Newest event seq per key — the whole delta side of ONE bucket. */
   private val maxEvent = new mutable.HashMap[UnsafeRow, Long]
@@ -414,7 +404,7 @@ private[graft] class MorPartitionReader(part: MorInputPartition,
           val (seq, suffix, p) = basePartsIt.next()
           baseSeq = seq
           baseSuffix = suffix
-          suffixIs(suffix)
+          toRequired.fileIs(suffix)
           baseReader = baseF.createReader(p)
         }
       } else if (baseReader.next()) {
@@ -424,7 +414,7 @@ private[graft] class MorPartitionReader(part: MorInputPartition,
         // version with a base commit)
         if (!isDead(baseSuffix, row) &&
             maxEvent.getOrElse(keyOfFull(row), Long.MinValue) < baseSeq) {
-          currentRow = toRequired(joined(row, suffixRow))
+          currentRow = toRequired(row)
           return true
         }
       } else {
@@ -433,8 +423,8 @@ private[graft] class MorPartitionReader(part: MorInputPartition,
     }
     if (survivors.hasNext) {
       val (_, _, suffix, row) = survivors.next()
-      suffixIs(suffix)
-      currentRow = toRequired(joined(row, suffixRow)); true
+      toRequired.fileIs(suffix)
+      currentRow = toRequired(row); true
     } else false
   }
 
@@ -605,15 +595,9 @@ private[graft] class PosPartitionReader(part: PosInputPartition,
     joinedTypes: Array[org.apache.spark.sql.types.DataType],
     outBinds: Array[Int]) extends PartitionReader[InternalRow] {
 
-  private val toRequired = UnsafeProjection.create(
-    outBinds.toIndexedSeq.map(
-      i => BoundReference(i, joinedTypes(i), nullable = true): Expression))
+  private val toRequired = new StampingProjection(joinedTypes, outBinds)
   // joined layout: [data..., rowIdx, suffix]
   private val idxPos = joinedTypes.length - 2
-  private val suffixRow =
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(1)
-  private val joined =
-    new org.apache.spark.sql.catalyst.expressions.JoinedRow()
 
   private val dead = PosPartitionReader.deadSet(part.tombs, tombF)
 
@@ -628,13 +612,12 @@ private[graft] class PosPartitionReader(part: PosInputPartition,
         if (!basePartsIt.hasNext) return false
         val (suffix, p) = basePartsIt.next()
         deadHere = dead.getOrElse(suffix, null)
-        suffixRow.update(0,
-          org.apache.spark.unsafe.types.UTF8String.fromString(suffix))
+        toRequired.fileIs(suffix)
         baseReader = baseF.createReader(p)
       } else if (baseReader.next()) {
         val row = baseReader.get()
         if (deadHere == null || !deadHere.contains(row.getLong(idxPos))) {
-          currentRow = toRequired(joined.apply(row, suffixRow))
+          currentRow = toRequired(row)
           return true
         }
       } else {
@@ -648,6 +631,25 @@ private[graft] class PosPartitionReader(part: PosInputPartition,
 
   override def close(): Unit =
     if (baseReader != null) { baseReader.close(); baseReader = null }
+}
+
+/** The replaying readers' output projection: binds each required field
+  * over JoinedRow(data row, [file suffix]), so `_sdv_file` reads the
+  * suffix of the file the current row came from. */
+private[graft] final class StampingProjection(
+    types: Array[org.apache.spark.sql.types.DataType], binds: Array[Int]) {
+  private val proj = UnsafeProjection.create(binds.toIndexedSeq.map(
+    i => BoundReference(i, types(i), nullable = true): Expression))
+  private val suffixRow =
+    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(1)
+  private val joined =
+    new org.apache.spark.sql.catalyst.expressions.JoinedRow()
+
+  /** Rows projected from now on came from the file with `suffix`. */
+  def fileIs(suffix: String): Unit = suffixRow.update(0,
+    org.apache.spark.unsafe.types.UTF8String.fromString(suffix))
+
+  def apply(row: InternalRow): UnsafeRow = proj(joined(row, suffixRow))
 }
 
 private[graft] object PosPartitionReader {

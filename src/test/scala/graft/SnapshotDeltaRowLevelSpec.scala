@@ -221,8 +221,8 @@ class SnapshotDeltaRowLevelSpec extends AnyFunSuite {
     SnapshotTable.vacuum(spark, s"$wh/e", keepVersions = 1)
     assert(spark.sql(s"SELECT v FROM $cat.e WHERE id = 3")
       .as[Long].head() === 1103L)
-    // over an event layer (API upsert-mor) MOR DML gives the table a
-    // copy-on-write twin of the same history has
+    // over an event layer (API upsert-mor) MOR DML leaves the table
+    // equal to a copy-on-write twin with the same history
     SnapshotTable.upsert(Seq((2L, 5L)).toDF("id", "v"), s"$wh/e",
       mergeOnRead = true)
     spark.sql(s"UPDATE $cat.e SET v = 0 WHERE id = 9")
